@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.tables.Tables
 
 /** Paired A/B measurement probe — the r15 measurement protocol (r14
   * verdict directive #4) for a ±30 % shared host: time a SUBSET of
@@ -54,8 +55,8 @@ object ABProbe {
         catch { case _: Throwable => () }
       }
     }
-    graft.tables.Tables.names.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+    Tables.names.foreach { t =>
+      try Tables.parquet(spark, s"$sfDir/$t.parquet").count()
       catch { case _: Throwable => () }
     }
 

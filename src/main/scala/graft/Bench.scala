@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.tables.Tables
 
 /** Benchmark main — driver contract: one JSON line with per-query and
   * total wall seconds on SPARK_GRAFT_SF_DIR.
@@ -162,8 +163,8 @@ object Bench {
     }
     // touch the measured dir once so file listing/footers aren't billed
     // to the first measured query
-    graft.tables.Tables.names.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+    Tables.names.foreach { t =>
+      try Tables.parquet(spark, s"$sfDir/$t.parquet").count()
       catch { case _: Throwable => () }
     }
 

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import graft.tables.Tables
 
 /** Stage-accounting probe (r15, r14 verdict directive #3): run one query
   * and decompose its wall into task time vs scheduler/driver idle. For
@@ -57,8 +58,8 @@ object StageProbe {
       try Bench.materialize(SparkEntry.queries(n)(spark, warmDir))
       catch { case _: Throwable => () }
     }
-    graft.tables.Tables.names.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+    Tables.names.foreach { t =>
+      try Tables.parquet(spark, s"$sfDir/$t.parquet").count()
       catch { case _: Throwable => () }
     }
 

@@ -190,7 +190,7 @@ object Analytics {
       sketched(o.filter(col("o_orderdate") < cut)).write.mode("overwrite").parquet(p)
       p
     }
-    val history = spark.read.parquet(statePath)
+    val history = Tables.parquet(spark, statePath)
     val delta = sketched(o.filter(col("o_orderdate") >= cut))
     history.unionAll(delta)
       .groupBy("o_orderpriority")

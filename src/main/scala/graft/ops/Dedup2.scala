@@ -333,8 +333,8 @@ object Dedup2 {
   private[graft] def tombstoneServeFrom(spark: SparkSession, dir: String,
                                         root: String): DataFrame = {
     val gd = ArtifactGen.dir(root, ArtifactGen.current(root))
-    val tomb = spark.read.parquet(s"$gd/tombstones")
-    val surviving = spark.read.parquet(s"$gd/index")
+    val tomb = Tables.parquet(spark, s"$gd/tombstones")
+    val surviving = Tables.parquet(spark, s"$gd/index")
       .join(broadcast(tomb), Seq("doc_id"), "left_anti")
     val sigs = HotBucket.saltByCap(surviving,
       Seq("band", "sig"), col("doc_id"), s"d18.bandSigs:$dir")

@@ -140,7 +140,7 @@ object GraphAnn {
       val edges = buildEdges(spark, dir)
       val path = graft.Scratch.dir("graphann_edges")
       edges.write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
+      Tables.parquet(spark, path)
     }
 
   /** The edge-build plan, pre-persist — split out so Round10Spec can
@@ -671,7 +671,7 @@ object GraphAnn {
         s"graphann.adcbuckets:$dir", adcDegree, adcBuildRounds)
       val path = graft.Scratch.dir("graphann_adc_edges")
       edges.write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
+      Tables.parquet(spark, path)
     }
 
   /** E27's refined build: degree 40 (same 3 NN-descent rounds). The r13
@@ -696,7 +696,7 @@ object GraphAnn {
         s"graphann.refinebuckets:$dir", refineDegree, refineBuildRounds)
       val path = graft.Scratch.dir("graphann_refine_edges")
       edges.write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
+      Tables.parquet(spark, path)
     }
 
   /** E27 — `ann_graph_refine` (r12 verdict directive #4): the recall
@@ -811,7 +811,7 @@ object GraphAnn {
                                   rerankN: Int, statsKey: String): DataFrame = {
       val subs = 8
       val base = Similarity.pqIndexPath(spark, dir)
-      val codes = spark.read.parquet(s"$base/codes")
+      val codes = Tables.parquet(spark, s"$base/codes")
       val dt = Similarity.pqDistTablesFor(spark, dir, subs,
         Similarity.readCodebook(spark, base))
       val probes = probeEntries(spark, dir)
@@ -980,12 +980,12 @@ object GraphAnn {
     graft.QueryCaches.memo(
       s"graphann.delserve:$root:$k:$gen:$tombDigest:${spark.sparkContext.applicationId}") {
       val gd = ArtifactGen.dir(root, gen)
-      val edges = spark.read.parquet(s"$gd/edges")
-      val tomb = spark.read.parquet(s"$gd/tombstones")
+      val edges = Tables.parquet(spark, s"$gd/edges")
+      val tomb = Tables.parquet(spark, s"$gd/tombstones")
       val embs = Tables.embeddings(spark, dir)
       val deleted =
         if (new java.io.File(gd, "deleted").exists)
-          spark.read.parquet(s"$gd/deleted")
+          Tables.parquet(spark, s"$gd/deleted")
         else tomb.limit(0)
       val members = embs.join(broadcast(deleted), Seq("vec_id"), "left_anti")
       val repaired =
@@ -1009,7 +1009,7 @@ object GraphAnn {
       val edges = buildEdgesFrom(base, s"graphann.sbuckets:$dir")
       val path = graft.Scratch.dir("graphann_streambase")
       edges.write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
+      Tables.parquet(spark, path)
     }
 
   /** One micro-batch's insert work: beam THIS batch's arrivals
@@ -1148,7 +1148,7 @@ object GraphAnn {
           deg, rounds)
         val path = graft.Scratch.dir("graphann_layer_edges")
         e.write.mode("overwrite").parquet(path)
-        spark.read.parquet(path)
+        Tables.parquet(spark, path)
       }
       val probes = embs.filter(col("vec_id") % 100 === 0)
       val uEntries = entriesFrom(upper, probes)

@@ -690,7 +690,7 @@ object Similarity {
     */
   private[graft] def readCodebook(spark: SparkSession,
                                   base: String): Array[(Long, Array[Array[Long]])] =
-    spark.read.parquet(s"$base/codebook").collect()
+    Tables.parquet(spark, s"$base/codebook").collect()
       .map(r => (r.getLong(0),
         r.getSeq[scala.collection.Seq[Long]](1).map(_.toArray).toArray))
       .sortBy(_._1)
@@ -698,7 +698,7 @@ object Similarity {
   def annIndexPersist(spark: SparkSession, dir: String, subs: Int = 8,
                       k: Int = 16, topK: Int = 5): DataFrame = {
     val base = pqIndexPath(spark, dir, subs, k)
-    adcSearch(spark.read.parquet(s"$base/codes"),
+    adcSearch(Tables.parquet(spark, s"$base/codes"),
       pqDistTablesFor(spark, dir, subs, readCodebook(spark, base)), subs, topK)
   }
 
@@ -756,8 +756,8 @@ object Similarity {
     val g = ArtifactGen.current(root)
     val gd = ArtifactGen.dir(root, g)
     val codesPath = if (g == 0) s"$base/codes" else s"$gd/codes"
-    val tomb = spark.read.parquet(s"$gd/tombstones")
-    val codes = spark.read.parquet(codesPath)
+    val tomb = Tables.parquet(spark, s"$gd/tombstones")
+    val codes = Tables.parquet(spark, codesPath)
       .join(broadcast(tomb), Seq("vec_id"), "left_anti")
     adcSearch(codes,
       pqDistTablesFor(spark, dir, subs, readCodebook(spark, base)), subs, topK)
@@ -836,7 +836,7 @@ object Similarity {
   def annIndexAppend(spark: SparkSession, dir: String, subs: Int = 8,
                      k: Int = 16, topK: Int = 5): DataFrame = {
     val base = pqAppendIndexPath(spark, dir, subs, k)
-    adcSearch(spark.read.parquet(s"$base/codes"),
+    adcSearch(Tables.parquet(spark, s"$base/codes"),
       pqDistTablesFor(spark, dir, subs, readCodebook(spark, base)), subs, topK)
   }
 
@@ -979,7 +979,7 @@ object Similarity {
       pqOrdsFor(deltaEmbs, subs, cb1)
         .write.mode("append").parquet(s"$root/gen1/codes")
       val (hits, truth) = recallCounts(embs,
-        spark.read.parquet(s"$root/gen1/codes"), cb1, subs, topK = 5)
+        Tables.parquet(spark, s"$root/gen1/codes"), cb1, subs, topK = 5)
       val stale = hits * 100L < refreshThresholdPct * truth
       if (stale) {
         // retrain over base ∪ delta, re-encode once, new generation
@@ -994,7 +994,7 @@ object Similarity {
   def annIndexRefresh(spark: SparkSession, dir: String, subs: Int = 8,
                       k: Int = 16, topK: Int = 5): DataFrame = {
     val gen = pqRefreshIndexPath(spark, dir, subs, k)
-    adcSearch(spark.read.parquet(s"$gen/codes"),
+    adcSearch(Tables.parquet(spark, s"$gen/codes"),
       distTablesOf(Tables.embeddings(spark, dir).filter(col("vec_id") % 100 === 0),
         subs, readCodebook(spark, gen)), subs, topK)
   }

@@ -75,7 +75,7 @@ object Takedown {
       // never off the defining predicate (a real request arrives as keys)
       docs.filter(col("doc_id") % takedownMod === takedownRem)
         .select("doc_id").write.mode("overwrite").parquet(s"$root/requests")
-      val req = spark.read.parquet(s"$root/requests")
+      val req = Tables.parquet(spark, s"$root/requests")
       val reqV = req.select(col("doc_id").as("vec_id"))
 
       // 1. band-signature index (D18's anti-join rule)
@@ -84,7 +84,7 @@ object Takedown {
         .write.mode("overwrite").parquet(s"$root/band_index")
 
       // 2. PQ code table (E21's rule, frozen codebook)
-      spark.read.parquet(s"${Similarity.pqIndexPath(spark, dir)}/codes")
+      Tables.parquet(spark, s"${Similarity.pqIndexPath(spark, dir)}/codes")
         .join(broadcast(reqV), Seq("vec_id"), "left_anti")
         .write.mode("overwrite").parquet(s"$root/pq_codes")
 
@@ -105,7 +105,7 @@ object Takedown {
       val shardPath = s"$root/shard_layout"
       docs.select(graft.sources.SourceQueries.shardRouteCols(8): _*)
         .write.mode("overwrite").partitionBy("shard").parquet(shardPath)
-      val layout = spark.read.parquet(shardPath)
+      val layout = Tables.parquet(spark, shardPath)
       val affected = layout.join(broadcast(req), Seq("doc_id"), "left_semi")
         .select("shard").distinct()
       // bounded collect: ≤ the shard count (8 here; the layout's
@@ -158,22 +158,22 @@ object Takedown {
 
   def takedownCascade(spark: SparkSession, dir: String): DataFrame = {
     val root = cascadeRoot(spark, dir)
-    val req = spark.read.parquet(s"$root/requests")
+    val req = Tables.parquet(spark, s"$root/requests")
 
     val band = auditRow("band_index",
-      spark.read.parquet(s"$root/band_index"), req, "doc_id",
+      Tables.parquet(spark, s"$root/band_index"), req, "doc_id",
       sum(col("doc_id")),
       expr("bit_xor(sig ^ CAST(band AS BIGINT) ^ doc_id)"))
 
     val pq = auditRow("pq_codes",
-      spark.read.parquet(s"$root/pq_codes"), req, "vec_id",
+      Tables.parquet(spark, s"$root/pq_codes"), req, "vec_id",
       sum(col("vec_id")),
       sum(expr("aggregate(zip_with(ords, sequence(1, size(ords)), " +
         "(c, i) -> CAST(c AS BIGINT) * CAST(i AS BIGINT)), " +
         "CAST(0 AS BIGINT), (a, x) -> a + x)")))
 
     // the graph's key lives on BOTH endpoints — flag via two key joins
-    val edges = spark.read.parquet(s"$root/graph_edges")
+    val edges = Tables.parquet(spark, s"$root/graph_edges")
     val flaggedE = edges
       .join(broadcast(req.select(col("doc_id").as("src"),
         lit(1L).as("_ts"))), Seq("src"), "left")
@@ -195,7 +195,7 @@ object Takedown {
       sum(col("shard").cast("long") * 131L + col("n_tokens")))
 
     val packed = auditRow("packed_bins",
-      spark.read.parquet(s"$root/packed_bins"), req, "doc_id",
+      Tables.parquet(spark, s"$root/packed_bins"), req, "doc_id",
       sum(col("doc_id")),
       sum(col("bin") * 131L + col("n_tokens")))
 
@@ -253,8 +253,8 @@ object Takedown {
         .write.mode("overwrite").partitionBy("bin").parquet(s"$root/packed")
       docs.filter(col("doc_id") % takedownMod === takedownRem)
         .select("doc_id").write.mode("overwrite").parquet(s"$root/requests")
-      val req = spark.read.parquet(s"$root/requests")
-      val layout = spark.read.parquet(s"$root/packed")
+      val req = Tables.parquet(spark, s"$root/requests")
+      val layout = Tables.parquet(spark, s"$root/packed")
       // deficits: one semi-join scan of the takedown rows, grouped by
       // bin; the collect is bounded by the DAMAGED bin count
       val dmg = layout.join(broadcast(req), Seq("doc_id"), "left_semi")

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.tables.Tables
 
 /** Generation pointer for tombstoned artifacts — the discipline that
   * lets a vacuum REWRITE an artifact without ever serving a torn state
@@ -252,7 +253,7 @@ private[graft] object PartGen {
       val d = layerDir(root, k)
       val own = partsIn(root, k, partCol)
       if (own.nonEmpty) {
-        val df0 = spark.read.parquet(d)
+        val df0 = Tables.parquet(spark, d)
         val dt = df0.schema(partCol).dataType
         // typed literals keep the NOT IN a PartitionFilter
         val typed: String => Any = dt match {
@@ -355,7 +356,7 @@ object Vacuum {
                                   statsKey: String): Unit = {
     val g = ArtifactGen.current(root)
     val gd = ArtifactGen.dir(root, g)
-    val rowsBefore = spark.read.parquet(memberBytesPath).count()
+    val rowsBefore = Tables.parquet(spark, memberBytesPath).count()
     val bytesBefore =
       bytesUnder(memberBytesPath) + bytesUnder(s"$gd/tombstones")
     val nd = ArtifactGen.dir(root, g + 1)
@@ -371,7 +372,7 @@ object Vacuum {
     // with a retention age; deferred generations are swept later by
     // [[reclaimDeferred]] (r13 verdict directive #1, Round14Spec).
     ArtifactGen.reclaim(root, g + 1, reclaimMembers)
-    val rowsAfter = spark.read.parquet(s"$nd/$member").count()
+    val rowsAfter = Tables.parquet(spark, s"$nd/$member").count()
     val bytesAfter =
       bytesUnder(s"$nd/$member") + bytesUnder(s"$nd/tombstones")
     vacuumStats.put(statsKey, (rowsBefore, rowsAfter, bytesBefore, bytesAfter))
@@ -396,8 +397,8 @@ object Vacuum {
       graft.tables.Tables.documents(spark, dir)
         .filter(col("doc_id") % 10 === 3)
         .select("doc_id").write.mode("overwrite").parquet(s"$root/tombstones")
-      val tomb = spark.read.parquet(s"$root/tombstones")
-      val surviving = spark.read.parquet(s"$root/index")
+      val tomb = Tables.parquet(spark, s"$root/tombstones")
+      val surviving = Tables.parquet(spark, s"$root/index")
         .join(broadcast(tomb), Seq("doc_id"), "left_anti")
       vacuumMember(spark, root, "index", surviving, tomb,
         s"$root/index", reclaimGen0Member = true, statsKey = s"band:$dir")
@@ -423,8 +424,8 @@ object Vacuum {
         .filter(col("vec_id") % 10 === 3)
         .select("vec_id").write.mode("overwrite").parquet(s"$root/tombstones")
       val base = Similarity.pqIndexPath(spark, dir)
-      val tomb = spark.read.parquet(s"$root/tombstones")
-      val surviving = spark.read.parquet(s"$base/codes")
+      val tomb = Tables.parquet(spark, s"$root/tombstones")
+      val surviving = Tables.parquet(spark, s"$base/codes")
         .join(broadcast(tomb), Seq("vec_id"), "left_anti")
       // generation-0 codes are E9's SHARED artifact — superseded for
       // this root, never reclaimed (E5/E9/E12 keep serving them)
@@ -451,7 +452,7 @@ object Vacuum {
       val embs = graft.tables.Tables.embeddings(spark, dir)
       embs.filter(col("vec_id") % 10 === 3)
         .select("vec_id").write.mode("overwrite").parquet(s"$root/tombstones")
-      val tomb = spark.read.parquet(s"$root/tombstones")
+      val tomb = Tables.parquet(spark, s"$root/tombstones")
       // the graph's surviving view is the bridge-REPAIRED edge set
       // (E22's rule), not a plain anti-join — the vacuum persists it.
       // The CUMULATIVE deleted set rides along as its own member —

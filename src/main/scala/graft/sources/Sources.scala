@@ -1,9 +1,13 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.tables.Tables
 
 /** Ingestion / sink surface — SURVEY.md §2.I.
   *
@@ -18,6 +22,11 @@ import org.apache.spark.sql.types.StructType
   *  - append-only incremental batches + a latest-wins merged VIEW (the
   *    UPDATE-free formulation of late-arriving labels: immutable writes,
   *    merge-on-read).
+  *
+  * Invariant: no Spark job runs to learn a schema or a watermark. Parquet
+  * reads go through [[graft.tables.Tables.parquet]]; batch ids come from
+  * the partition listing ([[committedIds]]) and a base's watermark from
+  * a direct parquet-hadoop read of its `meta` file ([[watermark]]).
   */
 object Sources {
 
@@ -215,7 +224,7 @@ object Sources {
       .write.mode("overwrite").partitionBy("p_date").parquet(path)
 
   def readDatePartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
 
   /** Append one immutable batch (the INSERT of a daily run). Re-runs are
     * idempotent at the read side via [[readLatest]], not by mutating
@@ -462,7 +471,7 @@ object Sources {
     * expressed as immutable append + window dedup).
     */
   def readLatest(spark: SparkSession, path: String, keyCols: Seq[String]): DataFrame =
-    latestWins(spark.read.parquet(path), keyCols)
+    latestWins(Tables.parquet(spark, path), keyCols)
 
   /** I19 — AS-OF read over the same batch-partitioned log: latest-wins
     * restricted to `_batch_id <= asOf` — the lakehouse time-travel read
@@ -473,7 +482,7 @@ object Sources {
     */
   def readAsOf(spark: SparkSession, path: String, keyCols: Seq[String],
                asOf: Long): DataFrame =
-    latestWins(spark.read.parquet(path).filter(col("_batch_id") <= asOf), keyCols)
+    latestWins(Tables.parquet(spark, path).filter(col("_batch_id") <= asOf), keyCols)
 
   private def latestWins(log: DataFrame, keyCols: Seq[String]): DataFrame = {
     val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col("_batch_id").desc)
@@ -515,7 +524,7 @@ object Sources {
     // bounded per-file footer aggregations (min/max come from parquet
     // statistics) — the per-commit cost is O(files in THIS batch)
     val stats = files.toSeq.map { f =>
-      val r = spark.read.parquet(f.getAbsolutePath)
+      val r = Tables.parquet(spark, f.getAbsolutePath)
         .agg(min(col(statsCol)).cast("long"), max(col(statsCol)).cast("long"))
         .head()
       (f.getName, r.getLong(0), r.getLong(1))
@@ -543,7 +552,7 @@ object Sources {
       val mf = new java.io.File(manifestDir(logPath), s"batch=$id")
       if (!mf.isDirectory) files.map(_.getAbsolutePath).toSeq
       else {
-        val st = spark.read.parquet(mf.getAbsolutePath).collect()
+        val st = Tables.parquet(spark, mf.getAbsolutePath).collect()
           .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
         files.toSeq.flatMap { f =>
           st.get(f.getName) match {
@@ -583,8 +592,8 @@ object Sources {
     // an all-pruned range is a legitimate EMPTY result, not an error —
     // serve it as a zero-row scan of the log's own schema
     val log =
-      if (keep.isEmpty) spark.read.parquet(logPath).filter(lit(false))
-      else spark.read.option("basePath", logPath).parquet(keep: _*)
+      if (keep.isEmpty) Tables.parquet(spark, logPath).filter(lit(false))
+      else Tables.parquet(spark, Map("basePath" -> logPath), keep: _*)
     latestWins(log, keyCols).filter(col(statsCol).between(lo, hi))
   }
 
@@ -603,18 +612,16 @@ object Sources {
     */
   def compactLog(spark: SparkSession, logPath: String, keyCols: Seq[String],
                  basePath: String): Unit = {
-    val log = spark.read.parquet(logPath)
-    // the high-water batch id comes from the PARTITION DIRECTORY NAMES
-    // ([[committedIds]]) — on the upsertBatch/commitStaged layout (the
-    // only log layout compactLog is defined over; readCompacted's
-    // pruning already depends on it) `max(_batch_id)` over the data is
-    // by construction the max committed partition value, and the
-    // listing costs O(batches) driver work instead of a full-log scan
-    // job per compaction (r14, guide §2.4: at 100 TB the old watermark
-    // scan read every historical byte to learn a directory name)
+    // the high-water batch id comes from the partition directory names:
+    // on the upsertBatch/commitStaged layout (the only log layout
+    // compaction is defined over) the max committed partition value is
+    // `max(_batch_id)` over the data, for O(batches) listing work. It is
+    // listed BEFORE the log is read, and the read is bounded by it, so a
+    // batch committed in between stays a delta above the watermark.
     val ids = committedIds(logPath)
     require(ids.nonEmpty, s"compactLog: no batches under $logPath")
     val wm = ids.last
+    val log = Tables.parquet(spark, logPath).filter(col("_batch_id") <= wm)
     val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col("_batch_id").desc)
     log.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
@@ -623,6 +630,26 @@ object Sources {
       .write.mode("overwrite").parquet(s"$basePath/base")
     import spark.implicits._
     Seq(wm).toDF("_watermark").write.mode("overwrite").parquet(s"$basePath/meta")
+  }
+
+  /** The watermark a compaction recorded in `basePath/meta`, read in this
+    * process with parquet-hadoop's record reader: the sidecar is one row
+    * of one long, so a Spark job would cost far more than the read.
+    */
+  private[graft] def watermark(spark: SparkSession, basePath: String): Long = {
+    val meta = new Path(s"$basePath/meta")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val rows = meta.getFileSystem(conf).listStatus(meta).toSeq
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+      .flatMap { f =>
+        val reader = ParquetReader.builder(new GroupReadSupport(), f.getPath)
+          .withConf(conf).build()
+        try Iterator.continually(reader.read()).takeWhile(_ != null).map(_.getLong(0, 0)).toList
+        finally reader.close()
+      }
+    require(rows.size == 1, s"$meta holds ${rows.size} watermark rows, expected 1")
+    rows.head
   }
 
   /** Latest-wins view over compacted base + post-compaction deltas: the
@@ -634,15 +661,15 @@ object Sources {
     */
   def readCompacted(spark: SparkSession, basePath: String, logPath: String,
                     keyCols: Seq[String]): DataFrame = {
-    val wm = spark.read.parquet(s"$basePath/meta").head().getLong(0)
-    val base = spark.read.parquet(s"$basePath/base")
+    val wm = watermark(spark, basePath)
+    val base = Tables.parquet(spark, s"$basePath/base")
     // a fully-vacuumed log has no partitions left to read (and no files
     // to infer a schema from) — the steady state right after
     // compact+vacuum; the base alone is then the complete table
     val hasDeltas = Option(new java.io.File(logPath).listFiles)
       .exists(_.exists(f => f.isDirectory || f.getName.endsWith(".parquet")))
     val deltas =
-      if (hasDeltas) spark.read.parquet(logPath).filter(col("_batch_id") > wm)
+      if (hasDeltas) Tables.parquet(spark, logPath).filter(col("_batch_id") > wm)
       else base.limit(0)
     val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col("_batch_id").desc)
     base.unionByName(deltas)
@@ -663,14 +690,27 @@ object Sources {
     * compactor.
     */
   def recompact(spark: SparkSession, basePath: String, logPath: String,
-                keyCols: Seq[String], newBasePath: String): Unit = {
+                keyCols: Seq[String], newBasePath: String): Unit =
+    recompactThrough(spark, basePath, logPath, keyCols, newBasePath,
+      committedIds(logPath).lastOption.getOrElse(Long.MinValue))
+
+  /** [[recompact]] folding the deltas up to `through`, a batch id listed
+    * (as in [[compactLog]]) BEFORE the log is read: the read is bounded by
+    * it, so a batch committed in between is left a delta above the new
+    * watermark instead of being hidden by it. Split out so a spec can
+    * commit a batch between the listing and the read.
+    */
+  private[graft] def recompactThrough(spark: SparkSession, basePath: String,
+                                      logPath: String, keyCols: Seq[String],
+                                      newBasePath: String, through: Long): Unit = {
     require(new java.io.File(newBasePath).toPath.toAbsolutePath !=
       new java.io.File(basePath).toPath.toAbsolutePath,
       "recompact needs a NEW base path: Spark cannot overwrite an input in place")
-    val wm0 = spark.read.parquet(s"$basePath/meta").head().getLong(0)
-    val all = spark.read.parquet(s"$basePath/base")
-      .unionByName(spark.read.parquet(logPath).filter(col("_batch_id") > wm0))
-    val wm = all.agg(max(col("_batch_id")).cast("long")).head().getLong(0)
+    val wm0 = watermark(spark, basePath)
+    val wm = math.max(wm0, through)
+    val all = Tables.parquet(spark, s"$basePath/base")
+      .unionByName(Tables.parquet(spark, logPath)
+        .filter(col("_batch_id") > wm0 && col("_batch_id") <= wm))
     val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col("_batch_id").desc)
     all.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
@@ -694,7 +734,7 @@ object Sources {
     * from the caller.
     */
   def vacuumLog(spark: SparkSession, logPath: String, basePath: String): Int = {
-    val wm = spark.read.parquet(s"$basePath/meta").head().getLong(0)
+    val wm = watermark(spark, basePath)
     // CLAIM FLOOR, written BEFORE any directory is removed (r12 — found
     // by the multi-day soak spec): id sequencing reads the log's
     // surviving directory names, so once vacuum deletes
@@ -855,7 +895,7 @@ object SourceQueries {
     * Round5Spec over the same write-once files.
     */
   def srcSortedLayout(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(sortedLayoutPaths(spark, dir)._1)
+    Tables.parquet(spark, sortedLayoutPaths(spark, dir)._1)
       .filter(col("l_extendedprice") >= lit(30000.0) &&
         col("l_extendedprice") <= lit(31000.0))
       .orderBy("l_orderkey", "l_linenumber")
@@ -916,7 +956,7 @@ object SourceQueries {
   def srcZorderLayout(spark: SparkSession, dir: String): DataFrame = {
     val z = zorderLayout(spark, dir)
     val (pLo, pHi, sLo, sHi) = zorderBoxFrom(z.mp, z.ms)
-    spark.read.parquet(z.zorder)
+    Tables.parquet(spark, z.zorder)
       .filter(col("l_partkey").between(pLo, pHi) &&
         col("l_suppkey").between(sLo, sHi))
       .orderBy("l_orderkey", "l_linenumber")
@@ -989,7 +1029,7 @@ object SourceQueries {
   /** The shared manifest aggregate over a written shard layout. */
   private def shardManifest(spark: SparkSession, path: String,
                             tokenSums: Seq[String]): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .groupBy(col("shard").cast("long").as("shard"))
       .agg(count(lit(1)).as("n_docs"),
         tokenSums.map(c => sum(c).as(c)) :+
@@ -1186,7 +1226,7 @@ object SourceQueries {
     o.filter(col("o_orderkey") % 2 === 1)
       .select("o_orderkey", "o_totalprice", "o_orderstatus")
       .write.mode("overwrite").parquet(s"$path/b2")
-    spark.read.option("mergeSchema", "true").parquet(s"$path/b1", s"$path/b2")
+    Tables.parquet(spark, Map("mergeSchema" -> "true"), s"$path/b1", s"$path/b2")
       .select("o_orderkey", "o_totalprice", "o_orderstatus")
       .orderBy("o_orderkey")
   }

@@ -124,5 +124,5 @@ object CorpusAdmit {
   def streamCorpusAdmit(spark: SparkSession, dir: String): DataFrame =
     // partition discovery surfaces the batch=N key as a column — an
     // implementation detail of the idempotent sink, dropped here
-    spark.read.parquet(sinkPath(spark, dir)).drop("batch").orderBy("doc_id")
+    Tables.parquet(spark, sinkPath(spark, dir)).drop("batch").orderBy("doc_id")
 }

@@ -30,21 +30,12 @@ object Events {
     * footer), so the same `Tables.normalizeTs` conversion is applied to
     * the streaming frame after load.
     */
-  /** Raw events schema per sf dir, resolved once per JVM: every stream
-    * START otherwise pays a full batch-frame construction (file listing
-    * + footer read) just to fetch the schema — needless on the restart
-    * and multi-stream paths the G-suite exercises.
-    */
-  private val rawSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
   private[streaming] def eventsStream(spark: SparkSession, dir: String): DataFrame =
     Tables.normalizeTs(
       spark.readStream
         // raw schema via the shared loader, so the path convention and
         // any future layout change live in Tables alone
-        .schema(rawSchemaCache.computeIfAbsent(dir,
-          d => Tables.load(spark, d, "events").schema))
+        .schema(Tables.load(spark, dir, "events").schema)
         // file streams list a directory; glob-filter selects the one table
         .option("pathGlobFilter", "events.parquet")
         .parquet(dir))
@@ -471,7 +462,7 @@ object DqAlertSink {
         .select(lit("_batch_checked").as("check_name"), lit(0L).as("n")))
 
   def run(spark: SparkSession, srcPath: String, alertPath: String): Unit = {
-    val schema = spark.read.parquet(srcPath).schema
+    val schema = Tables.parquet(spark, srcPath).schema
     val q = spark.readStream.schema(schema).parquet(srcPath)
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>

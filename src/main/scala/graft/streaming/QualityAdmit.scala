@@ -79,5 +79,5 @@ object QualityAdmit {
 
   def streamQualityAdmit(spark: SparkSession, dir: String): DataFrame =
     QualityGate.keepAudit(
-      spark.read.parquet(sinkPath(spark, dir)).drop("batch"))
+      Tables.parquet(spark, sinkPath(spark, dir)).drop("batch"))
 }

@@ -77,5 +77,5 @@ object ShardRoute {
       .orderBy("shard")
 
   def streamShardRoute(spark: SparkSession, dir: String): DataFrame =
-    manifestOf(spark.read.parquet(sinkPath(spark, dir)).drop("batch"))
+    manifestOf(Tables.parquet(spark, sinkPath(spark, dir)).drop("batch"))
 }

@@ -83,7 +83,7 @@ object VectorAdmit {
     })
 
   def streamVectorAdmit(spark: SparkSession, dir: String): DataFrame = {
-    val dEdges = spark.read.parquet(sinkPath(spark, dir))
+    val dEdges = Tables.parquet(spark, sinkPath(spark, dir))
       .select("src", "dst", "d2")
     GraphAnn.streamAppendServe(spark, dir, dEdges)
   }

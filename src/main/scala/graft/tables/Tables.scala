@@ -1,22 +1,44 @@
 package graft.tables
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.functions.{col, unix_micros}
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
-/** Typed loaders for the driver-generated test tables (TESTDATA.md).
+/** Typed loaders for the generated test tables (TESTDATA.md), and the
+  * engine's one parquet read entry point.
   *
   * One parquet file per table under `dir`. All operators take `dir` so the
   * same code runs at any scale factor; at cluster scale the same loaders
   * would point at a partitioned table root instead of a single file.
+  *
+  * Invariant: no Spark job runs to learn a schema or a watermark.
   */
 object Tables {
+  /** Every parquet read goes through here. The data schema is read in
+    * this process from the footer Spark's inference would open, and the
+    * relation is built over the same single file listing, so building the
+    * DataFrame launches no inference job; Spark still discovers the
+    * partition columns and their types. Footers are re-read on every
+    * call, so a rewritten directory is always seen. Where the footer
+    * cannot stand in for inference (schema merging, glob paths, a
+    * streaming file sink's log, no data file) Spark infers as usual, with
+    * its own errors.
+    */
+  def parquet(spark: SparkSession, options: Map[String, String],
+              paths: String*): DataFrame =
+    GraftParquetBridge.read(spark, paths, options)
+      .getOrElse(spark.read.options(options).parquet(paths: _*))
+
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    parquet(spark, Map.empty[String, String], paths: _*)
+
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "nation")

@@ -156,7 +156,7 @@ class Round15Spec extends AnyFunSuite {
     val a = Scratch.dir("r15_batches_oneshot")
     val b = Scratch.dir("r15_batches_seq")
     val orders = graft.tables.Tables.orders(spark, sf)
-      .select("o_orderkey", "o_orderstatus").limit(500)
+      .select("o_orderkey", "o_orderstatus").filter(col("o_orderkey") < 500)
     graft.sources.Sources.upsertBatches(Seq(
       orders.withColumn("o_orderstatus", lit("PENDING")) -> 1L,
       orders -> 2L), a)

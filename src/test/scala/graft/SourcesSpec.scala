@@ -194,4 +194,64 @@ class SourcesSpec extends AnyFunSuite {
     assert(merged.map(r => (r.getLong(0), r.getString(1))).toSeq ==
       Seq((1L, "home"), (2L, "unknown"), (3L, "unknown")))
   }
+
+  test("readCompacted reads the watermark of a meta rewritten in place") {
+    import spark.implicits._
+    val (log, base) = (tmp("wm_log"), tmp("wm_base"))
+    Sources.upsertBatch(Seq((1L, "a")).toDF("k", "v"), log, 1L)
+    Sources.compactLog(spark, log, Seq("k"), base)
+    Sources.upsertBatch(Seq((1L, "b")).toDF("k", "v"), log, 2L)
+    def latest() = Sources.readCompacted(spark, base, log, Seq("k"))
+      .select("v").as[String].collect().toSeq
+    // watermark 1: batch 2 is a delta over the base
+    assert(latest() == Seq("b"))
+    Seq(2L).toDF("_watermark").write.mode("overwrite").parquet(s"$base/meta")
+    assert(Sources.watermark(spark, base) == 2L)
+    // watermark 2: batch 2 reads as compacted, so the base's row wins
+    assert(latest() == Seq("a"))
+  }
+
+  test("recompact's listed watermark equals max(_batch_id) over base and deltas") {
+    import spark.implicits._
+    def scannedWatermark(base: String, log: String): Long = {
+      val wm0 = spark.read.parquet(s"$base/meta").head().getLong(0)
+      spark.read.parquet(s"$base/base")
+        .unionByName(spark.read.parquet(log).filter(col("_batch_id") > wm0))
+        .agg(max(col("_batch_id")).cast("long")).head().getLong(0)
+    }
+    Seq(false, true).foreach { withDeltas =>
+      val (log, base, next) = (tmp("rc_log"), tmp("rc_base"), tmp("rc_next"))
+      Sources.upsertBatch(Seq((1L, "a"), (2L, "a")).toDF("k", "v"), log, 1L)
+      Sources.upsertBatch(Seq((1L, "b")).toDF("k", "v"), log, 2L)
+      Sources.compactLog(spark, log, Seq("k"), base)
+      if (withDeltas) {
+        Sources.upsertBatch(Seq((2L, "c")).toDF("k", "v"), log, 3L)
+        Sources.upsertBatch(Seq((3L, "d")).toDF("k", "v"), log, 4L)
+      }
+      val want = scannedWatermark(base, log)
+      assert(want == (if (withDeltas) 4L else 2L))
+      Sources.recompact(spark, base, log, Seq("k"), next)
+      assert(Sources.watermark(spark, next) == want, s"withDeltas=$withDeltas")
+    }
+  }
+
+  test("a batch committed after recompact lists its watermark survives recompact and vacuum") {
+    import spark.implicits._
+    val (log, base, next) = (tmp("late_log"), tmp("late_base"), tmp("late_next"))
+    Sources.upsertBatch(Seq((1L, "a"), (2L, "a")).toDF("k", "v"), log, 1L)
+    Sources.compactLog(spark, log, Seq("k"), base)
+    Sources.upsertBatch(Seq((2L, "b")).toDF("k", "v"), log, 2L)
+    val listed = Sources.committedIds(log).last
+    // another writer commits between recompact's listing and its read
+    Sources.upsertBatch(Seq((1L, "late")).toDF("k", "v"), log, 3L)
+    Sources.recompactThrough(spark, base, log, Seq("k"), next, listed)
+    assert(Sources.watermark(spark, next) == listed)
+    assert(spark.read.parquet(s"$next/base").filter(col("v") === "late").isEmpty,
+      "the new base folded in a batch above its own watermark")
+    Sources.vacuumLog(spark, log, next)
+    assert(Sources.committedIds(log) == Seq(3L))
+    val latest = Sources.readCompacted(spark, next, log, Seq("k"))
+      .select("k", "v").as[(Long, String)].collect().sorted.toSeq
+    assert(latest == Seq((1L, "late"), (2L, "b")))
+  }
 }
