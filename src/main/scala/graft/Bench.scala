@@ -132,41 +132,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.broadcastTimeout", "1200")
-      // single-file-per-table inputs: smaller split target keeps all
-      // cores busy on the scan stage
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Warm-up: run every headline query once at the smallest scale factor
-    // (or this one, if no smaller exists). Whole-stage codegen caches by
-    // generated source, so the tiny-SF pass compiles/JITs every plan shape
-    // and the measured pass reflects execution, not compiler time.
-    val warmDir = {
-      val tiny = sfDir.replaceAll("sf[0-9.]+$", "sf0.001")
-      if (new java.io.File(tiny).isDirectory) tiny else sfDir
-    }
-    headline.foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        try materialize(fn(spark, warmDir)) catch { case _: Throwable => () }
-      }
-    }
-    // touch the measured dir once so file listing/footers aren't billed
-    // to the first measured query
-    Tables.names.foreach { t =>
-      try Tables.parquet(spark, s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
-    }
+    val spark = session()
+    warmUp(spark, sfDir, headline)
 
     // Each query is timed SPARK_GRAFT_BENCH_PASSES times (default 3) and
     // the per-query MINIMUM is reported: best-of-N is the standard way to
@@ -288,6 +255,54 @@ object Bench {
     if (violations.nonEmpty) {
       System.err.println(s"[bench] SHUFFLE BUDGET EXCEEDED: ${violations.mkString("; ")}")
       if (enforced) sys.exit(1)
+    }
+  }
+
+  /** Local cores the bench session runs on: `SPARK_GRAFT_CPUS`, else all. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The session every timing main measures in, so they all time the same
+    * plans.
+    */
+  def session(): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.broadcastTimeout", "1200")
+      // single-file-per-table inputs: smaller split target keeps all
+      // cores busy on the scan stage
+      .config("spark.sql.files.maxPartitionBytes", "16m")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Run each named query once at the smallest scale factor (or at
+    * `sfDir`, if no smaller exists), then touch `sfDir`'s tables. Whole-
+    * stage codegen caches by generated source, so the tiny-SF pass
+    * compiles and JITs every plan shape and the measured pass reflects
+    * execution, not compiler time; the touch keeps file listing and
+    * footers out of the first measured query. Failures here are ignored:
+    * the measured passes report them.
+    */
+  def warmUp(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+    val warmDir = {
+      val tiny = sfDir.replaceAll("sf[0-9.]+$", "sf0.001")
+      if (new java.io.File(tiny).isDirectory) tiny else sfDir
+    }
+    names.foreach { name =>
+      SparkEntry.queries.get(name).foreach { fn =>
+        try materialize(fn(spark, warmDir)) catch { case _: Throwable => () }
+      }
+    }
+    Tables.names.foreach { t =>
+      try Tables.parquet(spark, s"$sfDir/$t.parquet").count()
+      catch { case _: Throwable => () }
     }
   }
 }

@@ -1,55 +1,54 @@
 package graft
 
-/** Bounded, EXPLICIT reuse for operator-scoped persisted state.
+import org.apache.spark.sql.SparkSession
+
+/** The engine's one per-JVM reuse mechanism: `memo(key)(build)` builds
+  * operator state (persisted frames, written artifacts, collected
+  * codebooks, catalog registrations, broadcasts, drained sinks) once and
+  * returns it to every later call with the same key.
   *
-  * Several operators persist an intermediate their returned plan reads
-  * more than once (LSH band signatures, the PQ code index, the pagerank
-  * edge frame, the connected-components label table). Round 5 left
-  * those `persist()`ed forever, which the review flagged as a leak —
-  * but the naive fix (unpersist the previous invocation's frames when a
-  * site re-runs) is WRONG twice over:
+  * Invariants:
+  *  - Exactly once per key. The map only ever inserts an empty [[Cell]];
+  *    the build runs under that cell's lock, so concurrent callers wait
+  *    for one build. A build that throws leaves the cell empty and the
+  *    next call builds again.
+  *  - Safe to nest. No build runs inside the map's `computeIfAbsent`, so
+  *    a build may memoize other keys (a takedown cascade builds the band
+  *    index and the PQ index it purges). Nesting must not cycle.
+  *  - Scoped to the `SparkContext`. The stored key carries the active
+  *    context's `applicationId`: memoized state (cached frames, catalog
+  *    tables, broadcasts) is only valid in the context that built it, and
+  *    a later context in the same JVM builds its own.
+  *  - Inputs are assumed immutable per key. A caller whose inputs can
+  *    change under the same key (a path rewritten in place) is served the
+  *    old state; keying on an input fingerprint is still open.
   *
-  *  1. Spark's CacheManager dedups plan-EQUAL frames, so the new
-  *     invocation's `persist()` typically REUSES the old generation's
-  *     entry — unpersisting the old handle afterwards evicts the entry
-  *     the new query is about to read (measured: pagerank's edge frame
-  *     silently re-shuffled per round, 164 KB → 1.4 MB).
-  *  2. Even retire-before-build is a pessimization: it discards a
-  *     legitimately reusable artifact and rebuilds the whole upstream
-  *     pipeline per invocation (measured: dedup_minhash_lsh 1.2 s →
-  *     9.7 s per bench pass).
-  *
-  * The right shape is the same write-once discipline the layout queries
-  * use: `memo(key)(build)` builds and persists ONCE per (site, inputs)
-  * key and returns the same frame to every later invocation in the JVM.
-  * Memory is bounded by the number of distinct keys (a handful of
-  * operator sites × sf dirs), not by invocation count — the leak is
-  * closed without giving up the reuse. Inputs are immutable per sf dir,
-  * so the memoized state can never go stale within a JVM; a caller with
-  * genuinely new inputs gets a new key (the pagerank site keys on the
-  * edge frame's semantic hash).
+  * Memory is bounded by the number of distinct keys (operator sites ×
+  * input dirs), not by the number of calls. Retiring a persisted frame
+  * when a site re-runs would be wrong: Spark's CacheManager shares one
+  * entry between plan-equal frames, so the new call's `persist()` reads
+  * the entry the old handle would evict.
   */
 object QueryCaches {
-  private val live = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+  private final class Cell {
+    @volatile var value: AnyRef = _
+  }
 
-  /** Race-tolerant get-or-build (no computeIfAbsent: a build that
-    * memoizes a NESTED site would be a recursive update on this map).
-    * A lost race double-builds harmlessly — persist of a plan-equal
-    * frame reuses the winner's cache entry.
-    */
-  /** Spec hook: whether a site has memoized under `key` — how
-    * Round10Spec pins that session-scoped state (catalog registrations)
-    * keys on the applicationId, not on the dir alone.
-    */
-  private[graft] def has(key: String): Boolean = live.containsKey(key)
+  private val live = new java.util.concurrent.ConcurrentHashMap[String, Cell]()
+
+  private def scoped(key: String, appId: String): String = s"$appId/$key"
+
+  private def activeAppId: String = SparkSession.active.sparkContext.applicationId
+
+  /** Whether `key` holds a built value under context `appId`. */
+  private[graft] def has(key: String, appId: String = activeAppId): Boolean =
+    Option(live.get(scoped(key, appId))).exists(_.value != null)
 
   def memo[T <: AnyRef](key: String)(build: => T): T = {
-    val hit = live.get(key)
-    if (hit != null) hit.asInstanceOf[T]
-    else {
-      val v = build
-      val prev = live.putIfAbsent(key, v)
-      if (prev != null) prev.asInstanceOf[T] else v
+    val cell = live.computeIfAbsent(scoped(key, activeAppId), _ => new Cell)
+    if (cell.value == null) cell.synchronized {
+      if (cell.value == null) cell.value = build
     }
+    cell.value.asInstanceOf[T]
   }
 }

@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-import graft.tables.Tables
 
 /** Stage-accounting probe (r15, r14 verdict directive #3): run one query
   * and decompose its wall into task time vs scheduler/driver idle. For
@@ -20,19 +18,7 @@ object StageProbe {
     val sfDir = args(0)
     val passes = math.max(1, args(1).toInt)
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.broadcastTimeout", "1200")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
 
     // per-measurement accumulators, reset between passes
     object L extends SparkListener {
@@ -50,18 +36,7 @@ object StageProbe {
     }
     spark.sparkContext.addSparkListener(L)
 
-    val warmDir = {
-      val tiny = sfDir.replaceAll("sf[0-9.]+$", "sf0.001")
-      if (new java.io.File(tiny).isDirectory) tiny else sfDir
-    }
-    names.foreach { n =>
-      try Bench.materialize(SparkEntry.queries(n)(spark, warmDir))
-      catch { case _: Throwable => () }
-    }
-    Tables.names.foreach { t =>
-      try Tables.parquet(spark, s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
-    }
+    Bench.warmUp(spark, sfDir, names)
 
     (1 to passes).foreach { p =>
       names.foreach { n =>
@@ -76,7 +51,7 @@ object StageProbe {
         }
         val wall = (System.nanoTime() - t0) / 1e9
         Thread.sleep(500)
-        val occ = (L.runMs / 1000.0) / (wall * cpus.toInt)
+        val occ = (L.runMs / 1000.0) / (wall * Bench.cpus)
         println(f"STAGEPROBE pass=$p query=$n wall=$wall%.3fs " +
           f"stages=${L.stages} tasks=${L.tasks} " +
           f"taskRun=${L.runMs / 1000.0}%.3fs cpu=${L.cpuNs / 1e9}%.3fs " +

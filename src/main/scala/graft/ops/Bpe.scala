@@ -111,7 +111,7 @@ object Bpe {
   private[graft] def trieFor(name: String, pieces: Seq[String])
   : org.apache.spark.broadcast.Broadcast[graft.functions.PieceTrie] = {
     val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-    graft.QueryCaches.memo(s"subword.trie:$name:${sc.applicationId}") {
+    graft.QueryCaches.memo(s"subword.trie:$name") {
       sc.broadcast(graft.functions.PieceTrie(pieces))
     }
   }

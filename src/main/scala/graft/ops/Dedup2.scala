@@ -289,19 +289,16 @@ object Dedup2 {
     * old index (no sidecar yet → nothing deleted) or the full pair —
     * never a half-deleted index.
     */
-  private val tombstoneOnce =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def bandTombstonePath(spark: SparkSession,
                                        dir: String): String =
-    tombstoneOnce.computeIfAbsent(dir, _ => {
+    graft.QueryCaches.memo(s"dedup2.tombstone:$dir") {
       val root = graft.Scratch.dir("band_tombstone")
       Dedup.bandSignatures(spark, dir)
         .write.mode("overwrite").parquet(s"$root/index")
       Tables.documents(spark, dir).filter(col("doc_id") % 10 === 3)
         .select("doc_id").write.mode("overwrite").parquet(s"$root/tombstones")
       root
-    })
+    }
 
   /** D18 — `dedup_tombstone` (r11 verdict directive #2): the DELETE
     * analog of the reference's after-the-fact UPDATE lifecycle

@@ -120,8 +120,7 @@ object DistRank {
       "distrank.bounds:" +
         s"${canon.semanticHash()}:" +
         s"${scala.util.hashing.MurmurHash3.stringHash(canon.toString)}:" +
-        s"${sortCols.mkString(",")}:$slices:" +
-        spark.sparkContext.applicationId) {
+        s"${sortCols.mkString(",")}:$slices") {
       if (probs.isEmpty) Array.empty[Double]
       else keyed.stat.approxQuantile("_k", probs, 0.01)
     }

@@ -131,12 +131,7 @@ object GraphAnn {
     * candidates, never empties them).
     */
   private[graft] def edgesArtifact(spark: SparkSession, dir: String): DataFrame =
-    // applicationId in the key (statsplan.tables / mergeencode.table
-    // discipline): the memoized frame is bound to THIS SparkContext —
-    // a later context in the same JVM must rebuild, not receive a
-    // handle to a stopped context.
-    graft.QueryCaches.memo(
-      s"graphann.edges:$dir:${spark.sparkContext.applicationId}") {
+    graft.QueryCaches.memo(s"graphann.edges:$dir") {
       val edges = buildEdges(spark, dir)
       val path = graft.Scratch.dir("graphann_edges")
       edges.write.mode("overwrite").parquet(path)
@@ -229,8 +224,7 @@ object GraphAnn {
     * literals. Memoized per dir.
     */
   private def probeEntries(spark: SparkSession, dir: String): DataFrame =
-    graft.QueryCaches.memo(
-      s"graphann.entries:$dir:${spark.sparkContext.applicationId}") {
+    graft.QueryCaches.memo(s"graphann.entries:$dir") {
       val embs = Tables.embeddings(spark, dir)
       entriesFrom(embs, embs.filter(col("vec_id") % 100 === 0))
     }
@@ -334,8 +328,7 @@ object GraphAnn {
 
   def annGraphSearch(spark: SparkSession, dir: String, k: Int = 3,
                      stepCap: Int = maxSteps): DataFrame =
-    graft.QueryCaches.memo(
-      s"graphann.search:$dir:$k:$stepCap:${spark.sparkContext.applicationId}") {
+    graft.QueryCaches.memo(s"graphann.search:$dir:$k:$stepCap") {
       val tk = ticks(spark, dir).persist()
       val edges = edgesArtifact(spark, dir)
       val probes = probeEntries(spark, dir)
@@ -434,8 +427,7 @@ object GraphAnn {
     */
   def annGraphBeam(spark: SparkSession, dir: String, k: Int = 3,
                    ef: Int = beamEf, roundCap: Int = beamRounds): DataFrame =
-    graft.QueryCaches.memo(
-      s"graphann.beam:$dir:$k:$ef:$roundCap:${spark.sparkContext.applicationId}") {
+    graft.QueryCaches.memo(s"graphann.beam:$dir:$k:$ef:$roundCap") {
       val tk = ticks(spark, dir).persist()
       val edges = edgesArtifact(spark, dir)
       val w = Window.partitionBy("qid").orderBy(col("d"), col("nid"))
@@ -592,8 +584,7 @@ object GraphAnn {
     * hash-proves the maintenance DECISION, not just the served rows.
     */
   def annGraphAppend(spark: SparkSession, dir: String, k: Int = 3): DataFrame =
-    graft.QueryCaches.memo(
-      s"graphann.append:$dir:$k:${spark.sparkContext.applicationId}") {
+    graft.QueryCaches.memo(s"graphann.append:$dir:$k") {
       val embs = Tables.embeddings(spark, dir)
       val isDelta = col("vec_id") % 10 === 7
       val ab = appendPipeline(embs, isDelta, s"graphann.abuckets:$dir")
@@ -665,8 +656,7 @@ object GraphAnn {
     new java.util.concurrent.ConcurrentHashMap[String, (Int, Long, Long, Long)]()
 
   private def adcEdgesArtifact(spark: SparkSession, dir: String): DataFrame =
-    graft.QueryCaches.memo(
-      s"graphann.adcedges:$dir:${spark.sparkContext.applicationId}") {
+    graft.QueryCaches.memo(s"graphann.adcedges:$dir") {
       val edges = buildEdgesFrom(Tables.embeddings(spark, dir),
         s"graphann.adcbuckets:$dir", adcDegree, adcBuildRounds)
       val path = graft.Scratch.dir("graphann_adc_edges")
@@ -690,8 +680,7 @@ object GraphAnn {
   private[graft] val refineBuildRounds = 3
 
   private[graft] def refineEdgesArtifact(spark: SparkSession, dir: String): DataFrame =
-    graft.QueryCaches.memo(
-      s"graphann.refineedges:$dir:${spark.sparkContext.applicationId}") {
+    graft.QueryCaches.memo(s"graphann.refineedges:$dir") {
       val edges = buildEdgesFrom(Tables.embeddings(spark, dir),
         s"graphann.refinebuckets:$dir", refineDegree, refineBuildRounds)
       val path = graft.Scratch.dir("graphann_refine_edges")
@@ -716,8 +705,7 @@ object GraphAnn {
   def annGraphRefine(spark: SparkSession, dir: String, k: Int = 3,
                      ef: Int = adcBeamEf,
                      rerankN: Int = adcRerankN): DataFrame =
-    graft.QueryCaches.memo(
-      s"graphann.refine:$dir:$k:$ef:$rerankN:${spark.sparkContext.applicationId}") {
+    graft.QueryCaches.memo(s"graphann.refine:$dir:$k:$ef:$rerankN") {
       beamAdcServe(spark, dir, refineEdgesArtifact(spark, dir), k, ef,
         rerankN, s"refine:$dir")
     }
@@ -794,8 +782,7 @@ object GraphAnn {
   def annGraphBeamAdc(spark: SparkSession, dir: String, k: Int = 3,
                       ef: Int = adcBeamEf,
                       rerankN: Int = adcRerankN): DataFrame =
-    graft.QueryCaches.memo(
-      s"graphann.beamadc:$dir:$k:$ef:$rerankN:${spark.sparkContext.applicationId}") {
+    graft.QueryCaches.memo(s"graphann.beamadc:$dir:$k:$ef:$rerankN") {
       beamAdcServe(spark, dir, adcEdgesArtifact(spark, dir), k, ef, rerankN,
         dir)
     }
@@ -927,8 +914,7 @@ object GraphAnn {
     * build, delete, bridge, re-prune, surviving entries, and the walk.
     */
   def annGraphDelete(spark: SparkSession, dir: String, k: Int = 3): DataFrame =
-    graft.QueryCaches.memo(
-      s"graphann.delete:$dir:$k:${spark.sparkContext.applicationId}") {
+    graft.QueryCaches.memo(s"graphann.delete:$dir:$k") {
       val embs = Tables.embeddings(spark, dir)
       val isDel = col("vec_id") % 10 === 3
       val (repaired, stats) =
@@ -977,8 +963,7 @@ object GraphAnn {
     // raw file COUNT (r13 advisor) misses same-count content swaps.
     val tombDigest = ArtifactGen.dirDigest(
       new java.io.File(ArtifactGen.dir(root, gen), "tombstones"))
-    graft.QueryCaches.memo(
-      s"graphann.delserve:$root:$k:$gen:$tombDigest:${spark.sparkContext.applicationId}") {
+    graft.QueryCaches.memo(s"graphann.delserve:$root:$k:$gen:$tombDigest") {
       val gd = ArtifactGen.dir(root, gen)
       val edges = Tables.parquet(spark, s"$gd/edges")
       val tomb = Tables.parquet(spark, s"$gd/tombstones")
@@ -1003,8 +988,7 @@ object GraphAnn {
     * insert beams against THESE files, and they are never rewritten.
     */
   private[graft] def streamBaseEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.QueryCaches.memo(
-      s"graphann.gbase:$dir:${spark.sparkContext.applicationId}") {
+    graft.QueryCaches.memo(s"graphann.gbase:$dir") {
       val base = Tables.embeddings(spark, dir).filter(col("vec_id") % 10 =!= 7)
       val edges = buildEdgesFrom(base, s"graphann.sbuckets:$dir")
       val path = graft.Scratch.dir("graphann_streambase")
@@ -1142,8 +1126,7 @@ object GraphAnn {
       val upperEdges = buildEdgesFrom(upper, s"graphann.lbuckets:$dir:$deg:$rounds",
           deg, rounds)
         .localCheckpoint()
-      val baseEdges = graft.QueryCaches.memo(
-        s"graphann.ledges:$dir:$deg:$rounds:${spark.sparkContext.applicationId}") {
+      val baseEdges = graft.QueryCaches.memo(s"graphann.ledges:$dir:$deg:$rounds") {
         val e = buildEdgesFrom(embs, s"graphann.lbbuckets:$dir:$deg:$rounds",
           deg, rounds)
         val path = graft.Scratch.dir("graphann_layer_edges")
@@ -1184,8 +1167,7 @@ object GraphAnn {
   private[graft] val layerUpperEf = 3
 
   def annGraphLayer(spark: SparkSession, dir: String, k: Int = 3): DataFrame =
-    graft.QueryCaches.memo(
-      s"graphann.layer:$dir:$k:${spark.sparkContext.applicationId}") {
+    graft.QueryCaches.memo(s"graphann.layer:$dir:$k") {
       val (res, stats) = layerPipeline(spark, dir, k, layerUpperEf, beamEf,
         layerEntryCount, layerDegree, layerBuildRounds)
       layerStats.put(dir, stats)

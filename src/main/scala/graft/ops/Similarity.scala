@@ -285,8 +285,7 @@ object Similarity {
   private[graft] def ivfTrainedAssignmentOf(spark: SparkSession,
       embs: DataFrame, cells: Int, tag: String)
       : (DataFrame, Column => Column, Array[(Long, Array[Long])]) = {
-    val cb = graft.QueryCaches.memo(
-      s"sim.ivfCbOf:$tag:$cells:${spark.sparkContext.applicationId}") {
+    val cb = graft.QueryCaches.memo(s"sim.ivfCbOf:$tag:$cells") {
       trainCodebookOf(embs, 1, cells, pqTrainRounds)
     }.map { case (seed, slices) => (seed, slices(0)) }
     val fold = cellFoldOf(cb)
@@ -352,8 +351,7 @@ object Similarity {
     */
   def annCellSplit(spark: SparkSession, dir: String,
                    nprobe: Int = 2, cells: Int = ivfTrainedCells): DataFrame =
-    graft.QueryCaches.memo(
-      s"sim.cellSplit:$dir:$cells:${spark.sparkContext.applicationId}") {
+    graft.QueryCaches.memo(s"sim.cellSplit:$dir:$cells") {
       cellSplitAuditOf(spark, skewedEmbeddings(spark, dir, cells),
         s"cellsplit:$dir", nprobe, cells)
     }
@@ -465,8 +463,7 @@ object Similarity {
     */
   private def pqCodebook(spark: SparkSession, dir: String, subs: Int,
                          k: Int): Array[(Long, Array[Array[Long]])] =
-    graft.QueryCaches.memo(
-      s"sim.pqTrainedCb:$dir:$subs:$k:${spark.sparkContext.applicationId}") {
+    graft.QueryCaches.memo(s"sim.pqTrainedCb:$dir:$subs:$k") {
       trainCodebookOf(Tables.embeddings(spark, dir), subs, k, pqTrainRounds)
     }
 
@@ -668,11 +665,9 @@ object Similarity {
     * ONLY the code artifact (Round6Spec pins that the embeddings table
     * appears solely under the probe-side broadcast).
     */
-  private val indexOnce = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def pqIndexPath(spark: SparkSession, dir: String,
                                  subs: Int = 8, k: Int = 16): String =
-    indexOnce.computeIfAbsent(s"$dir|$subs|$k", _ => {
+    graft.QueryCaches.memo(s"sim.pqIndex:$dir:$subs:$k") {
       import spark.implicits._
       val base = graft.Scratch.dir("pqindex")
       pqCodebook(spark, dir, subs, k)
@@ -683,7 +678,7 @@ object Similarity {
       pqAssign(spark, dir, subs, k).select("vec_id", "ords")
         .write.mode("overwrite").parquet(s"$base/codes")
       base
-    })
+    }
 
   /** The bounded S·K codebook reload every serving path shares — the
     * same shape as the build-time driver state.
@@ -706,16 +701,13 @@ object Similarity {
     * (vec_id % 10 = 3, disjoint from the % 100 = 0 probe panel) as its
     * own parquet next to (never inside) E9's artifact.
     */
-  private val pqDeleteOnce =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def pqTombstonePath(spark: SparkSession, dir: String): String =
-    pqDeleteOnce.computeIfAbsent(dir, _ => {
+    graft.QueryCaches.memo(s"sim.pqDelete:$dir") {
       val root = graft.Scratch.dir("pqdelete")
       Tables.embeddings(spark, dir).filter(col("vec_id") % 10 === 3)
         .select("vec_id").write.mode("overwrite").parquet(s"$root/tombstones")
       root
-    })
+    }
 
   /** E21 — `ann_index_delete` (r11 verdict directive #2): takedown of
     * vectors from the PERSISTED PQ index — the delete analog of the
@@ -822,16 +814,14 @@ object Similarity {
         col(s"enc_$s").bitwiseAND(lit(255L)).cast("int")): _*).as("ords"))
   }
 
-  private val appendOnce = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def pqAppendIndexPath(spark: SparkSession, dir: String,
                                        subs: Int = 8, k: Int = 16): String =
-    appendOnce.computeIfAbsent(s"$dir|$subs|$k", _ => {
+    graft.QueryCaches.memo(s"sim.pqAppend:$dir:$subs:$k") {
       val base = graft.Scratch.dir("pqappend")
       buildPqBase(spark, dir, base, subs, k)
       appendPqDelta(spark, dir, base, subs)
       base
-    })
+    }
 
   def annIndexAppend(spark: SparkSession, dir: String, subs: Int = 8,
                      k: Int = 16, topK: Int = 5): DataFrame = {
@@ -956,8 +946,6 @@ object Similarity {
     (hits, truth)
   }
 
-  private val refreshOnce = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build gen1 (base-trained frozen codebook + E12-style delta
     * append), run the gate, refresh into gen2 iff stale; returns the
     * SERVING generation's directory. Write-once per JVM per (dir,
@@ -965,7 +953,7 @@ object Similarity {
     */
   private[graft] def pqRefreshIndexPath(spark: SparkSession, dir: String,
                                         subs: Int = 8, k: Int = 16): String =
-    refreshOnce.computeIfAbsent(s"$dir|$subs|$k", _ => {
+    graft.QueryCaches.memo(s"sim.pqRefresh:$dir:$subs:$k") {
       val root = graft.Scratch.dir("pqrefresh")
       val embs = Tables.embeddings(spark, dir)
       val baseEmbs = embs.filter(col("vec_id") % 10 =!= 0)
@@ -989,7 +977,7 @@ object Similarity {
           .write.mode("overwrite").parquet(s"$root/gen2/codes")
         s"$root/gen2"
       } else s"$root/gen1"
-    })
+    }
 
   def annIndexRefresh(spark: SparkSession, dir: String, subs: Int = 8,
                       k: Int = 16, topK: Int = 5): DataFrame = {

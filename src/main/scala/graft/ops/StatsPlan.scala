@@ -32,17 +32,12 @@ import org.apache.spark.sql.functions._
   */
 object StatsPlan {
 
-  /** Catalog-register + ANALYZE once per JVM per sf dir; returns the
+  /** Catalog-register + ANALYZE once per SparkContext per sf dir; returns the
     * (customer, orders) table names. External tables over the source
     * parquet — ANALYZE writes stats into the session catalog only.
     */
   private[graft] def analyzedTables(spark: SparkSession, dir: String): (String, String) =
-    // applicationId is part of the key (trieFor's discipline): the
-    // CREATE TABLE/ANALYZE registrations live in one SparkContext's
-    // catalog, so a dir-only memo would hand a later context in the
-    // same JVM table names that no longer resolve
-    graft.QueryCaches.memo(
-      s"statsplan.tables:$dir:${spark.sparkContext.applicationId}") {
+    graft.QueryCaches.memo(s"statsplan.tables:$dir") {
       val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val cust = s"g_stats_customer$tag"
       val ord = s"g_stats_orders$tag"
@@ -89,8 +84,7 @@ object StatsPlan {
     * byte-identical data.
     */
   private[graft] def histTables(spark: SparkSession, dir: String): (String, String) =
-    graft.QueryCaches.memo(
-      s"statsplan.hist:$dir:${spark.sparkContext.applicationId}") {
+    graft.QueryCaches.memo(s"statsplan.hist:$dir") {
       val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val hist = s"g_stats_hotorders$tag"
       val noHist = s"g_stats_hotorders_nh$tag"

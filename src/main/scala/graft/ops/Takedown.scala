@@ -56,9 +56,6 @@ object Takedown {
   private[graft] val takedownMod = 50L
   private[graft] val takedownRem = 7L
 
-  private val once =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Cascade telemetry: (requests, affected shards, graph edges lost). */
   private[graft] val cascadeStats =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Long)]()
@@ -67,7 +64,7 @@ object Takedown {
     * cascade over it, once per JVM per sf dir.
     */
   private[graft] def cascadeRoot(spark: SparkSession, dir: String): String =
-    once.computeIfAbsent(dir, _ => {
+    graft.QueryCaches.memo(s"takedown.cascade:$dir") {
       val root = graft.Scratch.dir("takedown_cascade")
       val docs = Tables.documents(spark, dir)
       val embs = Tables.embeddings(spark, dir)
@@ -135,7 +132,7 @@ object Takedown {
 
       cascadeStats.put(dir, (req.count(), nAffected, lost))
       root
-    })
+    }
 
   /** One audit row over a purged artifact: rows, takedown hits (the
     * key-joined absence proof — part of the hashed result), key sum,
@@ -208,9 +205,6 @@ object Takedown {
   private[graft] val topupHoldoutRems = Seq(23L, 31L)
   private[graft] val topupCapacity = 2048L
 
-  private val topupOnce =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** D21's packing instance (r13 verdict directive #5): D20 leaves
     * taken-down bins UNDERFULL by design (a global repack is an
     * O(corpus) rewrite) — this is the production middle path: refill
@@ -239,7 +233,7 @@ object Takedown {
     * the one-time initial pack.
     */
   private[graft] def topupRoot(spark: SparkSession, dir: String): String =
-    topupOnce.computeIfAbsent(dir, _ => {
+    graft.QueryCaches.memo(s"takedown.topup:$dir") {
       import spark.implicits._
       val root = graft.Scratch.dir("takedown_topup")
       val docs = Tables.documents(spark, dir)
@@ -287,7 +281,7 @@ object Takedown {
         PartGen.reclaimShadowed(s"$root/packed", "bin")
       }
       root
-    })
+    }
 
   /** D21 — `takedown_bin_topup`: the per-bin audit of the topped-up
     * pack — doc/token counts, the top-up contribution, the takedown

@@ -381,16 +381,13 @@ object Vacuum {
 
   // ---------------- D19: band-index vacuum ----------------
 
-  private val bandVacOnce =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The vacuum instance of D18's artifact: band-signature index +
     * takedown sidecar (the same builders as the shared artifact),
     * vacuumed immediately — the contract row serves FROM the
     * generation-1 files.
     */
   private[graft] def bandVacuumRoot(spark: SparkSession, dir: String): String =
-    bandVacOnce.computeIfAbsent(dir, _ => {
+    graft.QueryCaches.memo(s"vacuum.band:$dir") {
       val root = graft.Scratch.dir("band_tombstone_vac")
       Dedup.bandSignatures(spark, dir)
         .write.mode("overwrite").parquet(s"$root/index")
@@ -403,7 +400,7 @@ object Vacuum {
       vacuumMember(spark, root, "index", surviving, tomb,
         s"$root/index", reclaimGen0Member = true, statsKey = s"band:$dir")
       root
-    })
+    }
 
   /** D19 — `dedup_tombstone_vacuum`: D18's serve over the VACUUMED
     * band index (purged member + empty sidecar) — shares D18's oracle
@@ -414,11 +411,8 @@ object Vacuum {
 
   // ---------------- E24: PQ code-table vacuum ----------------
 
-  private val pqVacOnce =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def pqVacuumRoot(spark: SparkSession, dir: String): String =
-    pqVacOnce.computeIfAbsent(dir, _ => {
+    graft.QueryCaches.memo(s"vacuum.pq:$dir") {
       val root = graft.Scratch.dir("pqdelete_vac")
       graft.tables.Tables.embeddings(spark, dir)
         .filter(col("vec_id") % 10 === 3)
@@ -432,7 +426,7 @@ object Vacuum {
       vacuumMember(spark, root, "codes", surviving, tomb,
         s"$base/codes", reclaimGen0Member = false, statsKey = s"pq:$dir")
       root
-    })
+    }
 
   /** E24 — `ann_index_vacuum`: E21's ADC serve over the VACUUMED code
     * table — shares E21's oracle verbatim (frozen codebook, purged
@@ -443,11 +437,8 @@ object Vacuum {
 
   // ---------------- E25: graph edge-artifact vacuum ----------------
 
-  private val graphVacOnce =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def graphVacuumRoot(spark: SparkSession, dir: String): String =
-    graphVacOnce.computeIfAbsent(dir, _ => {
+    graft.QueryCaches.memo(s"vacuum.graph:$dir") {
       val root = graft.Scratch.dir("graph_tombstone_vac")
       val embs = graft.tables.Tables.embeddings(spark, dir)
       embs.filter(col("vec_id") % 10 === 3)
@@ -475,7 +466,7 @@ object Vacuum {
         edgesPath, reclaimGen0Member = false,
         statsKey = s"graph:$dir")
       root
-    })
+    }
 
   /** E25 — `ann_graph_vacuum`: E22's greedy serve over the PERSISTED
     * vacuumed graph (repaired edges read back from parquet, entries

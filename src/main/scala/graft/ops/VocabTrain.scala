@@ -134,7 +134,7 @@ object VocabTrain {
   private[graft] def mergeTableFor(name: String, merges: Seq[(String, String)])
   : org.apache.spark.broadcast.Broadcast[graft.functions.MergeTable] = {
     val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-    graft.QueryCaches.memo(s"mergeencode.table:$name:${sc.applicationId}") {
+    graft.QueryCaches.memo(s"mergeencode.table:$name") {
       sc.broadcast(graft.functions.MergeTable(merges))
     }
   }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.Dedup
 import graft.tables.Tables
@@ -24,8 +23,6 @@ import graft.tables.Tables
   * side is arrival-sized, and the sink grows by verdict rows only.
   */
 object CorpusAdmit {
-
-  private val drained = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** One micro-batch's admission work: sign the batch's delta arrivals,
     * probe the standing index of `indexDir`, verify, append verdicts.
@@ -90,36 +87,15 @@ object CorpusAdmit {
       .write.mode("overwrite").parquet(s"$sink/batch=$batchId")
   }
 
-  /** Drain a document source into verdicts: AvailableNow + checkpoint.
-    * `srcDir`/`glob` select the arriving files; `indexDir` holds the
-    * standing corpus the index and verify sides read.
-    */
-  private[graft] def drain(spark: SparkSession, srcDir: String, glob: String,
-                           indexDir: String, sink: String, ckpt: String,
-                           maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val reader = spark.readStream
-      .schema(Tables.load(spark, indexDir, "documents").schema)
-      .option("pathGlobFilter", glob)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val q = reader.parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitBatch(batch, indexDir, sink, batchId)
-      }
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Drain once per JVM per sf dir; later invocations read the sink. */
+  /** Drain once per sf dir; later invocations read the sink. */
   private def sinkPath(spark: SparkSession, dir: String): String =
-    drained.computeIfAbsent(dir, _ => {
+    graft.QueryCaches.memo(s"corpusadmit.sink:$dir") {
       val base = graft.Scratch.dir("corpus_admit")
       val (sink, ckpt) = (s"$base/sink", s"$base/ckpt")
-      drain(spark, dir, "documents.parquet", dir, sink, ckpt)
+      Drain(spark, Tables.load(spark, dir, "documents").schema, dir,
+        "documents.parquet", ckpt)(admitBatch(_, dir, sink, _))
       sink
-    })
+    }
 
   def streamCorpusAdmit(spark: SparkSession, dir: String): DataFrame =
     // partition discovery surfaces the batch=N key as a column — an

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.QualityGate
 import graft.tables.Tables
@@ -35,8 +34,6 @@ import graft.tables.Tables
   */
 object QualityAdmit {
 
-  private val drained = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Score one micro-batch under the frozen model and overwrite its
     * batchId-keyed verdict partition. Exposed so the spec can drive a
     * split source and a redelivery.
@@ -48,34 +45,17 @@ object QualityAdmit {
         QualityGate.keepCol(b0, b1).as("keep"))
       .write.mode("overwrite").parquet(s"$sink/batch=$batchId")
 
-  private[graft] def drain(spark: SparkSession, srcDir: String, glob: String,
-                           modelDir: String, sink: String, ckpt: String,
-                           maxFilesPerTrigger: Option[Int] = None): Unit = {
-    // the frozen artifact: trained once, before the stream starts
-    val (b0, b1) = QualityGate.trainedTicks(spark, modelDir)
-    val reader = spark.readStream
-      .schema(Tables.load(spark, modelDir, "documents").schema)
-      .option("pathGlobFilter", glob)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val q = reader.parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scoreBatch(batch, b0, b1, sink, batchId)
-      }
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Drain once per JVM per sf dir; later invocations read the sink. */
+  /** Drain once per sf dir; later invocations read the sink. */
   private def sinkPath(spark: SparkSession, dir: String): String =
-    drained.computeIfAbsent(dir, _ => {
+    graft.QueryCaches.memo(s"qualityadmit.sink:$dir") {
       val base = graft.Scratch.dir("quality_admit")
       val (sink, ckpt) = (s"$base/sink", s"$base/ckpt")
-      drain(spark, dir, "documents.parquet", dir, sink, ckpt)
+      // the frozen artifact: trained once, before the stream starts
+      val (b0, b1) = QualityGate.trainedTicks(spark, dir)
+      Drain(spark, Tables.load(spark, dir, "documents").schema, dir,
+        "documents.parquet", ckpt)(scoreBatch(_, b0, b1, sink, _))
       sink
-    })
+    }
 
   def streamQualityAdmit(spark: SparkSession, dir: String): DataFrame =
     QualityGate.keepAudit(

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.tables.Tables
 
@@ -28,8 +27,6 @@ import graft.tables.Tables
   */
 object ShardRoute {
 
-  private val drained = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Route one micro-batch and overwrite its batchId-keyed partition.
     * Exposed so the spec can drive a split source and a redelivery.
     */
@@ -38,30 +35,15 @@ object ShardRoute {
     batch.select(graft.sources.SourceQueries.shardRouteColsBpe(nshards): _*)
       .write.mode("overwrite").parquet(s"$sink/batch=$batchId")
 
-  private[graft] def drain(spark: SparkSession, srcDir: String, glob: String,
-                           sink: String, ckpt: String, nshards: Int): Unit = {
-    val q = spark.readStream
-      .schema(Tables.load(spark, srcDir, "documents").schema)
-      .option("pathGlobFilter", glob)
-      .parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        routeBatch(batch, nshards, sink, batchId)
-      }
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Drain once per JVM per sf dir; later invocations read the sink. */
+  /** Drain once per sf dir; later invocations read the sink. */
   private def sinkPath(spark: SparkSession, dir: String): String =
-    drained.computeIfAbsent(dir, _ => {
+    graft.QueryCaches.memo(s"shardroute.sink:$dir") {
       val base = graft.Scratch.dir("shard_route")
       val (sink, ckpt) = (s"$base/sink", s"$base/ckpt")
-      drain(spark, dir, "documents.parquet", sink, ckpt, 8)
+      Drain(spark, Tables.load(spark, dir, "documents").schema, dir,
+        "documents.parquet", ckpt)(routeBatch(_, 8, sink, _))
       sink
-    })
+    }
 
   /** The DUAL-accounting manifest aggregated from the routed sink —
     * I17's oracle verbatim: whitespace AND subword budgets per shard

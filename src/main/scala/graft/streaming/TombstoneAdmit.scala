@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.{Dedup, Dedup2}
 import graft.tables.Tables
@@ -37,9 +36,6 @@ import graft.tables.Tables
   */
 object TombstoneAdmit {
 
-  private val drained =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** One micro-batch's takedown work: extract the batch's takedown
     * requests and land them in the batch's own sidecar partition.
     * Exposed so the spec can drive a SPLIT source and redeliveries.
@@ -50,40 +46,19 @@ object TombstoneAdmit {
       .select("doc_id")
       .write.mode("overwrite").parquet(s"$sink/batch=$batchId")
 
-  /** Drain a document source into tombstone sidecar rows:
-    * AvailableNow + checkpoint (G13's scheduled-drain shape).
-    */
-  private[graft] def drain(spark: SparkSession, srcDir: String, glob: String,
-                           indexDir: String, sink: String, ckpt: String,
-                           maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val reader = spark.readStream
-      .schema(Tables.load(spark, indexDir, "documents").schema)
-      .option("pathGlobFilter", glob)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val q = reader.parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        tombstoneBatch(batch, sink, batchId)
-      }
-      .start()
-    q.awaitTermination()
-  }
-
   /** The standing artifact root for a dir: the band-signature index
     * written once (D18's builder), the sidecar populated by the DRAIN
-    * instead of a batch write. Built once per JVM per sf dir.
+    * instead of a batch write. Built once per sf dir.
     */
   private def rootPath(spark: SparkSession, dir: String): String =
-    drained.computeIfAbsent(dir, _ => {
+    graft.QueryCaches.memo(s"tombstoneadmit.root:$dir") {
       val root = graft.Scratch.dir("tombstone_admit")
       Dedup.bandSignatures(spark, dir)
         .write.mode("overwrite").parquet(s"$root/index")
-      drain(spark, dir, "documents.parquet", dir,
-        s"$root/tombstones", s"$root/ckpt")
+      Drain(spark, Tables.load(spark, dir, "documents").schema, dir,
+        "documents.parquet", s"$root/ckpt")(tombstoneBatch(_, s"$root/tombstones", _))
       root
-    })
+    }
 
   def streamTombstoneAdmit(spark: SparkSession, dir: String): DataFrame =
     Dedup2.tombstoneServeFrom(spark, dir, rootPath(spark, dir))

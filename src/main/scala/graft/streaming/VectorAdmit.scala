@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.GraphAnn
 import graft.tables.Tables
@@ -40,8 +39,6 @@ import graft.tables.Tables
   */
 object VectorAdmit {
 
-  private val drained = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** One micro-batch's admission work, exposed so the multi-batch spec
     * can drive a SPLIT source and prove per-batch independence and
     * redelivery idempotence.
@@ -51,36 +48,15 @@ object VectorAdmit {
     GraphAnn.streamInsertBatch(batch, dir)
       .write.mode("overwrite").parquet(s"$sink/batch=$batchId")
 
-  /** Drain an embeddings source into insert-edge partitions:
-    * AvailableNow + checkpoint — G13's scheduled-drain shape, so each
-    * tick resumes from the previous tick's offsets.
-    */
-  private[graft] def drain(spark: SparkSession, srcDir: String, glob: String,
-                           dir: String, sink: String, ckpt: String,
-                           maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val reader = spark.readStream
-      .schema(Tables.load(spark, dir, "embeddings").schema)
-      .option("pathGlobFilter", glob)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val q = reader.parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitBatch(batch, dir, sink, batchId)
-      }
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Drain once per JVM per sf dir; later invocations read the sink. */
+  /** Drain once per sf dir; later invocations read the sink. */
   private def sinkPath(spark: SparkSession, dir: String): String =
-    drained.computeIfAbsent(dir, _ => {
+    graft.QueryCaches.memo(s"vectoradmit.sink:$dir") {
       val base = graft.Scratch.dir("vector_admit")
       val (sink, ckpt) = (s"$base/sink", s"$base/ckpt")
-      drain(spark, dir, "embeddings.parquet", dir, sink, ckpt)
+      Drain(spark, Tables.load(spark, dir, "embeddings").schema, dir,
+        "embeddings.parquet", ckpt)(admitBatch(_, dir, sink, _))
       sink
-    })
+    }
 
   def streamVectorAdmit(spark: SparkSession, dir: String): DataFrame = {
     val dEdges = Tables.parquet(spark, sinkPath(spark, dir))

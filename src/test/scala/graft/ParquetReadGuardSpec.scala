@@ -3,37 +3,63 @@ package graft
 import java.io.File
 
 import scala.io.Source
+import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every batch parquet read in `src/main` goes through `Tables.parquet`,
-  * which learns the schema without a Spark job. A direct reader call
-  * elsewhere would bring the inference job back unseen.
+/** Source rules for `src/main`, each a pattern allowed only in the files
+  * that own the decision it names:
+  *  - every batch parquet read goes through `Tables.parquet`, which learns
+  *    the schema without a Spark job; a direct reader call elsewhere would
+  *    bring the inference job back unseen;
+  *  - every per-JVM reuse goes through `QueryCaches.memo`, which is the
+  *    only place that builds exactly once and scopes keys on the
+  *    `SparkContext`;
+  *  - every file-stream drain goes through `streaming.Drain`
+  *    (`CheckpointRestart.tick` drains its own windowed stream).
   */
 class ParquetReadGuardSpec extends AnyFunSuite {
-  private val allowed = Set("Tables.scala", "GraftParquetBridge.scala")
-  // `.read` then any option/schema calls, then `.parquet(` or a parquet format
-  private val direct =
-    """\.read\s*(\.\w+\([^()]*\)\s*)*\.(parquet\(|format\(\s*"parquet"\s*\))""".r
+  private case class Rule(test: String, pattern: Regex, allowed: Set[String], fix: String)
+
+  private val rules = Seq(
+    Rule("no direct spark.read.parquet outside Tables.parquet and its bridge",
+      // `.read` then any option/schema calls, then `.parquet(` or a parquet format
+      """\.read\s*(\.\w+\([^()]*\)\s*)*\.(parquet\(|format\(\s*"parquet"\s*\))""".r,
+      Set("Tables.scala", "GraftParquetBridge.scala"), "read parquet through Tables.parquet"),
+    Rule("no computeIfAbsent outside QueryCaches", """computeIfAbsent\(""".r,
+      Set("QueryCaches.scala"), "memoize through QueryCaches.memo"),
+    Rule("no applicationId outside QueryCaches", "applicationId".r,
+      Set("QueryCaches.scala"), "QueryCaches.memo scopes keys on the SparkContext"),
+    Rule("no Trigger.AvailableNow outside the drain helper and CheckpointRestart",
+      """Trigger\.AvailableNow\(\)""".r, Set("Drain.scala", "Events.scala"),
+      "drain file streams through streaming.Drain"))
 
   private def scalaFiles(f: File): Seq[File] =
     if (f.isDirectory) Option(f.listFiles).toSeq.flatten.sortBy(_.getName).flatMap(scalaFiles)
     else if (f.getName.endsWith(".scala")) Seq(f)
     else Nil
 
-  test("no direct spark.read.parquet outside Tables.parquet and its bridge") {
+  private lazy val sources: Seq[(File, String)] = {
     val main = new File("src/main")
     assert(main.isDirectory, s"run from the project root (no ${main.getAbsolutePath})")
     val files = scalaFiles(main)
     assert(files.size > 50)
-    val hits = files.filterNot(f => allowed(f.getName)).flatMap { f =>
+    files.map { f =>
       val src = Source.fromFile(f, "UTF-8")
-      val text = try src.mkString finally src.close()
-      direct.findAllMatchIn(text).map { m =>
-        val line = text.substring(0, m.start).count(_ == '\n') + 1
-        s"${f.getPath}:$line: ${m.matched.replaceAll("\\s+", " ")}"
-      }
+      f -> (try src.mkString finally src.close())
     }
-    assert(hits.isEmpty, "read parquet through Tables.parquet:\n" + hits.mkString("\n"))
+  }
+
+  rules.foreach { rule =>
+    test(rule.test) {
+      val hits = sources.filterNot { case (f, _) => rule.allowed(f.getName) }.flatMap {
+        case (f, text) =>
+          rule.pattern.findAllMatchIn(text).map { m =>
+            val line = text.substring(0, m.start).count(_ == '\n') + 1
+            s"${f.getPath}:$line: ${m.matched.replaceAll("\\s+", " ")}"
+          }
+      }
+      assert(hits.isEmpty, s"${rule.fix}:\n" + hits.mkString("\n"))
+    }
   }
 }

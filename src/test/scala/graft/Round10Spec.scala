@@ -31,16 +31,14 @@ class Round10Spec extends AnyFunSuite {
   }
 
   // --- ADVICE low #2: ANALYZE/CREATE TABLE registrations live in ONE
-  // SparkContext's catalog, so the memo key must carry applicationId
-  // (trieFor's discipline) — a dir-only key would hand a later context
+  // SparkContext's catalog — a dir-only key would hand a later context
   // in the same JVM table names that no longer resolve.
   test("StatsPlan memoizes catalog registrations per applicationId, not per dir") {
     StatsPlan.analyzedTables(spark, dir)
-    val appId = spark.sparkContext.applicationId
-    assert(QueryCaches.has(s"statsplan.tables:$dir:$appId"),
-      "analyzedTables memo key must include the applicationId")
-    assert(!QueryCaches.has(s"statsplan.tables:$dir"),
-      "dir-only memo key must no longer exist")
+    assert(QueryCaches.has(s"statsplan.tables:$dir"),
+      "analyzedTables must memoize under the active context")
+    assert(!QueryCaches.has(s"statsplan.tables:$dir", appId = "a-later-context"),
+      "another context must not see this context's registrations")
   }
 
   // --- ADVICE low #4: corpus text carrying U+001F (the symbol

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.GraphAnn
-import graft.streaming.VectorAdmit
+import graft.streaming.{Drain, VectorAdmit}
 
 /** Round-11 directive #5 witnesses: `stream_vector_admit` — E18's
   * search-based graph insert as an AvailableNow drain. The claims:
@@ -45,8 +45,9 @@ class Round11dSpec extends AnyFunSuite {
     graft.tables.Tables.embeddings(spark, dir)
       .repartition(3).write.mode("overwrite").parquet(s"$root/src")
     val (sink, ckpt) = (s"$root/sink", s"$root/ckpt")
-    VectorAdmit.drain(spark, s"$root/src", "*.parquet", dir, sink, ckpt,
-      maxFilesPerTrigger = Some(1))
+    Drain(spark, graft.tables.Tables.load(spark, dir, "embeddings").schema,
+      s"$root/src", "*.parquet", ckpt, maxFilesPerTrigger = Some(1))(
+      VectorAdmit.admitBatch(_, dir, sink, _))
     val batches = new java.io.File(sink).listFiles
       .count(_.getName.startsWith("batch="))
     info(s"drained in $batches micro-batches")

@@ -288,8 +288,9 @@ class Round6bSpec extends AnyFunSuite {
         java.nio.file.Files.move(part.toPath,
           java.nio.file.Paths.get(s"$srcDir/$name.parquet"))
       }
-    graft.streaming.CorpusAdmit.drain(spark, srcDir, "*.parquet", sf,
-      sink, ckpt, maxFilesPerTrigger = Some(1))
+    graft.streaming.Drain(spark, graft.tables.Tables.load(spark, sf, "documents").schema,
+      srcDir, "*.parquet", ckpt, maxFilesPerTrigger = Some(1))(
+      graft.streaming.CorpusAdmit.admitBatch(_, sf, sink, _))
     // the checkpoint records one offset file per micro-batch
     val batches = new java.io.File(s"$ckpt/offsets").listFiles
       .count(f => f.getName.forall(_.isDigit))
