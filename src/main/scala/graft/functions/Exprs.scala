@@ -4,214 +4,208 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions (SURVEY.md §3 functions/) — used on hot
-  * paths where composing builtins would allocate intermediates:
+/* Native Catalyst expressions for the hot paths where composing builtins
+  * would allocate intermediates per row:
   *
-  *  - [[CosineSim]] fuses `dot/sqrt(Σa²·Σb²)` into one loop over the two
-  *    arrays. The `zip_with`+`aggregate` formulation materializes a
-  *    products array per row; at 100 TB of 1k-dim vectors that's pure
-  *    garbage-collector load.
-  *  - [[DotProduct]] / [[IntSqDist]] are the fused dot and exact
-  *    integer-tick squared L2 (LSH bucketing, IVF/PQ geometry), with the
-  *    composed formulations' NULL semantics: length mismatch or a null
-  *    element nulls the result instead of silently truncating.
-  *  - [[RollHash64]] is a polynomial (base-31) rolling hash over UTF8 or
-  *    raw binary bytes — a single-pass 64-bit content fingerprint, no
-  *    md5 digest allocation.
-  *  - [[Mix64]] / [[Combine64]] are wrapping mod-2⁶⁴ hash combinators
-  *    (MinHash permutations, band signatures).
+  *  - [[CosineSim]] and [[DotProduct]]: fused cosine and dot product over
+  *    two `array<double>`.
+  *  - [[IntSqDist]]: exact squared L2 over two integer-tick `array<bigint>`
+  *    (LSH bucketing, IVF/PQ geometry).
+  *  - [[PqNearest]] and [[PqDists]]: one PQ subspace's nearest codeword,
+  *    and its distances to every codeword.
+  *  - [[RollHash64]]: base-31 rolling hash over UTF-8 or raw binary bytes.
+  *  - [[RollWindowHash64]]: every sliding-window [[RollHash64]] over a
+  *    token array, in one pass.
+  *  - [[Mix64]], [[Avalanche64]] and [[Combine64]]: wrapping mod-2⁶⁴ hash
+  *    combinators (MinHash permutations, sort keys, band signatures).
+  *  - [[JaccardSim]]: distinct-set Jaccard over two `array<string>`.
+  *  - [[RedactCascade]]: the email → phone → id PII cascade.
   *
-  * All implement `doGenCode`, so they inline into whole-stage codegen
-  * exactly like builtins.
+  * Invariant: each expression has ONE kernel, a static method on its
+  * companion object, and `nullSafeEval` and `doGenCode` both call it. So
+  * constant folding, the interpreted fallback and whole-stage codegen
+  * cannot disagree. A `doGenCode` is that call plus, for a nullable
+  * expression, its null flag. The loops live in real JVM methods: the JIT
+  * compiles them once, and the generated stage method stays under the
+  * JVM's 8 KB JIT limit however many expressions fuse into it.
+  */
+
+/** Type check and NULL rule shared by the expressions over arrays. */
+object ArrayArgs {
+  /** Type check of an expression over two `array<elem>` arguments. */
+  def check(e: BinaryExpression, elem: DataType): TypeCheckResult =
+    (e.left.dataType, e.right.dataType) match {
+      case (ArrayType(l, _), ArrayType(r, _)) if l == elem && r == elem =>
+        TypeCheckResult.TypeCheckSuccess
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        s"${e.prettyName} expects two array<${elem.simpleString}> arguments, got " +
+          s"(${l.simpleString}, ${r.simpleString})")
+    }
+
+  def noNulls(xs: ArrayData): Boolean = {
+    var i = 0
+    while (i < xs.numElements()) {
+      if (xs.isNullAt(i)) return false
+      i += 1
+    }
+    true
+  }
+
+  /** The NULL rule of the composed array formulations: `zip_with` pads a
+    * length mismatch with nulls and a null element nulls the fold, so a
+    * result exists only for equal lengths and no null element on either
+    * side — never a silently truncated or zero-filled one.
+    */
+  def aligned(a: ArrayData, b: ArrayData): Boolean =
+    a.numElements() == b.numElements() && noNulls(a) && noNulls(b)
+
+  /** [[aligned]] against every codeword of a PQ codebook, none null. */
+  def alignedCodebook(subv: ArrayData, codebook: ArrayData): Boolean = {
+    var c = 0
+    while (c < codebook.numElements()) {
+      if (codebook.isNullAt(c) || !aligned(subv, codebook.getArray(c))) return false
+      c += 1
+    }
+    true
+  }
+}
+
+/** Cosine `dot/sqrt(Σa²·Σb²)` in one loop; the `zip_with`+`aggregate`
+  * form materializes a products array per row. NULL unless
+  * [[ArrayArgs.aligned]], like its composed reference.
   */
 case class CosineSim(left: Expression, right: Expression)
   extends BinaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_cosine expects two array<double> arguments, got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = ArrayArgs.check(this, DoubleType)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_cosine"
+  override def nullable: Boolean = true
 
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val ys = b.asInstanceOf[ArrayData]
-    val n = math.min(xs.numElements(), ys.numElements())
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = xs.getDouble(i); val y = ys.getDouble(i)
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    dot / math.sqrt(na * nb)
+    val (xs, ys) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (ArrayArgs.aligned(xs, ys)) CosineSim.cosine(xs, ys) else null
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = $a.getDouble($i);
-         |  double $y = $b.getDouble($i);
-         |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |}
-         |${ev.value} = $dot / java.lang.Math.sqrt($na * $nb);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.isNull} = !graft.functions.ArrayArgs.aligned($a, $b);
+         |if (!${ev.isNull}) ${ev.value} = graft.functions.CosineSim.cosine($a, $b);""".stripMargin)
 
   override protected def withNewChildrenInternal(newLeft: Expression,
                                                  newRight: Expression): CosineSim =
     copy(left = newLeft, right = newRight)
 }
 
-/** Fused dot product over two array<double> columns — one codegen'd loop,
-  * no per-row `zip_with` product array. The LSH bucket computations
-  * evaluate a dot against every hyperplane literal per row (4× today,
-  * more planes at scale); the allocation saved is per row × per plane.
+object CosineSim {
+  /** Requires [[ArrayArgs.aligned]] arrays. */
+  def cosine(xs: ArrayData, ys: ArrayData): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < xs.numElements()) {
+      val x = xs.getDouble(i); val y = ys.getDouble(i)
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    dot / math.sqrt(na * nb)
+  }
+}
+
+/** Fused dot product over two array<double> columns — no per-row
+  * `zip_with` product array. The LSH bucket computations evaluate a dot
+  * against every hyperplane literal per row, so the allocation saved is
+  * per row × per plane. NULL unless [[ArrayArgs.aligned]].
   */
 case class DotProduct(left: Expression, right: Expression)
   extends BinaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_dot expects two array<double> arguments, got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = ArrayArgs.check(this, DoubleType)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_dot"
-  // returns NULL for length-mismatched or null-element inputs even when
-  // the arrays themselves are non-null — codegen must keep a real isNull
   override def nullable: Boolean = true
 
-  // composed-dot NULL semantics: zip_with pads a length mismatch with
-  // nulls and a null product nulls the whole fold — so mismatch or a
-  // null element returns NULL here too, never a silent partial dot
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val ys = b.asInstanceOf[ArrayData]
-    val n = xs.numElements()
-    if (n != ys.numElements()) return null
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      if (xs.isNullAt(i) || ys.isNullAt(i)) return null
-      acc += xs.getDouble(i) * ys.getDouble(i)
-      i += 1
-    }
-    acc
+    val (xs, ys) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (ArrayArgs.aligned(xs, ys)) DotProduct.dot(xs, ys) else null
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = $a.numElements();
-         |double $acc = 0.0;
-         |if ($n != $b.numElements()) { ${ev.isNull} = true; }
-         |for (int $i = 0; !${ev.isNull} && $i < $n; $i++) {
-         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |  $acc += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.isNull} = !graft.functions.ArrayArgs.aligned($a, $b);
+         |if (!${ev.isNull}) ${ev.value} = graft.functions.DotProduct.dot($a, $b);""".stripMargin)
 
   override protected def withNewChildrenInternal(newLeft: Expression,
                                                  newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
 }
 
-/** Fused exact squared L2 over two array<bigint> tick columns — the
-  * quantized-vector geometry primitive (IVF assignment, PQ): one integer
-  * loop, no intermediate diff array, exact long arithmetic (callers
-  * bound tick magnitudes so the squared sums fit).
-  */
-case class IntSqDist(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_int_sqdist expects two array<bigint> arguments, got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_int_sqdist"
-  // see DotProduct.nullable
-  override def nullable: Boolean = true
-
-  // same NULL semantics as DotProduct: mismatch or null element -> NULL
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val ys = b.asInstanceOf[ArrayData]
-    val n = xs.numElements()
-    if (n != ys.numElements()) return null
-    var acc = 0L
+object DotProduct {
+  /** Requires [[ArrayArgs.aligned]] arrays. */
+  def dot(xs: ArrayData, ys: ArrayData): Double = {
+    var acc = 0.0
     var i = 0
-    while (i < n) {
-      if (xs.isNullAt(i) || ys.isNullAt(i)) return null
-      val d = xs.getLong(i) - ys.getLong(i)
-      acc += d * d
+    while (i < xs.numElements()) {
+      acc += xs.getDouble(i) * ys.getDouble(i)
       i += 1
     }
     acc
   }
+}
+
+/** Fused exact squared L2 over two array<bigint> tick columns — the
+  * quantized-vector geometry primitive (IVF assignment, PQ): no
+  * intermediate diff array, exact long arithmetic (callers bound tick
+  * magnitudes so the squared sums fit). NULL unless [[ArrayArgs.aligned]].
+  */
+case class IntSqDist(left: Expression, right: Expression)
+  extends BinaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = ArrayArgs.check(this, LongType)
+  override def dataType: DataType = LongType
+  override def prettyName: String = "graft_int_sqdist"
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val (xs, ys) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (ArrayArgs.aligned(xs, ys)) IntSqDist.sqDist(xs, ys) else null
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = $a.numElements();
-         |long $acc = 0L;
-         |if ($n != $b.numElements()) { ${ev.isNull} = true; }
-         |for (int $i = 0; !${ev.isNull} && $i < $n; $i++) {
-         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |  long $d = $a.getLong($i) - $b.getLong($i);
-         |  $acc += $d * $d;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.isNull} = !graft.functions.ArrayArgs.aligned($a, $b);
+         |if (!${ev.isNull}) ${ev.value} = graft.functions.IntSqDist.sqDist($a, $b);""".stripMargin)
 
   override protected def withNewChildrenInternal(newLeft: Expression,
                                                  newRight: Expression): IntSqDist =
     copy(left = newLeft, right = newRight)
 }
 
+object IntSqDist {
+  /** The one exact integer-L2 loop ([[PqNearest]] and [[PqDists]] run it
+    * per codeword). Requires [[ArrayArgs.aligned]] arrays.
+    */
+  def sqDist(xs: ArrayData, ys: ArrayData): Long = {
+    var acc = 0L
+    var i = 0
+    while (i < xs.numElements()) {
+      val d = xs.getLong(i) - ys.getLong(i)
+      acc += d * d
+      i += 1
+    }
+    acc
+  }
+}
+
+/** Polynomial (base-31) rolling hash over UTF-8 or raw binary bytes — a
+  * single-pass 64-bit content fingerprint, no digest allocation. String
+  * and binary inputs with identical bytes hash identically: binary
+  * payloads (media chunks) are hashed raw, with no string cast that would
+  * trip on frames split mid-codepoint.
+  */
 case class RollHash64(child: Expression)
   extends UnaryExpression {
 
@@ -223,47 +217,38 @@ case class RollHash64(child: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_rollhash64"
 
-  // string and binary inputs with identical bytes hash identically —
-  // binary payloads (media chunks) are hashed raw, no string cast that
-  // would trip on frames split mid-codepoint
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = child.dataType match {
-      case StringType => input.asInstanceOf[UTF8String].getBytes
-      case _ => input.asInstanceOf[Array[Byte]]
-    }
-    var h = 1125899906842597L
-    var i = 0
-    while (i < bytes.length) {
-      h = 31 * h + (bytes(i) & 0xff)
-      i += 1
-    }
-    h
-  }
+  override def nullSafeEval(input: Any): Any = RollHash64.hash(child.dataType match {
+    case StringType => input.asInstanceOf[UTF8String].getBytes
+    case _ => input.asInstanceOf[Array[Byte]]
+  })
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
-      val bytes = ctx.freshName("bytes")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      val src = if (child.dataType == StringType) s"$c.getBytes()" else c
-      s"""
-         |byte[] $bytes = $src;
-         |long $h = 1125899906842597L;
-         |for (int $i = 0; $i < $bytes.length; $i++) {
-         |  $h = 31L * $h + ($bytes[$i] & 0xff);
-         |}
-         |${ev.value} = $h;
-       """.stripMargin
+      val bytes = if (child.dataType == StringType) s"$c.getBytes()" else c
+      s"${ev.value} = graft.functions.RollHash64.hash($bytes);"
     })
 
   override protected def withNewChildInternal(newChild: Expression): RollHash64 =
     copy(child = newChild)
 }
 
+object RollHash64 {
+  /** The seed of every graft base-31 fold ([[RollWindowHash64]], [[Combine64]]). */
+  val Seed = 1125899906842597L
+
+  def hash(bytes: Array[Byte]): Long = {
+    var h = Seed
+    var i = 0
+    while (i < bytes.length) {
+      h = 31L * h + (bytes(i) & 0xff)
+      i += 1
+    }
+    h
+  }
+}
+
 /** All sliding-window [[RollHash64]] values over a token array in ONE
-  * O(total-bytes) pass — the Rabin-Karp prefix-product identity applied
-  * to the positional-dedup hot path (guide §1.2 "per-task work" after
-  * the distributed shape is right).
+  * O(total-bytes) pass — the Rabin-Karp prefix-product identity.
   *
   * Element i of the result is VALUE-IDENTICAL to
   * `RollHash64(concat_ws(' ', slice(toks, i+1, win)))` for every
@@ -274,8 +259,7 @@ case class RollHash64(child: Expression)
   * The composed formulation materializes every window STRING
   * (O(bytes × win) character copies + hashing); this expression hashes
   * each byte once and reads each window off the prefix table.
-  * RollWindowHash64Spec pins the per-element equality against the
-  * composed form, so the D14/F17 oracles are untouched by construction.
+  * ExprsSpec pins the per-element equality against the composed form.
   */
 case class RollWindowHash64(child: Expression, win: Int)
   extends UnaryExpression {
@@ -293,10 +277,6 @@ case class RollWindowHash64(child: Expression, win: Int)
   override def nullSafeEval(input: Any): Any =
     RollWindowHash64.hashes(input.asInstanceOf[ArrayData], win)
 
-  // one static call — the loops live in a real JVM method (JIT-compiled,
-  // immune to the 8 KB generated-method cliff a fully inlined table
-  // build would risk), and the expression still fuses into whole-stage
-  // codegen like the other natives
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = graft.functions.RollWindowHash64.hashes($c, $win);")
@@ -306,8 +286,6 @@ case class RollWindowHash64(child: Expression, win: Int)
 }
 
 object RollWindowHash64 {
-  private val Seed = 1125899906842597L
-
   /** All window hashes over `toks` joined by single spaces (exactly the
     * byte stream `concat_ws(' ', ...)` produces — split-derived tokens
     * are never null, and empty tokens join like any other). Returns an
@@ -322,9 +300,9 @@ object RollWindowHash64 {
     var l = n - 1 // the n−1 single-space separators
     var t = 0
     while (t < n) {
-      // r15 (advisor): getUTF8String on a null slot reads garbage bytes
-      // from UnsafeArrayData — no caller produces null tokens (split()
-      // output), so fail LOUDLY instead of hashing undefined memory
+      // getUTF8String on a null slot reads undefined bytes from
+      // UnsafeArrayData; no caller produces null tokens (split() output),
+      // so fail loudly instead of hashing them
       if (toks.isNullAt(t))
         throw new IllegalArgumentException(
           "graft_rollwindow64 does not support null array elements " +
@@ -381,7 +359,7 @@ object RollWindowHash64 {
     while (i <= n - win) {
       val a = off(i)
       val e = if (i + win < n) off(i + win) - 1 else l
-      out(i) = pre(e) + (Seed - pre(a)) * pow(e - a)
+      out(i) = pre(e) + (RollHash64.Seed - pre(a)) * pow(e - a)
       i += 1
     }
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
@@ -406,14 +384,18 @@ case class Mix64(child: Expression, a: Long, b: Long)
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_mix64"
 
-  override def nullSafeEval(input: Any): Any =
-    a * input.asInstanceOf[Long] + b
+  override def nullSafeEval(input: Any): Any = Mix64.mix(input.asInstanceOf[Long], a, b)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = ${a}L * $c + ${b}L;")
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.Mix64.mix($c, ${a}L, ${b}L);")
 
   override protected def withNewChildInternal(newChild: Expression): Mix64 =
     copy(child = newChild)
+}
+
+object Mix64 {
+  def mix(h: Long, a: Long, b: Long): Long = a * h + b
 }
 
 /** SplitMix64 finalizer (Steele/Lea/Flood's SplittableRandom mix, the
@@ -436,32 +418,30 @@ case class Avalanche64(child: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_avalanche64"
 
-  override def nullSafeEval(input: Any): Any = {
-    var z = input.asInstanceOf[Long]
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
+  override def nullSafeEval(input: Any): Any = Avalanche64.scramble(input.asInstanceOf[Long])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val z = ctx.freshName("z")
-      s"""
-         |long $z = $c;
-         |$z = ($z ^ ($z >>> 30)) * 0xBF58476D1CE4E5B9L;
-         |$z = ($z ^ ($z >>> 27)) * 0x94D049BB133111EBL;
-         |${ev.value} = $z ^ ($z >>> 31);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.functions.Avalanche64.scramble($c);")
 
   override protected def withNewChildInternal(newChild: Expression): Avalanche64 =
     copy(child = newChild)
 }
 
+object Avalanche64 {
+  def scramble(h: Long): Long = {
+    var z = h
+    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+    z ^ (z >>> 31)
+  }
+}
+
 /** Wrapping polynomial fold over an array<long>: s = 31·s + xᵢ (mod 2⁶⁴)
-  * from seed 1125899906842597 — combines a band index + its minhash rows
+  * from [[RollHash64.Seed]] — combines a band index + its minhash rows
   * into one 64-bit band signature in a single pass, again with wrapping
   * (not throwing) overflow semantics and a portable mod-2⁶⁴ definition.
+  * A null ELEMENT nulls the result (SQL semantics): hashing nulls as 0
+  * would collide distinct inputs for SQL callers.
   */
 case class Combine64(child: Expression)
   extends UnaryExpression {
@@ -474,41 +454,33 @@ case class Combine64(child: Expression)
     }
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_combine64"
-  // a null ELEMENT nulls the result even when the array itself is
-  // non-null — without this override codegen would constant-fold isNull
-  // to false and emit 0-hash garbage for such rows
   override def nullable: Boolean = true
 
-  // a null ELEMENT nulls the whole hash (SQL semantics) — silently
-  // hashing nulls as 0 would collide distinct inputs for SQL callers
   override def nullSafeEval(input: Any): Any = {
     val xs = input.asInstanceOf[ArrayData]
-    var s = 1125899906842597L
+    if (ArrayArgs.noNulls(xs)) Combine64.combine(xs) else null
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.isNull} = !graft.functions.ArrayArgs.noNulls($c);
+         |if (!${ev.isNull}) ${ev.value} = graft.functions.Combine64.combine($c);""".stripMargin)
+
+  override protected def withNewChildInternal(newChild: Expression): Combine64 =
+    copy(child = newChild)
+}
+
+object Combine64 {
+  /** Requires no null element. */
+  def combine(xs: ArrayData): Long = {
+    var s = RollHash64.Seed
     var i = 0
     while (i < xs.numElements()) {
-      if (xs.isNullAt(i)) return null
       s = 31L * s + xs.getLong(i)
       i += 1
     }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |long $s = 1125899906842597L;
-         |for (int $i = 0; $i < $c.numElements(); $i++) {
-         |  if ($c.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |  $s = 31L * $s + $c.getLong($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Combine64 =
-    copy(child = newChild)
 }
 
 /** PQ nearest-codeword argmin: left = one subspace's tick subvector
@@ -517,219 +489,137 @@ case class Combine64(child: Expression)
   * order-preserving encoding `d2 · 256 + ordinal` of the nearest
   * codeword under exact integer L2, ties to the lowest ordinal — so a
   * numeric min over the encodings IS the (d2, code) lexicographic
-  * argmin, and callers decode with `>> 8` / `& 255`.
+  * argmin, and callers decode with `>> 8` / `& 255`. NULL for an empty
+  * or over-256 codebook, or unless [[ArrayArgs.alignedCodebook]].
   *
   * Why native: the composed formulation (`array_min` over k structs of
   * [[IntSqDist]] calls, times S subspaces) inlines k·S distance loops
   * into one generated method — past the JVM's 8 KB JIT limit the WHOLE
   * fused stage runs as interpreted bytecode, including any join loop
-  * fused after it. One small per-subspace loop keeps the stage JIT'd.
+  * fused after it. One kernel call per subspace keeps the stage JIT'd.
   * Encoding headroom: d2 ≤ d·maxdiff², so d2·256 fits a long for any
   * realistic tick scale (10⁻⁶ ticks of unit-norm floats: ~3·10¹⁶).
   */
 case class PqNearest(left: Expression, right: Expression)
   extends BinaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(ArrayType(LongType, _), _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"graft_pq_nearest expects (array<bigint>, array<array<bigint>>), got " +
-        s"(${l.simpleString}, ${r.simpleString})")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = PqDists.check(this)
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_pq_nearest"
-  // empty codebook, length-mismatched codeword, or null element -> NULL
   override def nullable: Boolean = true
 
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val subv = a.asInstanceOf[ArrayData]
-    val cb = b.asInstanceOf[ArrayData]
-    val k = cb.numElements()
-    if (k == 0 || k > 256) return null
-    val n = subv.numElements()
-    var best = Long.MaxValue
-    var c = 0
-    while (c < k) {
-      if (cb.isNullAt(c)) return null
-      val cw = cb.getArray(c)
-      if (cw.numElements() != n) return null
-      var acc = 0L
-      var i = 0
-      while (i < n) {
-        if (subv.isNullAt(i) || cw.isNullAt(i)) return null
-        val d = subv.getLong(i) - cw.getLong(i)
-        acc += d * d
-        i += 1
-      }
-      val enc = (acc << 8) | c
-      if (enc < best) best = enc
-      c += 1
-    }
-    best
+    val (subv, cb) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (PqNearest.valid(subv, cb)) PqNearest.nearest(subv, cb) else null
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val k = ctx.freshName("k")
-      val n = ctx.freshName("n")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val cw = ctx.freshName("cw")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      val enc = ctx.freshName("enc")
-      val best = ctx.freshName("best")
-      s"""
-         |int $k = $b.numElements();
-         |int $n = $a.numElements();
-         |long $best = Long.MAX_VALUE;
-         |if ($k == 0 || $k > 256) { ${ev.isNull} = true; }
-         |for (int $c = 0; !${ev.isNull} && $c < $k; $c++) {
-         |  if ($b.isNullAt($c)) { ${ev.isNull} = true; break; }
-         |  org.apache.spark.sql.catalyst.util.ArrayData $cw = $b.getArray($c);
-         |  if ($cw.numElements() != $n) { ${ev.isNull} = true; break; }
-         |  long $acc = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $cw.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    long $d = $a.getLong($i) - $cw.getLong($i);
-         |    $acc += $d * $d;
-         |  }
-         |  if (${ev.isNull}) break;
-         |  long $enc = ($acc << 8) | (long) $c;
-         |  if ($enc < $best) $best = $enc;
-         |}
-         |${ev.value} = $best;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.isNull} = !graft.functions.PqNearest.valid($a, $b);
+         |if (!${ev.isNull}) ${ev.value} = graft.functions.PqNearest.nearest($a, $b);""".stripMargin)
 
   override protected def withNewChildrenInternal(newLeft: Expression,
                                                  newRight: Expression): PqNearest =
     copy(left = newLeft, right = newRight)
 }
 
+object PqNearest {
+  def valid(subv: ArrayData, codebook: ArrayData): Boolean = {
+    val k = codebook.numElements()
+    k >= 1 && k <= 256 && ArrayArgs.alignedCodebook(subv, codebook)
+  }
+
+  /** Requires [[valid]]. */
+  def nearest(subv: ArrayData, codebook: ArrayData): Long = {
+    var best = Long.MaxValue
+    var c = 0
+    while (c < codebook.numElements()) {
+      val enc = (IntSqDist.sqDist(subv, codebook.getArray(c)) << 8) | c
+      if (enc < best) best = enc
+      c += 1
+    }
+    best
+  }
+}
+
 /** Per-subspace PQ distance row: left = a probe's tick subvector, right
   * = the subspace codebook literal (as in [[PqNearest]]). Returns the
   * `array<bigint>` of exact integer L2 distances to every codeword — one
-  * row of the probe's ADC lookup table, in codebook-ordinal order.
-  * Same JIT rationale as [[PqNearest]]: the probe side scales with the
-  * corpus (1% sample), so its encode stage must also stay compiled.
+  * row of the probe's ADC lookup table, in codebook-ordinal order. NULL
+  * unless [[ArrayArgs.alignedCodebook]]. Same JIT rationale as
+  * [[PqNearest]]: the probe side scales with the corpus (1% sample), so
+  * its encode stage must also stay compiled.
   */
 case class PqDists(left: Expression, right: Expression)
   extends BinaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(ArrayType(LongType, _), _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"graft_pq_dists expects (array<bigint>, array<array<bigint>>), got " +
-        s"(${l.simpleString}, ${r.simpleString})")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = PqDists.check(this)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_pq_dists"
-  // mismatched codeword length or null element -> NULL
   override def nullable: Boolean = true
 
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val subv = a.asInstanceOf[ArrayData]
-    val cb = b.asInstanceOf[ArrayData]
-    val k = cb.numElements()
-    val n = subv.numElements()
-    val out = new Array[Long](k)
-    var c = 0
-    while (c < k) {
-      if (cb.isNullAt(c)) return null
-      val cw = cb.getArray(c)
-      if (cw.numElements() != n) return null
-      var acc = 0L
-      var i = 0
-      while (i < n) {
-        if (subv.isNullAt(i) || cw.isNullAt(i)) return null
-        val d = subv.getLong(i) - cw.getLong(i)
-        acc += d * d
-        i += 1
-      }
-      out(c) = acc
-      c += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    val (subv, cb) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (ArrayArgs.alignedCodebook(subv, cb)) PqDists.dists(subv, cb) else null
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val k = ctx.freshName("k")
-      val n = ctx.freshName("n")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val cw = ctx.freshName("cw")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      val out = ctx.freshName("out")
-      s"""
-         |int $k = $b.numElements();
-         |int $n = $a.numElements();
-         |long[] $out = new long[$k];
-         |for (int $c = 0; !${ev.isNull} && $c < $k; $c++) {
-         |  if ($b.isNullAt($c)) { ${ev.isNull} = true; break; }
-         |  org.apache.spark.sql.catalyst.util.ArrayData $cw = $b.getArray($c);
-         |  if ($cw.numElements() != $n) { ${ev.isNull} = true; break; }
-         |  long $acc = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $cw.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    long $d = $a.getLong($i) - $cw.getLong($i);
-         |    $acc += $d * $d;
-         |  }
-         |  $out[$c] = $acc;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.isNull} = !graft.functions.ArrayArgs.alignedCodebook($a, $b);
+         |if (!${ev.isNull}) ${ev.value} = graft.functions.PqDists.dists($a, $b);""".stripMargin)
 
   override protected def withNewChildrenInternal(newLeft: Expression,
                                                  newRight: Expression): PqDists =
     copy(left = newLeft, right = newRight)
 }
 
+object PqDists {
+  /** Type check of a (subvector, codebook) pair, shared with [[PqNearest]]. */
+  def check(e: BinaryExpression): TypeCheckResult = (e.left.dataType, e.right.dataType) match {
+    case (ArrayType(LongType, _), ArrayType(ArrayType(LongType, _), _)) =>
+      TypeCheckResult.TypeCheckSuccess
+    case (l, r) => TypeCheckResult.TypeCheckFailure(
+      s"${e.prettyName} expects (array<bigint>, array<array<bigint>>), got " +
+        s"(${l.simpleString}, ${r.simpleString})")
+  }
+
+  /** Requires [[ArrayArgs.alignedCodebook]]. */
+  def dists(subv: ArrayData, codebook: ArrayData): ArrayData = {
+    val out = new Array[Long](codebook.numElements())
+    var c = 0
+    while (c < out.length) {
+      out(c) = IntSqDist.sqDist(subv, codebook.getArray(c))
+      c += 1
+    }
+    new GenericArrayData(out)
+  }
+}
+
 /** Fused distinct-set Jaccard over two array<string> columns — VALUE-
   * IDENTICAL to `size(array_intersect(a, b)).cast("double") /
-  * size(array_union(a, b))` (r15, r14 verdict directive #7; guide §1.2
-  * per-task work): both operands of the division are the same exact
-  * integers, so the double quotient is bit-equal. (Sole divergence: on
-  * TWO EMPTY arrays — union size 0, unreachable for every caller, since
-  * shingled()/grams emit ≥1 element — the composed divide raises
-  * DIVIDE_BY_ZERO under ANSI while this returns NaN; error-vs-NaN on an
-  * impossible input, never a value difference.) The composed form
-  * builds three hash
-  * sets and MATERIALIZES two intermediate arrays (full element copies)
-  * per pair just to take their sizes; this expression computes both
+  * size(array_union(a, b))`: both operands of the division are the same
+  * exact integers, so the double quotient is bit-equal. The one
+  * divergence is two EMPTY arrays (union size 0, which no caller produces,
+  * since shingled()/grams emit ≥1 element): the composed divide raises
+  * DIVIDE_BY_ZERO under ANSI while this returns NaN. The composed form
+  * builds three hash sets and MATERIALIZES two intermediate arrays per
+  * pair just to take their sizes; this expression computes both
   * cardinalities in one pass over each array with one hash set and two
-  * counters — no intermediate arrays, no copies. Null ELEMENTS follow
-  * array_intersect/array_union semantics exactly: null counts as one
-  * distinct value, in the intersection iff present on both sides.
-  * JaccardSimSpec pins the per-pair equality against the composed form.
+  * counters. Null ELEMENTS follow array_intersect/array_union semantics
+  * exactly: null counts as one distinct value, in the intersection iff
+  * present on both sides. JaccardSimSpec pins the per-pair equality
+  * against the composed form.
   */
 case class JaccardSim(left: Expression, right: Expression)
   extends BinaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_jaccard expects two array<string> arguments, got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = ArrayArgs.check(this, StringType)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_jaccard"
 
   override def nullSafeEval(a: Any, b: Any): Any =
     JaccardSim.of(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
-  // one static call — the loop lives in a real JVM method (the
-  // RollWindowHash64 discipline: JIT-compiled, immune to the 8 KB
-  // generated-method cliff), still fused into whole-stage codegen
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) =>
       s"${ev.value} = graft.functions.JaccardSim.of($a, $b);")
@@ -741,9 +631,12 @@ case class JaccardSim(left: Expression, right: Expression)
 
 object JaccardSim {
   /** |distinct(a) ∩ distinct(b)| / |distinct(a) ∪ distinct(b)| as the
-    * exact double quotient of the two int cardinalities.
+    * exact double quotient of the two int cardinalities; NaN for two
+    * empty arrays.
     */
   def of(a: ArrayData, b: ArrayData): Double = {
+    // the sets hold UTF8String views into a's and b's buffers, which are
+    // valid only for this call: no set may outlive it
     val na = a.numElements()
     val nb = b.numElements()
     val setA = new java.util.HashSet[UTF8String](Math.max(4, na * 2))
@@ -777,10 +670,9 @@ object JaccardSim {
   }
 }
 
-/** The full PII cascade — email → phone → id — fused into ONE expression
-  * (r15, r14 verdict directive #6; guide §1.2 per-task work): returns
-  * struct(n_email, n_phone, n_id, redacted). VALUE-IDENTICAL to the
-  * composed `size(regexp_extract_all(...))` + `regexp_replace(...)`
+/** The full PII cascade — email → phone → id — fused into ONE expression:
+  * returns struct(n_email, n_phone, n_id, redacted). VALUE-IDENTICAL to
+  * the composed `size(regexp_extract_all(...))` + `regexp_replace(...)`
   * chain: each class's count and replacement come from the SAME
   * java.util.regex Matcher walk Spark's own RegExpReplace /
   * RegExpExtractAll run, in the same class order on the same
@@ -809,8 +701,6 @@ case class RedactCascade(child: Expression) extends UnaryExpression {
   override def nullSafeEval(input: Any): Any =
     RedactCascade.redact(input.asInstanceOf[UTF8String])
 
-  // one static call — the matcher loops live in a real JVM method (the
-  // RollWindowHash64 discipline), still fused into whole-stage codegen
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = graft.functions.RedactCascade.redact($c);")

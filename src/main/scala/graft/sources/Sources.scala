@@ -484,7 +484,10 @@ object Sources {
                asOf: Long): DataFrame =
     latestWins(Tables.parquet(spark, path).filter(col("_batch_id") <= asOf), keyCols)
 
-  private def latestWins(log: DataFrame, keyCols: Seq[String]): DataFrame = {
+  /** Per key, the row of the highest `_batch_id`; drops `_batch_id`. The
+    * one latest-wins fold every log read and compaction runs.
+    */
+  private[sources] def latestWins(log: DataFrame, keyCols: Seq[String]): DataFrame = {
     val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col("_batch_id").desc)
     log
       .withColumn("_rn", row_number().over(w))
@@ -622,11 +625,15 @@ object Sources {
     require(ids.nonEmpty, s"compactLog: no batches under $logPath")
     val wm = ids.last
     val log = Tables.parquet(spark, logPath).filter(col("_batch_id") <= wm)
-    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col("_batch_id").desc)
-    log.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
-      .withColumn("_batch_id", lit(wm))
+    writeBase(spark, latestWins(log, keyCols), wm, basePath)
+  }
+
+  /** A compaction's output: the latest-wins rows as `base`, each stamped
+    * `_batch_id = wm`, and `wm` as the one-row `meta` sidecar.
+    */
+  private def writeBase(spark: SparkSession, latest: DataFrame, wm: Long,
+                        basePath: String): Unit = {
+    latest.withColumn("_batch_id", lit(wm))
       .write.mode("overwrite").parquet(s"$basePath/base")
     import spark.implicits._
     Seq(wm).toDF("_watermark").write.mode("overwrite").parquet(s"$basePath/meta")
@@ -671,11 +678,7 @@ object Sources {
     val deltas =
       if (hasDeltas) Tables.parquet(spark, logPath).filter(col("_batch_id") > wm)
       else base.limit(0)
-    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col("_batch_id").desc)
-    base.unionByName(deltas)
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn", "_batch_id")
+    latestWins(base.unionByName(deltas), keyCols)
   }
 
   /** INCREMENTAL re-compaction: fold the post-watermark deltas into the
@@ -711,14 +714,7 @@ object Sources {
     val all = Tables.parquet(spark, s"$basePath/base")
       .unionByName(Tables.parquet(spark, logPath)
         .filter(col("_batch_id") > wm0 && col("_batch_id") <= wm))
-    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col("_batch_id").desc)
-    all.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
-      .withColumn("_batch_id", lit(wm))
-      .write.mode("overwrite").parquet(s"$newBasePath/base")
-    import spark.implicits._
-    Seq(wm).toDF("_watermark").write.mode("overwrite").parquet(s"$newBasePath/meta")
+    writeBase(spark, latestWins(all, keyCols), wm, newBasePath)
   }
 
   /** Storage reclaim for the compacted log (the VACUUM half of the
@@ -1328,11 +1324,8 @@ object SourceQueries {
       .withColumn("_batch_id", lit(1L)), url, "cust_seg")
     Jdbc.write(c.withColumn("_batch_id", lit(2L)), url, "cust_seg", "append")
     val bounds = c.agg(min("c_custkey"), max("c_custkey")).head()
-    val w = Window.partitionBy("c_custkey").orderBy(col("_batch_id").desc)
-    Jdbc.readPartitioned(spark, url, "cust_seg", "c_custkey",
-      bounds.getLong(0), bounds.getLong(1), 8)
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
+    Sources.latestWins(Jdbc.readPartitioned(spark, url, "cust_seg", "c_custkey",
+      bounds.getLong(0), bounds.getLong(1), 8), Seq("c_custkey"))
       .groupBy("c_mktsegment").agg(count(lit(1)).as("n"))
       .orderBy("c_mktsegment")
   }

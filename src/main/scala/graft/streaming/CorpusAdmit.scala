@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, Dedup2}
 import graft.tables.Tables
 
 /** G15 — `stream_corpus_admit`: D13's daily-delta admission gate run as
@@ -39,51 +39,18 @@ object CorpusAdmit {
   private[graft] def admitBatch(batch: DataFrame, indexDir: String,
                                 sink: String, batchId: Long): Unit = {
     val s = batch.sparkSession
-    val delta = batch.filter(col("doc_id") % 10 === 0)
-    // the probe join carries D2/D13's hot-bucket guard: the micro-batch
-    // side salts itself against the standing index's memoized hot list
-    // (same site key), so batch and streaming verdicts can never diverge
-    // — and a hot index bucket hands each arrival one salt group, not
-    // the whole bucket (see HotBucket)
+    // the probe side salts itself against the standing index's memoized
+    // hot list (D2/D13's site key), so batch and streaming verdicts can
+    // never diverge, and a hot index bucket hands each arrival one salt
+    // group, not the whole bucket (see HotBucket)
     val keys = Seq("band", "sig")
     val hot = graft.ops.HotBucket.memoHot(Dedup.bandSignatures(s, indexDir),
       keys, s"d2.bandSigs:$indexDir:32:8", graft.ops.HotBucket.defaultCap)
-    val probe = Dedup.bandSignaturesOf(delta)
-      .withColumn("salt", graft.ops.HotBucket.saltCol(hot, keys, col("doc_id")))
-      .select(col("band"), col("sig"), col("salt"), col("doc_id").as("d"))
-    val index = Dedup.bandSignatures(s, indexDir)
-      .withColumn("salt", graft.ops.HotBucket.saltCol(hot, keys, col("doc_id")))
-      .select(col("band"), col("sig"), col("salt"), col("doc_id").as("o"))
-    val cands = probe.join(index, Seq("band", "sig", "salt"))
-      .filter(col("o") =!= col("d"))
-      .select("d", "o").distinct()
-    // r15: same two admission-verify optimizations as Dedup2.admissionOver
-    // (r14 verdict directive #1 + #7) — the o-side shingle projection is
-    // pruned to candidate index docs via a broadcast left-semi BEFORE the
-    // O(tokens)/row shingling (superset-safe: the verify join is inner on
-    // `o`), and the verify runs the fused native Jaccard (bit-identical
-    // quotient). Stream ≡ batch stays pinned: both paths changed together.
-    val candO = index.join(probe, Seq("band", "sig", "salt"), "left_semi")
-      .select(col("o").as("doc_id"))
-    val withJac = cands
-      .join(Dedup.shingled(delta)
-        .select(col("doc_id").as("d"), col("shingles").as("sh_d")), "d")
-      .join(Dedup.shingled(Tables.documents(s, indexDir)
-          .join(broadcast(candO), Seq("doc_id"), "left_semi"))
-        .select(col("doc_id").as("o"), col("shingles").as("sh_o")), "o")
-      .select(col("d"),
-        graft.functions.VectorOps.jaccardSim(col("sh_d"), col("sh_o"))
-          .as("jaccard"))
-    val perDelta = withJac.groupBy("d")
-      .agg(count(lit(1)).as("n_candidates"),
-        count(when(col("jaccard") >= 0.5, 1)).as("n_near_dups"))
-    delta.select("doc_id")
-      .join(perDelta.withColumnRenamed("d", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
-        coalesce(col("n_near_dups"), lit(0L)).as("n_near_dups"),
-        when(coalesce(col("n_near_dups"), lit(0L)) > 0, lit("reject"))
-          .otherwise(lit("admit")).as("verdict"))
+    def salted(sigs: DataFrame) =
+      sigs.withColumn("salt", graft.ops.HotBucket.saltCol(hot, keys, col("doc_id")))
+    val delta = batch.filter(col("doc_id") % 10 === 0)
+    Dedup2.admission(indexDir, salted(Dedup.bandSignatures(s, indexDir)),
+      salted(Dedup.bandSignaturesOf(delta)), delta)
       .write.mode("overwrite").parquet(s"$sink/batch=$batchId")
   }
 

@@ -160,9 +160,11 @@ class ExprsSpec extends AnyFunSuite {
         "graft_dot(array(1.0d, CAST(NULL AS DOUBLE)), array(1.0d, 2.0d)) b, " +
         "graft_int_sqdist(array(1L), array(1L, 2L)) c, " +
         "graft_int_sqdist(array(1L, CAST(NULL AS BIGINT)), array(1L, 2L)) d, " +
-        "graft_combine64(array(1L, CAST(NULL AS BIGINT))) e").head()
-    (0 to 4).foreach(i => assert(r.isNullAt(i),
-      s"column $i should be NULL — a partial dot/distance/hash would be silently wrong"))
+        "graft_combine64(array(1L, CAST(NULL AS BIGINT))) e, " +
+        "graft_cosine(array(1.0d), array(1.0d, 2.0d)) f, " +
+        "graft_cosine(array(1.0d, CAST(NULL AS DOUBLE)), array(1.0d, 2.0d)) g").head()
+    (0 to 6).foreach(i => assert(r.isNullAt(i),
+      s"column $i should be NULL — a partial dot/distance/hash/cosine would be silently wrong"))
   }
 
   test("Mix64 wraps like Java long arithmetic") {
@@ -224,5 +226,86 @@ class ExprsSpec extends AnyFunSuite {
       VectorOps.pqDists(col("q"), bad).as("d")).collect()
     nulls.foreach(r => assert(r.isNullAt(0) && r.isNullAt(1),
       "length-mismatched codebook must null the result"))
+  }
+
+  test("every Exprs expression gives the same output through eval and through codegen") {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types._
+    import graft.functions._
+
+    val dArr = ArrayType(DoubleType)
+    val lArr = ArrayType(LongType)
+    val sArr = ArrayType(StringType)
+    val book = ArrayType(lArr)
+    val wrapping = Seq(0L, 1L, -1L, Long.MaxValue, Long.MinValue, 1125899906842597L)
+    val doubles = Seq[(Any, Any)](
+      (Seq(1.0, 2.0), Seq(3.0, -4.0)), (Seq(), Seq()), (Seq(1.0), Seq(1.0, 2.0)),
+      (Seq(1.0, null), Seq(1.0, 2.0)), (Seq(2.0, 3.0), Seq(null, 3.0)), (Seq(0.0), Seq(0.0)),
+      (null, Seq(1.0)))
+    val longs = Seq[(Any, Any)](
+      (Seq(5L, 1L), Seq(2L, 5L)), (Seq(), Seq()), (Seq(1L), Seq(1L, 2L)),
+      (Seq(1L, null), Seq(1L, 2L)), (Seq(Long.MaxValue, 3L), Seq(-1L, Long.MinValue)),
+      (Seq(1L), null))
+    val tied = Seq(Seq(0L, 0L), Seq(10L, -5L), Seq(10L, -5L), Seq(-7L, 2L))
+    val codebooks = Seq[(Any, Any)](
+      (Seq(10L, -5L), tied), (Seq(1L, 2L), Seq()),
+      (Seq(1L, 2L), Seq.tabulate(257)(c => Seq(c.toLong, -c.toLong))),
+      (Seq(1L, 2L), Seq.tabulate(256)(c => Seq(c.toLong, 2L))),
+      (Seq(1L, 2L), Seq(Seq(1L, 2L), Seq(4L))), (Seq(1L, 2L), Seq(Seq(1L, 2L), null)),
+      (Seq(1L, 2L), Seq(Seq(1L, null))), (Seq(1L, null), tied),
+      (Seq(Long.MaxValue, 0L), Seq(Seq(-1L, 0L))), (null, tied))
+    val strings = Seq[Any]("", "plain ascii", "héllo wörld 日本語 🎉",
+      "mail a.b@ex.com, call +1 (555) 123-4567, id 123456789", null)
+    val bytes = Seq[Any](Array[Byte](), Array[Byte](0, -1, 0x80.toByte, 'a'.toByte),
+      "é".getBytes("UTF-8").take(1), null)
+    val tokens = Seq[Any](Seq("a", "b", "c"), Seq(), Seq("héllo", "", "日本", "x"), Seq("one"), null)
+    val sets = Seq[(Any, Any)](
+      (Seq(), Seq()), (Seq("a", "b", "a"), Seq("b", "c")), (Seq("a", null), Seq(null, "a")),
+      (Seq("日本", "é"), Seq("é")), (Seq("x"), Seq()), (Seq("x"), null))
+
+    // (name, argument types, expression over the bound arguments, input rows)
+    val table: Seq[(String, Seq[DataType], Seq[Expression] => Expression, Seq[Seq[Any]])] = Seq(
+      ("CosineSim", Seq(dArr, dArr), a => CosineSim(a(0), a(1)), doubles.map(p => Seq(p._1, p._2))),
+      ("DotProduct", Seq(dArr, dArr), a => DotProduct(a(0), a(1)), doubles.map(p => Seq(p._1, p._2))),
+      ("IntSqDist", Seq(lArr, lArr), a => IntSqDist(a(0), a(1)), longs.map(p => Seq(p._1, p._2))),
+      ("RollHash64 string", Seq(StringType), a => RollHash64(a(0)), strings.map(Seq(_))),
+      ("RollHash64 binary", Seq(BinaryType), a => RollHash64(a(0)), bytes.map(Seq(_))),
+      ("RollWindowHash64", Seq(sArr), a => RollWindowHash64(a(0), 2), tokens.map(Seq(_))),
+      ("Mix64", Seq(LongType), a => Mix64(a(0), 6364136223846793005L, Long.MaxValue),
+        (wrapping :+ null).map(Seq(_))),
+      ("Avalanche64", Seq(LongType), a => Avalanche64(a(0)), (wrapping :+ null).map(Seq(_))),
+      ("Combine64", Seq(lArr), a => Combine64(a(0)),
+        Seq(Seq(1L, 2L, 3L), Seq(), Seq(1L, null), wrapping, null).map(Seq(_))),
+      ("PqNearest", Seq(lArr, book), a => PqNearest(a(0), a(1)), codebooks.map(p => Seq(p._1, p._2))),
+      ("PqDists", Seq(lArr, book), a => PqDists(a(0), a(1)), codebooks.map(p => Seq(p._1, p._2))),
+      ("JaccardSim", Seq(sArr, sArr), a => JaccardSim(a(0), a(1)), sets.map(p => Seq(p._1, p._2))),
+      ("RedactCascade", Seq(StringType), a => RedactCascade(a(0)), strings.map(Seq(_))))
+
+    // bit-exact: NaN equals NaN, and 0.0 differs from -0.0
+    def same(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: Double, y: Double) => java.lang.Double.compare(x, y) == 0
+      case (x: Seq[_], y: Seq[_]) => x.size == y.size && x.zip(y).forall { case (p, q) => same(p, q) }
+      case _ => a == b
+    }
+    table.foreach { case (name, types, build, rows) =>
+      val e = build(types.zipWithIndex.map { case (t, i) => BoundReference(i, t, nullable = true) })
+      assert(e.checkInputDataTypes().isSuccess, s"$name: ${e.checkInputDataTypes()}")
+      // arrays reach the expressions as UnsafeArrayData, as they do in a query
+      val toRow = UnsafeProjection.create(types.toArray)
+      val toCatalyst = types.map(CatalystTypeConverters.createToCatalystConverter)
+      val generated = GenerateUnsafeProjection.generate(Seq(e))
+      val toScala = CatalystTypeConverters.createToScalaConverter(e.dataType)
+      rows.foreach { in =>
+        val row = toRow(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+          in.zip(toCatalyst).map { case (v, f) => f(v) }.toArray)).copy()
+        val evaled = toScala(e.eval(row))
+        val codegened = toScala(generated(row).get(0, e.dataType))
+        assert(same(evaled, codegened), s"$name on $in: eval $evaled != codegen $codegened")
+      }
+    }
+    val empty = new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
+    assert(JaccardSim.of(empty, empty).isNaN, "two empty arrays have Jaccard NaN (0 / 0)")
   }
 }

@@ -16,7 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    only place that builds exactly once and scopes keys on the
   *    `SparkContext`;
   *  - every file-stream drain goes through `streaming.Drain`
-  *    (`CheckpointRestart.tick` drains its own windowed stream).
+  *    (`CheckpointRestart.tick` drains its own windowed stream);
+  *  - no native expression writes its own Java loop: each has one static
+  *    kernel that eval and codegen both call, so the two cannot diverge.
   */
 class ParquetReadGuardSpec extends AnyFunSuite {
   private case class Rule(test: String, pattern: Regex, allowed: Set[String], fix: String)
@@ -32,7 +34,9 @@ class ParquetReadGuardSpec extends AnyFunSuite {
       Set("QueryCaches.scala"), "QueryCaches.memo scopes keys on the SparkContext"),
     Rule("no Trigger.AvailableNow outside the drain helper and CheckpointRestart",
       """Trigger\.AvailableNow\(\)""".r, Set("Drain.scala", "Events.scala"),
-      "drain file streams through streaming.Drain"))
+      "drain file streams through streaming.Drain"),
+    Rule("no hand-written codegen loops (freshName) in src/main", """freshName\(""".r,
+      Set.empty, "put the loop in a static kernel that nullSafeEval and doGenCode both call"))
 
   private def scalaFiles(f: File): Seq[File] =
     if (f.isDirectory) Option(f.listFiles).toSeq.flatten.sortBy(_.getName).flatMap(scalaFiles)
