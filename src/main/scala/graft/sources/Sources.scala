@@ -1,9 +1,15 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.parquet.hadoop.metadata.ColumnPath
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -231,8 +237,15 @@ object Sources {
     * storage — UPDATE-in-place doesn't exist at 100 TB.
     */
   def appendBatch(df: DataFrame, path: String, batchId: Long): Unit =
-    df.withColumn("_batch_id", lit(batchId))
-      .write.mode("append").parquet(path)
+    lifecycleWrite(df.withColumn("_batch_id", lit(batchId)))
+      .mode("append").parquet(path)
+
+  /** The writer of every file the batch log lifecycle owns (batches,
+    * staged batches, bases, manifests): Hadoop's local file system
+    * without process forks, selected for this write only.
+    */
+  private def lifecycleWrite(df: DataFrame): DataFrameWriter[Row] =
+    df.write.options(LocalFs.options)
 
   /** Idempotent batch landing: the batch id is a PARTITION and the write
     * is a dynamic-partition overwrite, so a re-delivered batch replaces
@@ -242,8 +255,8 @@ object Sources {
     * that isn't doing latest-wins dedup).
     */
   def upsertBatch(df: DataFrame, path: String, batchId: Long): Unit =
-    df.withColumn("_batch_id", lit(batchId))
-      .write.mode("overwrite")
+    lifecycleWrite(df.withColumn("_batch_id", lit(batchId)))
+      .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("_batch_id").parquet(path)
 
@@ -259,9 +272,9 @@ object Sources {
     */
   def upsertBatches(batches: Seq[(DataFrame, Long)], path: String): Unit = {
     require(batches.nonEmpty, "upsertBatches needs at least one batch")
-    batches.map { case (df, id) => df.withColumn("_batch_id", lit(id)) }
-      .reduce(_.unionByName(_))
-      .write.mode("overwrite")
+    lifecycleWrite(batches.map { case (df, id) => df.withColumn("_batch_id", lit(id)) }
+      .reduce(_.unionByName(_)))
+      .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("_batch_id").parquet(path)
   }
@@ -292,7 +305,7 @@ object Sources {
     */
   def stageBatch(df: DataFrame, logPath: String, writerId: String): String = {
     val staged = s"$logPath/.staging/$writerId-${java.util.UUID.randomUUID()}"
-    df.write.mode("overwrite").parquet(staged)
+    lifecycleWrite(df).mode("overwrite").parquet(staged)
     staged
   }
 
@@ -524,19 +537,63 @@ object Sources {
     val files = Option(new java.io.File(staged).listFiles)
       .getOrElse(Array.empty)
       .filter(_.getName.endsWith(".parquet"))
-    // bounded per-file footer aggregations (min/max come from parquet
-    // statistics) — the per-commit cost is O(files in THIS batch)
+    // the per-commit cost is O(files in THIS batch) footer reads
     val stats = files.toSeq.map { f =>
-      val r = Tables.parquet(spark, f.getAbsolutePath)
-        .agg(min(col(statsCol)).cast("long"), max(col(statsCol)).cast("long"))
-        .head()
-      (f.getName, r.getLong(0), r.getLong(1))
+      val (lo, hi) = keyRange(spark, f.getAbsolutePath, statsCol)
+      (f.getName, lo, hi)
     }
     val id = commitStaged(logPath, staged)
     import spark.implicits._
-    stats.toDF("file", "min_key", "max_key").coalesce(1)
-      .write.mode("overwrite").parquet(s"${manifestDir(logPath)}/batch=$id")
+    lifecycleWrite(stats.toDF("file", "min_key", "max_key").coalesce(1))
+      .mode("overwrite").parquet(s"${manifestDir(logPath)}/batch=$id")
     id
+  }
+
+  /** The (min, max) of the integer column `statsCol` over one parquet
+    * file: from its footer ([[footerRange]]), else from a `min`/`max` job.
+    */
+  private[graft] def keyRange(spark: SparkSession, file: String,
+                              statsCol: String): (Long, Long) =
+    footerRange(spark, file, statsCol).getOrElse {
+      val r = Tables.parquet(spark, file)
+        .agg(min(col(statsCol)).cast("long"), max(col(statsCol)).cast("long"))
+        .head()
+      (r.getLong(0), r.getLong(1))
+    }
+
+  /** The (min, max) of `statsCol`'s non-null values in one parquet file,
+    * from the row-group statistics in its footer, read in this process
+    * as [[watermark]] reads its sidecar. None, and so the job, unless the
+    * column is a top-level signed INT32 or INT64 column that every row
+    * group holds statistics for, with at least one non-null value.
+    */
+  private[graft] def footerRange(spark: SparkSession, file: String,
+                                 statsCol: String): Option[(Long, Long)] = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(file), spark.sparkContext.hadoopConfiguration))
+    val footer = try reader.getFooter finally reader.close()
+    val signedInt = footer.getFileMetaData.getSchema.getFields.asScala
+      .find(_.getName == statsCol).exists { f =>
+        f.isPrimitive && Set(INT32, INT64)(f.asPrimitiveType.getPrimitiveTypeName) &&
+          (f.getLogicalTypeAnnotation match {
+            case null => true
+            case i: IntLogicalTypeAnnotation => i.isSigned
+            case _ => false
+          })
+      }
+    val path = ColumnPath.get(statsCol)
+    val perGroup = footer.getBlocks.asScala.toSeq.map { b =>
+      b.getColumns.asScala.find(_.getPath == path).map(_.getStatistics)
+        .filter(st => st != null && !st.isEmpty)
+    }
+    if (!signedInt || perGroup.exists(_.isEmpty)) None
+    else {
+      val ranges = perGroup.flatten.filter(_.hasNonNullValue).map { st =>
+        (st.genericGetMin.asInstanceOf[Number].longValue,
+          st.genericGetMax.asInstanceOf[Number].longValue)
+      }
+      if (ranges.isEmpty) None else Some((ranges.map(_._1).min, ranges.map(_._2).max))
+    }
   }
 
   /** The pruned file list for a key-range read: every committed file
@@ -633,10 +690,10 @@ object Sources {
     */
   private def writeBase(spark: SparkSession, latest: DataFrame, wm: Long,
                         basePath: String): Unit = {
-    latest.withColumn("_batch_id", lit(wm))
-      .write.mode("overwrite").parquet(s"$basePath/base")
+    lifecycleWrite(latest.withColumn("_batch_id", lit(wm)))
+      .mode("overwrite").parquet(s"$basePath/base")
     import spark.implicits._
-    Seq(wm).toDF("_watermark").write.mode("overwrite").parquet(s"$basePath/meta")
+    lifecycleWrite(Seq(wm).toDF("_watermark")).mode("overwrite").parquet(s"$basePath/meta")
   }
 
   /** The watermark a compaction recorded in `basePath/meta`, read in this

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.{DataFrame, GraftSessionBridge, Row, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
+
+import graft.sources.LocalFs
 
 /** The scheduled-drain shape every streaming admit shares: a parquet
   * file stream over the files of `srcDir` matching `glob`, run with
@@ -14,15 +16,52 @@ import org.apache.spark.sql.types.StructType
 private[graft] object Drain {
   def apply(spark: SparkSession, schema: StructType, srcDir: String, glob: String,
             ckpt: String, maxFilesPerTrigger: Option[Int] = None)
-           (perBatch: (DataFrame, Long) => Unit): Unit = {
-    val reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(perBatch)
-      .start()
-      .awaitTermination()
+           (perBatch: (DataFrame, Long) => Unit): Unit =
+    availableNow(spark) { s =>
+      val reader = s.readStream.schema(schema).option("pathGlobFilter", glob)
+      maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
+      reader.parquet(srcDir)
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch(perBatch)
+    }
+
+  /** Start the query `build` defines over the drain session of `spark`
+    * with `Trigger.AvailableNow`, and wait until it has drained.
+    */
+  def availableNow(spark: SparkSession)(build: SparkSession => DataStreamWriter[Row]): Unit =
+    build(session(spark)).trigger(Trigger.AvailableNow()).start().awaitTermination()
+
+  /** The session a drain runs in: a clone of `spark`, so every runtime
+    * conf (state store provider, time zone, ...) carries over, with the
+    * streaming listeners of `spark` the clone does not register itself
+    * (those built from static confs, the UI's), plus
+    *  - [[LocalFs.options]]: checkpoint, state and source-log files are
+    *    written without process forks;
+    *  - no empty micro-batch: a drain runs one batch per `maxFilesPerTrigger`
+    *    slice and none after it. The empty batch of a stateful query only
+    *    advances the watermark and evicts state; the next drain's first
+    *    data batch runs the same eviction from the watermark the commit
+    *    log recorded;
+    *  - late rows filtered by the batch's own watermark, not the previous
+    *    batch's: with no empty batch in between, the previous batch is the
+    *    last drain's data batch, whose watermark predates that data, so
+    *    rows the last drain made late would be aggregated. This allows one
+    *    stateful operator per query. Neither setting is recorded in the
+    *    offset log, so both apply to existing checkpoints too;
+    *  - no artifact isolation: tasks run in the executor's default
+    *    session state, whose classloader keys Spark's code cache, so a
+    *    drain reuses the classes earlier drains compiled instead of
+    *    compiling them again under a per-query classloader.
+    */
+  private def session(spark: SparkSession): SparkSession = {
+    val s = GraftSessionBridge.cloneSession(spark)
+    LocalFs.options.foreach { case (k, v) => s.conf.set(k, v) }
+    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    s.conf.set("spark.sql.streaming.statefulOperator.allowMultiple", "false")
+    s.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    val own = s.streams.listListeners().map(_.getClass).toSet
+    spark.streams.listListeners().filterNot(l => own(l.getClass)).foreach(s.streams.addListener)
+    s
   }
 }

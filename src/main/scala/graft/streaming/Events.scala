@@ -395,14 +395,16 @@ object CheckpointRestart {
     * checkpoint, so the daily batch gets streaming's exactly-once
     * bookkeeping without a resident process. G13 proves N ticks over a
     * growing source equal the one-shot batch twin.
+    *
+    * A tick runs in [[Drain]]'s session: one micro-batch per tick with
+    * data, none without. State eviction for the watermark a tick
+    * reaches is deferred to the next tick's data batch, which drops
+    * late rows and evicts under that same watermark (G14); the rows the
+    * sink receives are the same, since an update-mode eviction emits none.
     */
   def tick(spark: SparkSession, srcDir: String, outPath: String,
-           checkpoint: String): Unit = {
-    val q = sink(windowedAgg(spark, srcDir), outPath, checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+           checkpoint: String): Unit =
+    Drain.availableNow(spark)(s => sink(windowedAgg(s, srcDir), outPath, checkpoint))
 
   /** The recovered stream's final sink contents (latest update per
     * window key).

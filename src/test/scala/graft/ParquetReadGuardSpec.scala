@@ -16,9 +16,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *    only place that builds exactly once and scopes keys on the
   *    `SparkContext`;
   *  - every file-stream drain goes through `streaming.Drain`
-  *    (`CheckpointRestart.tick` drains its own windowed stream);
+  *    (`CheckpointRestart.tick` through its `availableNow`);
   *  - no native expression writes its own Java loop: each has one static
-  *    kernel that eval and codegen both call, so the two cannot diverge.
+  *    kernel that eval and codegen both call, so the two cannot diverge;
+  *  - the no-fork local file system and the keys that select it live in
+  *    `LocalFs.scala` alone, and the drain-session settings in
+  *    `Drain.scala` alone, so each is decided in one place.
   */
 class ParquetReadGuardSpec extends AnyFunSuite {
   private case class Rule(test: String, pattern: Regex, allowed: Set[String], fix: String)
@@ -36,7 +39,13 @@ class ParquetReadGuardSpec extends AnyFunSuite {
       """Trigger\.AvailableNow\(\)""".r, Set("Drain.scala", "Events.scala"),
       "drain file streams through streaming.Drain"),
     Rule("no hand-written codegen loops (freshName) in src/main", """freshName\(""".r,
-      Set.empty, "put the loop in a static kernel that nullSafeEval and doGenCode both call"))
+      Set.empty, "put the loop in a static kernel that nullSafeEval and doGenCode both call"),
+    Rule("no local file system classes or keys outside LocalFs",
+      """DelegateToFileSystem|fs\.file\.impl|fs\.AbstractFileSystem\.file\.impl""".r,
+      Set("LocalFs.scala"), "select the local file system through LocalFs.options"),
+    Rule("no drain-session settings outside the drain helper",
+      """noDataMicroBatches|statefulOperator\.allowMultiple|artifact\.isolation""".r, Set("Drain.scala"),
+      "start drains through streaming.Drain"))
 
   private def scalaFiles(f: File): Seq[File] =
     if (f.isDirectory) Option(f.listFiles).toSeq.flatten.sortBy(_.getName).flatMap(scalaFiles)

@@ -254,4 +254,49 @@ class SourcesSpec extends AnyFunSuite {
       .select("k", "v").as[(Long, String)].collect().sorted.toSeq
     assert(latest == Seq((1L, "late"), (2L, "b")))
   }
+
+  test("manifest key ranges come from footers; a file without statistics takes the job") {
+    val orders = graft.tables.Tables.orders(spark, sf).select("o_orderkey", "o_orderstatus")
+    def job(file: String): (Long, Long) = {
+      val r = spark.read.parquet(file)
+        .agg(min(col("o_orderkey")).cast("long"), max(col("o_orderkey")).cast("long")).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    def jobsIn[T](body: => T): (T, Int) = {
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(l)
+      try {
+        val r = body
+        org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+        (r, n.get)
+      } finally spark.sparkContext.removeSparkListener(l)
+    }
+    // a session whose parquet writer keeps no column statistics
+    val bare = spark.newSession()
+    bare.conf.set("parquet.column.statistics.enabled", "false")
+    val log = tmp("manifest_log")
+    Seq(orders, bare.createDataFrame(orders.rdd, orders.schema)).foreach { df =>
+      val id = Sources.commitBatchWithStats(df.repartition(3), log, "w", "o_orderkey")
+      val files = new java.io.File(log, s"_batch_id=$id").listFiles
+        .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).toSeq
+      assert(files.size == 3)
+      val manifest = spark.read.parquet(s"${Sources.manifestDir(log)}/batch=$id").collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(manifest == files.map(f => new java.io.File(f).getName -> job(f)).toMap, s"batch $id")
+      val withStats = df eq orders
+      files.foreach { f =>
+        assert(Sources.footerRange(spark, f, "o_orderkey").isDefined == withStats, f)
+        val (range, jobs) = jobsIn(Sources.keyRange(spark, f, "o_orderkey"))
+        assert(range == job(f))
+        assert(if (withStats) jobs == 0 else jobs > 0, s"$jobs jobs for $f")
+      }
+    }
+    // a non-integer column has no footer range either
+    val f0 = new java.io.File(log, "_batch_id=1").listFiles.find(_.getName.endsWith(".parquet")).get
+    assert(Sources.footerRange(spark, f0.getAbsolutePath, "o_orderstatus").isEmpty)
+  }
 }
