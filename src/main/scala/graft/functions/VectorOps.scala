@@ -22,11 +22,15 @@ object VectorOps {
     org.apache.spark.sql.GraftColumnBridge.column(
       DotProduct(expression(a), expression(b)))
 
-  /** Composed-builtins dot (allocates a zip_with array per row) — kept
-    * for A/B testing against [[dot]].
+  /** One component in 10⁻⁶ ticks, floor(x·10⁶ + 0.5) as a long: the
+    * integer input of [[intSqDist]], [[pqNearest]] and [[pqDists]], which
+    * makes vector geometry exact and replayable in DuckDB
+    * (`CAST(floor(x * 1000000.0 + 0.5) AS BIGINT)`).
     */
-  def dotComposed(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
+  def qtick(x: Column): Column = floor(x * lit(1000000.0) + lit(0.5)).cast("long")
+
+  /** [[qtick]] over every component of an `array<double>` column. */
+  def qticks(v: Column): Column = transform(v, x => qtick(x))
 
   /** Σ (aᵢ−bᵢ)² over integer-tick arrays — fused native [[IntSqDist]],
     * exact long arithmetic.
@@ -51,13 +55,6 @@ object VectorOps {
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, v) => acc + v)
 
-  /** Σ aᵢ² */
-  def normSq(a: Column): Column =
-    aggregate(transform(a, x => x * x), lit(0.0), (acc, v) => acc + v)
-
-  /** ‖a‖₂ */
-  def norm(a: Column): Column = sqrt(normSq(a))
-
   /** cos(a, b) = a·b / √(Σa²·Σb²) — the sqrt-of-product form, matching
     * DuckDB's `list_cosine_similarity` bit-for-bit for oracle parity.
     * Backed by the fused native [[CosineSim]] expression: one codegen'd
@@ -66,13 +63,6 @@ object VectorOps {
   def cosine(a: Column, b: Column): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       CosineSim(expression(a), expression(b)))
-
-  /** Composed-builtins cosine (allocates a zip_with array per row) — kept
-    * for A/B testing against [[cosine]]. Built on [[dotComposed]] so the
-    * reference stays fully independent of the native loops.
-    */
-  def cosineComposed(a: Column, b: Column): Column =
-    dotComposed(a, b) / sqrt(normSq(a) * normSq(b))
 
   /** 64-bit polynomial rolling hash over a string column. */
   def rollhash64(c: Column): Column =

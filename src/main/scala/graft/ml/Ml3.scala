@@ -52,7 +52,7 @@ object Ml3 {
     val cents = asg1
       .select(col("c1"), posexplode(col("emb")).as(Seq("pos", "x")))
       .select(col("c1"), (col("pos") + 1).as("dim"),
-        floor(col("x") * lit(1000000.0) + lit(0.5)).cast("long").as("q"))
+        qtick(col("x")).as("q"))
       .groupBy("c1", "dim")
       .agg(sum("q").as("sq"), count(lit(1)).as("cnt"))
       .select(col("c1"),  col("dim"),

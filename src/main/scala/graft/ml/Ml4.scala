@@ -262,7 +262,7 @@ object Ml4 {
     * Further iterations loop the same plan with v₀ := result.
     */
   def mlPcaPower(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.VectorOps.{asDouble, dot}
+    import graft.functions.VectorOps.{asDouble, dot, qtick}
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
     val ones = array(Seq.fill(64)(lit(1.0)): _*)
@@ -270,7 +270,7 @@ object Ml4 {
     val contrib = withS
       .select(posexplode(col("emb")).as(Seq("dim0", "x")), col("s"))
       .select((col("dim0") + 1).as("dim"),
-        floor(col("x") * col("s") * lit(1000000.0) + lit(0.5)).cast("long").as("cq"))
+        qtick(col("x") * col("s")).as("cq"))
     val sums = contrib.groupBy("dim").agg(sum("cq").as("sumq"))
     val cnt = e.agg(count(lit(1)).as("n"))
     val v = sums.crossJoin(broadcast(cnt))

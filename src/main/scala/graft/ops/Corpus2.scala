@@ -497,9 +497,10 @@ object Corpus2 {
   }
 
   /** D12 — `dedup_semantic`: SemDeDup — near-duplicate pruning in
-    * EMBEDDING space, scoped to a coarse cluster (E3's integer-centroid
-    * assignment, shared via [[Similarity.ivfAssignment]] so D12 and E3
-    * can never disagree about cells). A vector is dropped when a
+    * EMBEDDING space, scoped to a coarse cluster (E20's trained
+    * integer-centroid assignment, shared via
+    * [[Similarity.ivfTrainedAssignment]] so D12, E10 and E20 can never
+    * disagree about cells). A vector is dropped when a
     * LOWER-id vector in its cell has cosine ≥ τ; its keeper is the
     * best-matching such vector (highest cosine, lowest id on ties).
     *

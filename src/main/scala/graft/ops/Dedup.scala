@@ -474,6 +474,16 @@ object Dedup {
        | FROM cand c JOIN sh sa ON sa.doc_id = c.a JOIN sh sb ON sb.doc_id = c.b)""".stripMargin
   }
 
+  /** The 4-plane sign bucket of an `array<double>` column,
+    * Σᵢ 2ⁱ·[v·planeᵢ > 0] over `hyperplanes(4, 64)` — 16 buckets, the
+    * engine form of [[bucketSql]] shared by every LSH consumer (D5, E2,
+    * E6, E7 and the graph tier's build, entries and inserts).
+    */
+  private[graft] def signBucket(v: Column): Column =
+    hyperplanes(4, 64).zipWithIndex.map { case (p, i) =>
+      when(dot(v, array(p.map(lit(_)): _*)) > 0, lit(1 << i)).otherwise(lit(0))
+    }.reduce(_ + _)
+
   /** The plane-sign bucket expression as DuckDB SQL over a column named
     * `emb` (DOUBLE[]): Σᵢ 2ⁱ·[emb·planeᵢ > 0]. Double literals use
     * shortest-round-trip repr, so both engines see identical planes;
@@ -492,18 +502,11 @@ object Dedup {
     * geometrically.
     */
   def dedupEmbedding(spark: SparkSession, dir: String): DataFrame = {
-    val planes = hyperplanes(4, 64)
     // bucketing is a pure projection over the vector scan — computed
     // fresh per join side instead of caching vector-sized rows
-    def bucketed = {
-      val e = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-      val bucket = planes.zipWithIndex.map { case (p, i) =>
-        val planeCol = array(p.map(lit(_)): _*)
-        when(dot(col("emb"), planeCol) > 0, lit(1 << i)).otherwise(lit(0))
-      }.reduce(_ + _)
-      e.withColumn("bucket", bucket)
-    }
+    def bucketed = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
+      .withColumn("bucket", signBucket(col("emb")))
     // 4 hyperplanes = only 16 buckets — structurally hot at scale, and
     // the global top-10 needs full within-bucket coverage: LOSSLESS
     // triangle split (see D3/D4)

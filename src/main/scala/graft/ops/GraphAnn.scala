@@ -58,20 +58,6 @@ object GraphAnn {
   private[graft] val serveStats =
     new java.util.concurrent.ConcurrentHashMap[String, (Int, Long)]()
 
-  private def qticks(c: Column): Column =
-    transform(c, x => floor(x * lit(1000000.0) + lit(0.5)).cast("long"))
-
-  /** The 4-hyperplane sign-bucket expression over an `emb` column —
-    * shared by the build, the entry medoids, and the append insert.
-    */
-  private def bucketCol: Column = {
-    val planes = Dedup.hyperplanes(4, 64)
-    planes.zipWithIndex.map { case (p, i) =>
-      val planeCol = array(p.map(lit(_)): _*)
-      when(dot(col("emb"), planeCol) > 0, lit(1 << i)).otherwise(lit(0))
-    }.reduce(_ + _)
-  }
-
   /** (vec_id, tv) — the integer-tick view of an embeddings-shaped
     * frame (vec_id, embedding).
     */
@@ -159,7 +145,7 @@ object GraphAnn {
       // finding against adcEdgesArtifact) — the checkpointed copy has
       // its own LogicalRDD plan and no CacheManager interaction
       val tk = ticksOf(embs).localCheckpoint()
-      val bucket = bucketCol
+      val bucket = Dedup.signBucket(col("emb"))
       val e = embs
         .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
       // same-bucket init pairs under the lossless triangle guard (E7's
@@ -236,7 +222,7 @@ object GraphAnn {
     */
   private[graft] def entriesFrom(corpusEmbs: DataFrame, probeEmbs: DataFrame): DataFrame = {
       val tk = ticksOf(corpusEmbs)
-      val bucket = bucketCol
+      val bucket = Dedup.signBucket(col("emb"))
       val withB = corpusEmbs
         .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
         .withColumn("bucket", bucket)
@@ -799,8 +785,7 @@ object GraphAnn {
       val subs = 8
       val base = Similarity.pqIndexPath(spark, dir)
       val codes = Tables.parquet(spark, s"$base/codes")
-      val dt = Similarity.pqDistTablesFor(spark, dir, subs,
-        Similarity.readCodebook(spark, base))
+      val dt = Similarity.indexDistTables(spark, dir, base, subs)
       val probes = probeEntries(spark, dir)
         .select("qid", "ent").distinct()
         .join(dt.select(col("qid"), col("dtm")), Seq("qid"))

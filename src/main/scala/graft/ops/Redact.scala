@@ -91,19 +91,6 @@ object Redact {
       s.getField("redacted"))
   }
 
-  /** The composed-builtins cascade (six regex passes) — kept for the
-    * spec's fused-vs-composed equality pin, the cosineComposed pattern.
-    */
-  private[graft] def redactColsComposed(text: Column): (Seq[(String, Column)], Column) = {
-    val (counts, finalText) = patterns.foldLeft(
-      (Seq.empty[(String, Column)], text)) {
-      case ((acc, t), (name, pat, rep)) =>
-        val n = size(regexp_extract_all(t, lit(pat), lit(0)))
-        (acc :+ (name, n), regexp_replace(t, pat, rep))
-    }
-    (counts, finalText)
-  }
-
   def textRedact(spark: SparkSession, dir: String): DataFrame = {
     val dirty = Tables.documents(spark, dir)
       .select(col("doc_id"), injectCol(col("text"), col("doc_id")).as("dirty"))

@@ -17,8 +17,20 @@ import graft.tables.Tables
   * Scale shape: the probe set is always the small side and broadcast; the
   * big side is partition-parallel and never shuffled except for the final
   * per-probe top-k (a few rows per probe after the window).
+  *
+  * The vector codec every tier shares is written once here: the cell
+  * fold, assignment, nprobe route and audit of the IVF tiers; the PQ
+  * encoder, ADC distance tables and ADC top-k; and the persisted index's
+  * codebook writer, reader and serve. Ticks come from
+  * [[graft.functions.VectorOps.qticks]], sign buckets from
+  * [[Dedup.signBucket]].
   */
 object Similarity {
+
+  /** A PQ codebook: (codeword vec_id, per-subspace tick slices), sorted
+    * by codeword id.
+    */
+  private[graft] type Codebook = Array[(Long, Array[Array[Long]])]
 
   private def emb(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
@@ -27,6 +39,13 @@ object Similarity {
   private def probesOf(e: DataFrame): DataFrame =
     e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("qid"), col("emb").as("q_emb"))
+
+  /** The probe panel of an embeddings frame: every vec_id % 100 = 0. */
+  private def panel(embs: DataFrame): DataFrame = embs.filter(col("vec_id") % 100 === 0)
+
+  /** (qid, _q): a probe frame's vectors as tick arrays. */
+  private def probeTicks(probes: DataFrame): DataFrame =
+    probes.select(col("vec_id").as("qid"), qticks(asDouble(col("embedding"))).as("_q"))
 
   /** Per-probe top-k by cosine (desc), deterministic id tie-break. */
   private def topK(scored: DataFrame, k: Int): DataFrame = {
@@ -53,12 +72,8 @@ object Similarity {
     * scale shrink the scanned fraction geometrically at some recall cost).
     */
   def annLsh(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val planes = Dedup.hyperplanes(4, 64)
     val e = emb(spark, dir)
-    val bucket = planes.zipWithIndex.map { case (p, i) =>
-      val planeCol = array(p.map(lit(_)): _*)
-      when(dot(col("emb"), planeCol) > 0, lit(1 << i)).otherwise(lit(0))
-    }.reduce(_ + _)
+    val bucket = Dedup.signBucket(col("emb"))
     // hot-bucket guard, lossless: the corpus side is salt-split, and
     // each (tiny) probe is replicated across ALL of its bucket's salt
     // groups — per-task work is one salt group × the bucket's probes,
@@ -79,45 +94,81 @@ object Similarity {
     topK(scored, k)
   }
 
-  /** Embedding components as 10⁻⁶-tick integers — the shared quantization
-    * of E3/E4/E5/C13 that makes vector geometry exactly replayable.
+  /** The literal-codebook (d2, cell) struct fold every IVF consumer
+    * routes and assigns with: per row, one struct per cell holding the
+    * fused native IntSqDist to its tick centroid. Lexicographic struct
+    * ordering makes `array_min`/`array_sort` the argmin with the
+    * lowest-cell tie-break built in. The codebook is |cells|·dim longs
+    * collected once (bounded by the coarse-quantizer size, never by n)
+    * and inlined, so assignment and routing are pure codegen
+    * projections: zero shuffle, zero join on the data side.
     */
-  private def qticks(c: Column): Column =
-    transform(c, x => floor(x * lit(1000000.0) + lit(0.5)).cast("long"))
+  private def cellFoldOf[K](cb: Seq[(K, Array[Long])]): Column => Column = {
+    val cellsLit = array(cb.map { case (id, cv) =>
+      struct(lit(id).as("cell"), array(cv.map(lit(_)): _*).as("cv"))
+    }: _*)
+    q => transform(cellsLit, c =>
+      struct(intSqDist(q, c.getField("cv")).as("d2"),
+        c.getField("cell").as("cell")))
+  }
+
+  /** The cell of tick vector `q`: the fold's argmin. */
+  private def cellOf(fold: Column => Column, q: Column): Column =
+    array_min(fold(q)).getField("cell")
+
+  /** The nprobe route: one row per cell among the `nprobe` nearest to
+    * tick vector `q`, in (d2, cell) order.
+    */
+  private def route(fold: Column => Column, q: Column, nprobe: Int): Column =
+    explode(transform(slice(array_sort(fold(q)), 1, nprobe), p => p.getField("cell")))
+
+  /** (vec_id, emb, cell): every vector of an embeddings frame in its
+    * nearest cell of `fold`.
+    */
+  private def assignCells(embs: DataFrame, fold: Column => Column): DataFrame =
+    embs.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
+      .withColumn("_q", qticks(col("emb")))
+      .select(col("vec_id"), col("emb"), cellOf(fold, col("_q")).as("cell"))
+
+  /** The cell-balance audit: per cell, its occupancy (`n_vecs`), how
+    * many probes route to it under the nprobe route (`n_probe_hits`) and
+    * the scan mass it therefore contributes (`n_vecs · n_probe_hits`).
+    * `probes` carries each probe's tick vector as `_q`.
+    */
+  private def cellAudit(asg: DataFrame, probes: DataFrame, fold: Column => Column,
+                        nprobe: Int): DataFrame = {
+    val hist = asg.groupBy("cell")
+      .agg(count(lit(1)).cast("long").as("n_vecs"))
+    val hits = probes.select(route(fold, col("_q"), nprobe).as("cell"))
+      .groupBy("cell")
+      .agg(count(lit(1)).cast("long").as("n_probe_hits"))
+    hist.join(hits, Seq("cell"), "left")
+      .select(col("cell"), col("n_vecs"),
+        coalesce(col("n_probe_hits"), lit(0L)).as("n_probe_hits"),
+        (col("n_vecs") * coalesce(col("n_probe_hits"), lit(0L)))
+          .as("scan_mass"))
+  }
 
   /** E3 — IVF: coarse quantizer = per-label centroids in QUANTIZED
     * INTEGER space (bigint component sums, round-half tick means via
     * integer division — order-independent, so the codebook replays
     * bit-for-bit in DuckDB, same trick as C13 `ml_kmeans_assign`).
-    *
-    * Scale shape: the codebook is |cells|·dim longs — collected once
-    * (bounded by k, the coarse-quantizer size, never by n) and inlined
-    * as a LITERAL array. Cell assignment is then a pure projection: an
-    * `array_min` over per-cell integer-L2 structs, zero shuffle and zero
-    * crossJoin on the data side, fully inside whole-stage codegen. The
-    * probe side picks its `nprobe` closest cells with the same fold
-    * (`array_sort` + `slice`), and the only shuffles in the whole plan
-    * are the codebook's k·dim-group aggregate and the final per-probe
-    * top-k.
+    * The probe side picks its `nprobe` closest cells with the same fold,
+    * and the only shuffles in the whole plan are the codebook's
+    * k·dim-group aggregate and the final per-probe top-k.
     */
-  /** E3's coarse quantizer, exposed for reuse (D12 `dedup_semantic`
-    * clusters with the SAME assignment): returns the corpus with each
-    * vector's cell — (vec_id, emb, cell) — plus the literal-codebook
-    * distance fold a probe side uses to route itself. The codebook is
-    * |cells|·dim longs collected ONCE (bounded by the coarse-quantizer
-    * size, never by n); assignment is a pure codegen projection.
+  /** E3's coarse quantizer: the corpus with each vector's label cell —
+    * (vec_id, emb, cell) — plus the fold a probe side routes with.
     */
   private[graft] def ivfAssignment(spark: SparkSession,
                                  dir: String): (DataFrame, Column => Column) = {
-    val e = emb(spark, dir)
     // per-(cell, dim) integer centroid ticks: cq = round(sum(q)/cnt),
     // computed as (2·sq + cnt) div (2·cnt) — both engines truncate
     // integer division identically, so cq is exact cross-engine
     val cellRows = Tables.embeddings(spark, dir)
       .select(col("label").as("cell"),
         posexplode(asDouble(col("embedding"))).as(Seq("pos", "x")))
-      .select(col("cell"), col("pos"),
-        floor(col("x") * lit(1000000.0) + lit(0.5)).cast("long").as("q"))
+      .select(col("cell"), col("pos"), qtick(col("x")).as("q"))
       .groupBy("cell", "pos")
       .agg(sum("q").as("sq"), count(lit(1)).as("cnt"))
       .select(col("cell"), col("pos"),
@@ -127,33 +178,24 @@ object Similarity {
       .select(col("cell"), expr("transform(pairs, p -> p.cq)").as("cv"))
       .collect()
       .sortBy(_.getInt(0))
-    val cellsLit = array(cellRows.map { r =>
-      struct(lit(r.getInt(0)).as("cell"),
-        array(r.getSeq[Long](1).map(lit(_)): _*).as("cv"))
-    }: _*)
-    // per-row (d2, cell) structs against every cell; lexicographic
-    // struct ordering makes array_min/array_sort the argmin with the
-    // lowest-cell tie-break built in. The distance is the fused native
-    // IntSqDist — per row × per cell, the zip_with formulation would
-    // allocate a 64-element diff array each time.
-    def cellDists(q: Column): Column = transform(cellsLit, c =>
-      struct(
-        intSqDist(q, c.getField("cv")).as("d2"),
-        c.getField("cell").as("cell")))
-    val assigned = e.withColumn("_q", qticks(col("emb")))
-      .select(col("vec_id"), col("emb"),
-        array_min(cellDists(col("_q"))).getField("cell").as("cell"))
-    (assigned, cellDists)
+    val fold = cellFoldOf(cellRows.map(r => (r.getInt(0), r.getSeq[Long](1).toArray)))
+    (assignCells(Tables.embeddings(spark, dir), fold), fold)
   }
 
   def annCentroidIvf(spark: SparkSession, dir: String, k: Int = 5,
-                     nprobe: Int = 2): DataFrame = {
-    val (assigned, cellDists) = ivfAssignment(spark, dir)
+                     nprobe: Int = 2): DataFrame =
+    ivfServe(spark, dir, ivfAssignment(spark, dir), k, nprobe)
+
+  /** The IVF serve shared by E3 and E20: probes route to their `nprobe`
+    * nearest cells, the routed cells' members are scored by exact
+    * cosine, per-probe top-k.
+    */
+  private def ivfServe(spark: SparkSession, dir: String,
+                       assignment: (DataFrame, Column => Column),
+                       k: Int, nprobe: Int): DataFrame = {
+    val (assigned, fold) = assignment
     val probeCells = probesOf(emb(spark, dir)).withColumn("_q", qticks(col("q_emb")))
-      .select(col("qid"), col("q_emb"),
-        explode(transform(
-          slice(array_sort(cellDists(col("_q"))), 1, nprobe),
-          p => p.getField("cell"))).as("cell"))
+      .select(col("qid"), col("q_emb"), route(fold, col("_q"), nprobe).as("cell"))
     val scored = assigned.join(broadcast(probeCells), Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nid"),
@@ -185,34 +227,26 @@ object Similarity {
     * data side; the only shuffles are training's (cell, dim) partials
     * and the final per-probe top-k window.
     */
-  /** E20's trained assignment, exposed like [[ivfAssignment]]: the
-    * corpus with each vector's TRAINED cell — (vec_id, emb, cell) —
-    * plus the literal-codebook distance fold probes route with.
-    * Round11gSpec reads both assignments to pin that unsupervised
-    * routing actually departs from the label partition.
+  /** E20's trained assignment over an embeddings frame: each vector's
+    * cell under the trained one-subspace codebook `cb` — (vec_id, emb,
+    * cell) — plus the fold probes route with. Cell identity is the SEED
+    * vec_id: seeds are the lowest vec_ids in ascending order, so
+    * (d2, seed) ordering is (d2, ordinal) ordering, and the oracle's
+    * pqTrainCtes names cells by seed vec_id (`code`) too.
+    */
+  private[graft] def ivfTrainedAssignmentOf(embs: DataFrame,
+      cb: Codebook): (DataFrame, Column => Column) = {
+    val fold = cellFoldOf(cb.map { case (seed, slices) => (seed, slices(0)) })
+    (assignCells(embs, fold), fold)
+  }
+
+  /** [[ivfTrainedAssignmentOf]] over a dir's corpus with its memoized
+    * trained codebook. Round11gSpec reads it next to [[ivfAssignment]]
+    * to pin that unsupervised routing departs from the label partition.
     */
   private[graft] def ivfTrainedAssignment(spark: SparkSession, dir: String,
-      cells: Int): (DataFrame, Column => Column) = {
-    val cb = pqCodebook(spark, dir, 1, cells)
-    // Cell identity = the SEED vec_id (r12): seeds are the `cells`
-    // lowest vec_ids in ascending order, so (d2, seed) ordering is
-    // (d2, ordinal) ordering — E20's serve is bit-invariant to the
-    // rename — but D12 `dedup_semantic` OUTPUTS the cell, and the
-    // oracle's pqTrainCtes names cells by seed vec_id (`code`), so
-    // the seed id is the one name both engines can agree on.
-    val cellsLit = array(cb.map { case (seed, slices) =>
-      struct(lit(seed).as("cell"),
-        array(slices(0).map(lit(_)): _*).as("cv"))
-    }: _*)
-    def cellDists(q: Column): Column = transform(cellsLit, c =>
-      struct(intSqDist(q, c.getField("cv")).as("d2"),
-        c.getField("cell").as("cell")))
-    val e = emb(spark, dir)
-    val assigned = e.withColumn("_q", qticks(col("emb")))
-      .select(col("vec_id"), col("emb"),
-        array_min(cellDists(col("_q"))).getField("cell").as("cell"))
-    (assigned, cellDists)
-  }
+      cells: Int): (DataFrame, Column => Column) =
+    ivfTrainedAssignmentOf(Tables.embeddings(spark, dir), pqCodebook(spark, dir, 1, cells))
 
   /** The trained coarse quantizer's cell count — shared by E20, E10's
     * routing, and D12's clustering so the three operators train the
@@ -241,22 +275,8 @@ object Similarity {
     */
   def annCellAudit(spark: SparkSession, dir: String,
                    nprobe: Int = 2, cells: Int = ivfTrainedCells): DataFrame = {
-    val (assigned, cellDists) = ivfTrainedAssignment(spark, dir, cells)
-    val hist = assigned.groupBy("cell")
-      .agg(count(lit(1)).cast("long").as("n_vecs"))
-    val e = emb(spark, dir)
-    val probeCells = probesOf(e).withColumn("_q", qticks(col("q_emb")))
-      .select(col("qid"),
-        explode(transform(
-          slice(array_sort(cellDists(col("_q"))), 1, nprobe),
-          p => p.getField("cell"))).as("cell"))
-    val hits = probeCells.groupBy("cell")
-      .agg(count(lit(1)).cast("long").as("n_probe_hits"))
-    hist.join(hits, Seq("cell"), "left")
-      .select(col("cell"), col("n_vecs"),
-        coalesce(col("n_probe_hits"), lit(0L)).as("n_probe_hits"),
-        (col("n_vecs") * coalesce(col("n_probe_hits"), lit(0L)))
-          .as("scan_mass"))
+    val (assigned, fold) = ivfTrainedAssignment(spark, dir, cells)
+    cellAudit(assigned, probeTicks(panel(Tables.embeddings(spark, dir))), fold, nprobe)
       .orderBy("cell")
   }
 
@@ -275,39 +295,6 @@ object Similarity {
       transform(asDouble(col("embedding")),
         x => x * when(col("vec_id") % 3 === 0 && col("vec_id") >= cells,
           lit(0.001)).otherwise(lit(1.0))).as("embedding"))
-
-  /** E20's trained assignment over an ARBITRARY embeddings frame —
-    * the [[ivfTrainedAssignment]] core with the codebook trained on
-    * the passed frame (memoized under `tag`). Returns the assignment,
-    * the literal-codebook distance fold, and the trained codebook
-    * itself (cell seed id → full-dim tick centroid).
-    */
-  private[graft] def ivfTrainedAssignmentOf(spark: SparkSession,
-      embs: DataFrame, cells: Int, tag: String)
-      : (DataFrame, Column => Column, Array[(Long, Array[Long])]) = {
-    val cb = graft.QueryCaches.memo(s"sim.ivfCbOf:$tag:$cells") {
-      trainCodebookOf(embs, 1, cells, pqTrainRounds)
-    }.map { case (seed, slices) => (seed, slices(0)) }
-    val fold = cellFoldOf(cb)
-    val assigned = embs.withColumn("_q", qticks(asDouble(col("embedding"))))
-      .select(col("vec_id"), asDouble(col("embedding")).as("emb"),
-        array_min(fold(col("_q"))).getField("cell").as("cell"))
-    (assigned, fold, cb)
-  }
-
-  /** The literal-codebook (d2, cell) struct fold shared by every
-    * trained-cell consumer: lexicographic struct ordering makes
-    * `array_min`/`array_sort` the argmin with the lowest-cell
-    * tie-break built in.
-    */
-  private def cellFoldOf(cb: Array[(Long, Array[Long])]): Column => Column = {
-    val cellsLit = array(cb.map { case (id, cv) =>
-      struct(lit(id).as("cell"), array(cv.map(lit(_)): _*).as("cv"))
-    }: _*)
-    q => transform(cellsLit, c =>
-      struct(intSqDist(q, c.getField("cv")).as("d2"),
-        c.getField("cell").as("cell")))
-  }
 
   /** Subcell ids live far above any vec_id so a split can never
     * collide with a surviving cell's seed id.
@@ -351,7 +338,7 @@ object Similarity {
     */
   def annCellSplit(spark: SparkSession, dir: String,
                    nprobe: Int = 2, cells: Int = ivfTrainedCells): DataFrame =
-    graft.QueryCaches.memo(s"sim.cellSplit:$dir:$cells") {
+    graft.QueryCaches.memo(s"sim.cellSplit:$dir:$cells:$nprobe") {
       cellSplitAuditOf(spark, skewedEmbeddings(spark, dir, cells),
         s"cellsplit:$dir", nprobe, cells)
     }
@@ -365,8 +352,10 @@ object Similarity {
   private[graft] def cellSplitAuditOf(spark: SparkSession, skew: DataFrame,
       tag: String, nprobe: Int, cells: Int,
       probeMod: Long = 100L): DataFrame = {
-      val (assigned, preFold, cb) =
-        ivfTrainedAssignmentOf(spark, skew, cells, tag)
+      val cb = graft.QueryCaches.memo(s"sim.ivfCbOf:$tag:$cells") {
+        trainCodebookOf(skew, 1, cells, pqTrainRounds)
+      }
+      val (assigned, preFold) = ivfTrainedAssignmentOf(skew, cb)
       val asgCached = assigned.persist()
       // bounded driver state: per-cell occupancy, ≤ cells rows
       val histRows = asgCached.groupBy("cell")
@@ -387,60 +376,29 @@ object Similarity {
           val members = asgCached.filter(col("cell") === hc)
             .select(col("vec_id"), col("emb").as("embedding"))
           hc -> trainCodebookOf(members, 1, kHc, cellSplitTrainRounds)
-            .map { case (id, slices) => (id, slices(0)) }
+            .map { case (id, slices) => (id + cellSplitOffset, slices(0)) }
       }
       // mitigated assignment: hot members re-assigned to their
       // subcell by the same (d2, id) argmin; survivors untouched
       val reassigned = subCbs.foldLeft(col("cell")) { case (acc, (hc, scb)) =>
-        val fold = cellFoldOf(scb.map { case (sid, cv) =>
-          (sid + cellSplitOffset, cv) })
-        when(col("cell") === hc,
-          array_min(fold(col("_q"))).getField("cell")).otherwise(acc)
+        when(col("cell") === hc, cellOf(cellFoldOf(scb), col("_q"))).otherwise(acc)
       }
       val mitigated = asgCached.withColumn("_q", qticks(col("emb")))
         .select(col("vec_id"), reassigned.as("cell"))
       // routing centroids: survivors + subcells
-      val routeCb = cb.filterNot { case (id, _) => hotSet.contains(id) } ++
-        subCbs.flatMap { case (_, scb) =>
-          scb.map { case (sid, cv) => (sid + cellSplitOffset, cv) } }
-      val postFold = cellFoldOf(routeCb)
-      def audit(phase: String, asg: DataFrame,
-                fold: Column => Column): DataFrame = {
-        val hist = asg.groupBy("cell")
-          .agg(count(lit(1)).cast("long").as("n_vecs"))
-        val probeCells = skew.filter(col("vec_id") % probeMod === 0)
-          .withColumn("_q", qticks(asDouble(col("embedding"))))
-          .select(col("vec_id").as("qid"),
-            explode(transform(slice(array_sort(fold(col("_q"))), 1, nprobe),
-              p => p.getField("cell"))).as("cell"))
-        val hits = probeCells.groupBy("cell")
-          .agg(count(lit(1)).cast("long").as("n_probe_hits"))
-        hist.join(hits, Seq("cell"), "left")
-          .select(lit(phase).as("phase"), col("cell"), col("n_vecs"),
-            coalesce(col("n_probe_hits"), lit(0L)).as("n_probe_hits"),
-            (col("n_vecs") * coalesce(col("n_probe_hits"), lit(0L)))
-              .as("scan_mass"))
-      }
+      val routeCb = cb.map { case (id, slices) => (id, slices(0)) }
+        .filterNot { case (id, _) => hotSet.contains(id) } ++ subCbs.flatMap(_._2)
+      val probes = probeTicks(skew.filter(col("vec_id") % probeMod === 0))
+      def audit(phase: String, asg: DataFrame, fold: Column => Column): DataFrame =
+        cellAudit(asg, probes, fold, nprobe).select(lit(phase).as("phase"), col("*"))
       audit("pre", asgCached.select("vec_id", "cell"), preFold)
-        .unionByName(audit("post", mitigated, postFold))
+        .unionByName(audit("post", mitigated, cellFoldOf(routeCb)))
         .orderBy("phase", "cell")
   }
 
   def annIvfTrained(spark: SparkSession, dir: String, k: Int = 5,
-                    nprobe: Int = 2, cells: Int = ivfTrainedCells): DataFrame = {
-    val (assigned, cellDists) = ivfTrainedAssignment(spark, dir, cells)
-    val e = emb(spark, dir)
-    val probeCells = probesOf(e).withColumn("_q", qticks(col("q_emb")))
-      .select(col("qid"), col("q_emb"),
-        explode(transform(
-          slice(array_sort(cellDists(col("_q"))), 1, nprobe),
-          p => p.getField("cell"))).as("cell"))
-    val scored = assigned.join(broadcast(probeCells), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        cosine(col("q_emb"), col("emb")).as("cos_sim"))
-    topK(scored, k)
-  }
+                    nprobe: Int = 2, cells: Int = ivfTrainedCells): DataFrame =
+    ivfServe(spark, dir, ivfTrainedAssignment(spark, dir, cells), k, nprobe)
 
   /** E4 — product quantization: 64 dims → 8 subspaces × 8 dims, each
     * subvector coded to its nearest of 16 codewords (the sub-slices of
@@ -457,12 +415,11 @@ object Similarity {
     * n) and inlined; assignment is then a pure codegen projection, no
     * explode, no join, no shuffle on the data side.
     */
-  /** Driver-collected PQ codebook: (codeword vec_id, per-subspace tick
-    * slices), sorted by codeword id. Bounded by k·dim — the coarse
-    * training state every PQ index ships to its scan side.
+  /** Driver-collected PQ codebook of a dir's corpus, memoized. Bounded
+    * by k·dim — the coarse training state every PQ index ships to its
+    * scan side.
     */
-  private def pqCodebook(spark: SparkSession, dir: String, subs: Int,
-                         k: Int): Array[(Long, Array[Array[Long]])] =
+  private def pqCodebook(spark: SparkSession, dir: String, subs: Int, k: Int): Codebook =
     graft.QueryCaches.memo(s"sim.pqTrainedCb:$dir:$subs:$k") {
       trainCodebookOf(Tables.embeddings(spark, dir), subs, k, pqTrainRounds)
     }
@@ -476,21 +433,47 @@ object Similarity {
     */
   private[graft] val pqTrainRounds = 2
 
+  /** Subspace `s` of tick vector `q` under `subs` subspaces. */
+  private def subv(q: Column, s: Int, subs: Int): Column =
+    slice(q, s * (64 / subs) + 1, 64 / subs)
+
+  /** The PQ encoder: per subspace `s`, the fused native
+    * [[graft.functions.PqNearest]] argmin of tick vector `q` against the
+    * literal codebook, as column `enc_s` = d2·256 + ordinal (decode with
+    * [[encOrd]] and [[encD2]]). Ordinals follow codeword ids, so the
+    * expression's lowest-ordinal tie-break IS the (d2, code)
+    * lowest-code rule.
+    */
+  private def encode(q: Column, subs: Int, cb: Codebook): Seq[Column] =
+    (0 until subs).map(s => pqNearest(subv(q, s, subs), cb.map(_._2(s).toSeq)).as(s"enc_$s"))
+
+  /** The codebook ordinal [[encode]] chose for subspace `s`. */
+  private def encOrd(s: Int): Column = col(s"enc_$s").bitwiseAND(lit(255L)).cast("int")
+
+  /** The exact integer L2 to that codeword. */
+  private def encD2(s: Int): Column = shiftright(col(s"enc_$s"), 8)
+
+  /** A probe's ADC distance table: dtm[sub][ord] = exact integer L2
+    * from tick vector `q`'s subvector to that codeword, one fused
+    * native [[graft.functions.PqDists]] row per subspace.
+    */
+  private def distTable(q: Column, subs: Int, cb: Codebook): Column =
+    array((0 until subs).map(s => pqDists(subv(q, s, subs), cb.map(_._2(s).toSeq))): _*)
+
   /** TRAINED per-subspace PQ codebook (round-11 directive #2): seeds =
     * the k lowest-vec_id vectors' sub-slices (the former codebook,
     * [[codebookOf]]), then [[pqTrainRounds]] exact Lloyd iterations per
     * subspace in INTEGER TICK SPACE — C31's discipline
     * (graft.ml.Ml5.mlKmeansLloyd) applied to the S independent
-    * k-means problems PQ actually is: assignment by the fused native
-    * [[graft.functions.PqNearest]] argmin against the literal codebook
-    * (exact bigint L2, lowest-ORDINAL tie-break = the (d2, code)
-    * lowest-code rule, ordinals sorted by seed id), update by
-    * round-half integer division (2·Σq + n) div (2n) (truncation
-    * toward zero — bit-identical to DuckDB's `//`, measured), empty
-    * cells keep their previous centroid. Every round is deterministic
-    * on any engine/partitioning/merge order, so the ORACLE REPLAYS THE
-    * TRAINING ITSELF as unrolled CTE rounds and the driver hash-proves
-    * the trained codebook, not just its consumption.
+    * k-means problems PQ actually is: assignment by [[encode]] against
+    * the literal codebook (exact bigint L2, lowest-ORDINAL tie-break =
+    * the (d2, code) lowest-code rule, ordinals sorted by seed id),
+    * update by round-half integer division (2·Σq + n) div (2n)
+    * (truncation toward zero — bit-identical to DuckDB's `//`,
+    * measured), empty cells keep their previous centroid. Every round
+    * is deterministic on any engine/partitioning/merge order, so the
+    * ORACLE REPLAYS THE TRAINING ITSELF as unrolled CTE rounds and the
+    * driver hash-proves the trained codebook, not just its consumption.
     *
     * Codeword IDENTITY stays the seed's vec_id (stable position, code
     * values unchanged across training) — only the tick VALUES move —
@@ -504,18 +487,14 @@ object Similarity {
     * trains K in the thousands at 100 TB.
     */
   private[graft] def trainCodebookOf(embs: DataFrame, subs: Int, k: Int,
-                                     rounds: Int): Array[(Long, Array[Array[Long]])] = {
+                                     rounds: Int): Codebook = {
     val dimsPerSub = 64 / subs
     var cb = codebookOf(embs, subs, k)
     val e = embs.select(qticks(asDouble(col("embedding"))).as("_q"))
     (1 to rounds).foreach { _ =>
-      val best = (0 until subs).map { s =>
-        pqNearest(slice(col("_q"), s * dimsPerSub + 1, dimsPerSub),
-          cb.map(_._2(s).toSeq)).bitwiseAND(lit(255L)).cast("int").as(s"ord_$s")
-      }
-      val upd = e.select(col("_q") +: best: _*)
+      val upd = e.select(col("_q") +: encode(col("_q"), subs, cb): _*)
         .select(col("_q"),
-          array((0 until subs).map(s => col(s"ord_$s")): _*).as("_ords"))
+          array((0 until subs).map(encOrd): _*).as("_ords"))
         .select(posexplode(col("_q")).as(Seq("pos", "x")), col("_ords"))
         .select(expr(s"pos div $dimsPerSub").cast("int").as("sub"),
           expr(s"pos % $dimsPerSub").cast("int").as("dimin"),
@@ -537,66 +516,39 @@ object Similarity {
 
   /** (vec_id, codes, ords, d2s): per-subspace nearest codeword (value,
     * codebook ordinal, exact integer L2) as a PURE PROJECTION — one
-    * fused native [[graft.functions.PqNearest]] argmin per subspace
-    * against the literal codebook, decoded with shifts. The codeword
-    * ordinals are sorted by codeword id, so the expression's
-    * lowest-ordinal tie-break IS the (d2, code) lowest-code tie-break.
-    * Replaces the former explode + broadcast-join + (vec, sub, code)
-    * aggregate + window: zero shuffle, zero join on the data side, and
+    * [[encode]] argmin per subspace against the literal codebook,
+    * decoded with shifts: zero shuffle, zero join on the data side, and
     * the generated method stays small enough to JIT (the composed
     * array_min-over-structs tree pushed the whole fused stage past the
     * JVM's JIT method limit into interpreted bytecode).
     */
   private def pqAssign(spark: SparkSession, dir: String, subs: Int,
                        k: Int): DataFrame = {
-    val dimsPerSub = 64 / subs
     val cb = pqCodebook(spark, dir, subs, k)
     val codeVals = array(cb.map(c => lit(c._1)): _*)
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), qticks(asDouble(col("embedding"))).as("_q"))
-    val best = (0 until subs).map { s =>
-      pqNearest(slice(col("_q"), s * dimsPerSub + 1, dimsPerSub),
-        cb.map(_._2(s).toSeq)).as(s"enc_$s")
-    }
-    def ord(s: Int): Column = col(s"enc_$s").bitwiseAND(lit(255L)).cast("int")
     // persisted: the coded corpus IS the PQ index — built once, scanned
     // by every probe batch (16 B/vector of state, the whole point of
     // PQ). The cache boundary also keeps the encode loops out of the
     // downstream ADC join stage, which must stay under the JVM's 8 KB
     // JIT method limit to scan codes at speed.
-    val coded = graft.QueryCaches.memo(s"sim.pqAssign:$dir:$subs:$k") {
-      e.select(col("vec_id") +: best: _*)
-      .select(col("vec_id"),
-        array((0 until subs).map(s => element_at(codeVals, ord(s) + 1)): _*).as("codes"),
-        array((0 until subs).map(ord): _*).as("ords"),
-        array((0 until subs).map(s => shiftright(col(s"enc_$s"), 8)): _*).as("d2s"))
-      .persist()
+    graft.QueryCaches.memo(s"sim.pqAssign:$dir:$subs:$k") {
+      Tables.embeddings(spark, dir)
+        .select(col("vec_id"), qticks(asDouble(col("embedding"))).as("_q"))
+        .select(col("vec_id") +: encode(col("_q"), subs, cb): _*)
+        .select(col("vec_id"),
+          array((0 until subs).map(s => element_at(codeVals, encOrd(s) + 1)): _*).as("codes"),
+          array((0 until subs).map(encOrd): _*).as("ords"),
+          array((0 until subs).map(encD2): _*).as("d2s"))
+        .persist()
     }
-    coded
   }
 
-  /** Per-probe ADC distance tables as ONE projection: dtm[sub][ord] =
-    * exact integer L2 from the probe's subvector to that codeword. The
-    * probe set scales with n (vec_id % 100), so it stays a DataFrame —
-    * |probes| rows of S·K longs each — and is broadcast to the code scan.
+  /** Per-probe ADC distance tables for a probe frame + explicit
+    * codebook: |probes| rows of S·K longs each, broadcast to the code
+    * scan.
     */
-  private def pqDistTables(spark: SparkSession, dir: String, subs: Int,
-                           k: Int): DataFrame =
-    pqDistTablesFor(spark, dir, subs, pqCodebook(spark, dir, subs, k))
-
-  /** [[pqDistTables]] against an explicit codebook (the reloaded-index
-    * path hands in the codebook read back from storage).
-    */
-  private[graft] def pqDistTablesFor(spark: SparkSession, dir: String, subs: Int,
-                              cb: Array[(Long, Array[Array[Long]])]): DataFrame = {
-    val dimsPerSub = 64 / subs
-    Tables.embeddings(spark, dir).filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("qid"), qticks(asDouble(col("embedding"))).as("_q"))
-      .select(col("qid"), array((0 until subs).map { s =>
-        pqDists(slice(col("_q"), s * dimsPerSub + 1, dimsPerSub),
-          cb.map(_._2(s).toSeq))
-      }: _*).as("dtm"))
-  }
+  private[graft] def distTablesOf(probes: DataFrame, subs: Int, cb: Codebook): DataFrame =
+    probeTicks(probes).select(col("qid"), distTable(col("_q"), subs, cb).as("dtm"))
 
   /** ADC distance of a coded vector to a probe: S table lookups summed.
     * Fixed-arity `element_at` chain, not zip_with/aggregate — the
@@ -607,6 +559,22 @@ object Similarity {
     (0 until subs).map { s =>
       element_at(element_at(col("dtm"), s + 1), element_at(col("ords"), s + 1) + 1)
     }.reduce(_ + _)
+
+  /** (qid, nid, adc_dist) of every (code row, probe) pair but self. */
+  private def adcScored(pairs: DataFrame, subs: Int): DataFrame =
+    pairs.filter(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id").as("nid"), adcDist(subs).as("adc_dist"))
+
+  /** The ADC rank tail: per-probe top-k by (adc_dist, nid). */
+  private def adcTopK(pairs: DataFrame, subs: Int, topK: Int): DataFrame = {
+    val w = Window.partitionBy("qid").orderBy(col("adc_dist"), col("nid"))
+    adcScored(pairs, subs)
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= topK)
+      .select(col("qid").as("query_id"), col("rank"),
+        col("nid").as("neighbor_id"), col("adc_dist"))
+      .orderBy("query_id", "rank")
+  }
 
   def annPq(spark: SparkSession, dir: String, subs: Int = 8, k: Int = 16): DataFrame = {
     val codeCols = (0 until subs).map(i =>
@@ -631,25 +599,16 @@ object Similarity {
   def annPqSearch(spark: SparkSession, dir: String, subs: Int = 8, k: Int = 16,
                   topK: Int = 5): DataFrame =
     adcSearch(pqAssign(spark, dir, subs, k),
-      pqDistTables(spark, dir, subs, k), subs, topK)
+      distTablesOf(panel(Tables.embeddings(spark, dir)), subs, pqCodebook(spark, dir, subs, k)),
+      subs, topK)
 
-  /** The ADC scan shared by E5 (in-session codes) and E9 (codes reloaded
-    * from the persisted index): broadcast the probe distance tables over
-    * the code table, sum S lookups per pair, per-probe top-k.
+  /** The ADC scan shared by E5 (in-session codes) and every persisted
+    * index serve: broadcast the probe distance tables over the code
+    * table, sum S lookups per pair, per-probe top-k.
     */
   private[graft] def adcSearch(codes: DataFrame, distTables: DataFrame, subs: Int,
-                        topK: Int): DataFrame = {
-    val w = Window.partitionBy("qid").orderBy(col("adc_dist"), col("nid"))
-    codes
-      .crossJoin(broadcast(distTables))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"), adcDist(subs).as("adc_dist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select(col("qid").as("query_id"), col("rank"),
-        col("nid").as("neighbor_id"), col("adc_dist"))
-      .orderBy("query_id", "rank")
-  }
+                        topK: Int): DataFrame =
+    adcTopK(codes.crossJoin(broadcast(distTables)), subs, topK)
 
   /** E9 — `ann_index_persist`: the PQ index as a PERSISTED storage
     * artifact, the vector-side analog of C9/C10's model
@@ -668,33 +627,51 @@ object Similarity {
   private[graft] def pqIndexPath(spark: SparkSession, dir: String,
                                  subs: Int = 8, k: Int = 16): String =
     graft.QueryCaches.memo(s"sim.pqIndex:$dir:$subs:$k") {
-      import spark.implicits._
       val base = graft.Scratch.dir("pqindex")
-      pqCodebook(spark, dir, subs, k)
-        .map { case (code, ticks) => (code, ticks.map(_.toSeq).toSeq) }
-        .toSeq.toDF("code", "subs")
-        .write.mode("overwrite").parquet(s"$base/codebook")
+      writeCodebook(spark, s"$base/codebook", pqCodebook(spark, dir, subs, k))
       // the memoized code frame stays cached — E4/E5/E8 serve from it
       pqAssign(spark, dir, subs, k).select("vec_id", "ords")
         .write.mode("overwrite").parquet(s"$base/codes")
       base
     }
 
+  /** The codebook artifact every persisted PQ index stores next to its
+    * codes: one (code, subs) row per codeword.
+    */
+  private[graft] def writeCodebook(spark: SparkSession, path: String, cb: Codebook): Unit = {
+    import spark.implicits._
+    cb.map { case (code, ticks) => (code, ticks.map(_.toSeq).toSeq) }
+      .toSeq.toDF("code", "subs")
+      .write.mode("overwrite").parquet(path)
+  }
+
   /** The bounded S·K codebook reload every serving path shares — the
     * same shape as the build-time driver state.
     */
-  private[graft] def readCodebook(spark: SparkSession,
-                                  base: String): Array[(Long, Array[Array[Long]])] =
+  private[graft] def readCodebook(spark: SparkSession, base: String): Codebook =
     Tables.parquet(spark, s"$base/codebook").collect()
       .map(r => (r.getLong(0),
         r.getSeq[scala.collection.Seq[Long]](1).map(_.toArray).toArray))
       .sortBy(_._1)
 
+  /** The probe panel's ADC distance tables against the codebook stored
+    * under a persisted index's `base`.
+    */
+  private[graft] def indexDistTables(spark: SparkSession, dir: String, base: String,
+                                     subs: Int): DataFrame =
+    distTablesOf(panel(Tables.embeddings(spark, dir)), subs, readCodebook(spark, base))
+
+  /** Serve a persisted PQ index: the ADC search of `codes` with the
+    * distance tables of the codebook stored under `base`.
+    */
+  private[graft] def serveIndex(spark: SparkSession, dir: String, base: String,
+                                codes: DataFrame, subs: Int, topK: Int): DataFrame =
+    adcSearch(codes, indexDistTables(spark, dir, base, subs), subs, topK)
+
   def annIndexPersist(spark: SparkSession, dir: String, subs: Int = 8,
                       k: Int = 16, topK: Int = 5): DataFrame = {
     val base = pqIndexPath(spark, dir, subs, k)
-    adcSearch(Tables.parquet(spark, s"$base/codes"),
-      pqDistTablesFor(spark, dir, subs, readCodebook(spark, base)), subs, topK)
+    serveIndex(spark, dir, base, Tables.parquet(spark, s"$base/codes"), subs, topK)
   }
 
   /** Per-dir tombstone sidecar for E21 — the takedown batch
@@ -751,8 +728,7 @@ object Similarity {
     val tomb = Tables.parquet(spark, s"$gd/tombstones")
     val codes = Tables.parquet(spark, codesPath)
       .join(broadcast(tomb), Seq("vec_id"), "left_anti")
-    adcSearch(codes,
-      pqDistTablesFor(spark, dir, subs, readCodebook(spark, base)), subs, topK)
+    serveIndex(spark, dir, base, codes, subs, topK)
   }
 
   /** E12 — `ann_index_append`: daily-delta maintenance of the persisted
@@ -781,13 +757,9 @@ object Similarity {
     */
   private[graft] def buildPqBase(spark: SparkSession, dir: String, base: String,
                                  subs: Int, k: Int): Unit = {
-    import spark.implicits._
-    pqCodebook(spark, dir, subs, k)
-      .map { case (code, ticks) => (code, ticks.map(_.toSeq).toSeq) }
-      .toSeq.toDF("code", "subs")
-      .write.mode("overwrite").parquet(s"$base/codebook")
-    pqOrdsFor(Tables.embeddings(spark, dir).filter(col("vec_id") % 10 =!= 0),
-      subs, pqCodebook(spark, dir, subs, k))
+    val cb = pqCodebook(spark, dir, subs, k)
+    writeCodebook(spark, s"$base/codebook", cb)
+    pqOrdsFor(Tables.embeddings(spark, dir).filter(col("vec_id") % 10 =!= 0), subs, cb)
       .write.mode("overwrite").parquet(s"$base/codes")
   }
 
@@ -797,22 +769,14 @@ object Similarity {
       subs, readCodebook(spark, base))
       .write.mode("append").parquet(s"$base/codes")
 
-  /** Encode an embeddings-shaped frame against an EXPLICIT codebook —
-    * the literal-codebook projection shared by the base build and the
+  /** (vec_id, ords): an embeddings-shaped frame [[encode]]d against an
+    * EXPLICIT codebook — the projection shared by the base build and the
     * frozen-codebook delta append.
     */
-  private[graft] def pqOrdsFor(embs: DataFrame, subs: Int,
-                        cb: Array[(Long, Array[Array[Long]])]): DataFrame = {
-    val dimsPerSub = 64 / subs
-    val best = (0 until subs).map { s =>
-      pqNearest(slice(col("_q"), s * dimsPerSub + 1, dimsPerSub),
-        cb.map(_._2(s).toSeq)).as(s"enc_$s")
-    }
+  private[graft] def pqOrdsFor(embs: DataFrame, subs: Int, cb: Codebook): DataFrame =
     embs.select(col("vec_id"), qticks(asDouble(col("embedding"))).as("_q"))
-      .select(col("vec_id") +: best: _*)
-      .select(col("vec_id"), array((0 until subs).map(s =>
-        col(s"enc_$s").bitwiseAND(lit(255L)).cast("int")): _*).as("ords"))
-  }
+      .select(col("vec_id") +: encode(col("_q"), subs, cb): _*)
+      .select(col("vec_id"), array((0 until subs).map(encOrd): _*).as("ords"))
 
   private[graft] def pqAppendIndexPath(spark: SparkSession, dir: String,
                                        subs: Int = 8, k: Int = 16): String =
@@ -826,8 +790,7 @@ object Similarity {
   def annIndexAppend(spark: SparkSession, dir: String, subs: Int = 8,
                      k: Int = 16, topK: Int = 5): DataFrame = {
     val base = pqAppendIndexPath(spark, dir, subs, k)
-    adcSearch(Tables.parquet(spark, s"$base/codes"),
-      pqDistTablesFor(spark, dir, subs, readCodebook(spark, base)), subs, topK)
+    serveIndex(spark, dir, base, Tables.parquet(spark, s"$base/codes"), subs, topK)
   }
 
   /** E13 — `ann_index_refresh` (round-8 directive #4): ACTING on
@@ -869,8 +832,7 @@ object Similarity {
     * the pre-round-11 production codebook, kept as the baseline the
     * quantization-error spec measures the training gain against).
     */
-  private[graft] def codebookOf(embs: DataFrame, subs: Int,
-                                k: Int): Array[(Long, Array[Array[Long]])] = {
+  private[graft] def codebookOf(embs: DataFrame, subs: Int, k: Int): Codebook = {
     val dimsPerSub = 64 / subs
     embs.orderBy("vec_id").limit(k)
       .select(col("vec_id"), qticks(asDouble(col("embedding"))).as("q"))
@@ -884,48 +846,19 @@ object Similarity {
     * explicit codebook — the training-gain witness Round11bSpec pins
     * (trained strictly below the lowest-id seeds, monotone per round).
     */
-  private[graft] def quantErrOf(embs: DataFrame, subs: Int,
-                                cb: Array[(Long, Array[Array[Long]])]): Long = {
-    val dimsPerSub = 64 / subs
-    val d2 = (0 until subs).map { s =>
-      shiftright(pqNearest(slice(col("_q"), s * dimsPerSub + 1, dimsPerSub),
-        cb.map(_._2(s).toSeq)), 8)
-    }.reduce(_ + _)
+  private[graft] def quantErrOf(embs: DataFrame, subs: Int, cb: Codebook): Long =
     embs.select(qticks(asDouble(col("embedding"))).as("_q"))
-      .agg(sum(d2)).head().getLong(0)
-  }
-
-  private[graft] def writeCodebook(spark: SparkSession, path: String,
-                                   cb: Array[(Long, Array[Array[Long]])]): Unit = {
-    import spark.implicits._
-    cb.map { case (code, ticks) => (code, ticks.map(_.toSeq).toSeq) }
-      .toSeq.toDF("code", "subs")
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Probe ADC distance tables for an ARBITRARY probe frame + explicit
-    * codebook (generalizes [[pqDistTablesFor]]'s hardwired %100 scan).
-    */
-  private[graft] def distTablesOf(probes: DataFrame, subs: Int,
-                                  cb: Array[(Long, Array[Array[Long]])]): DataFrame = {
-    val dimsPerSub = 64 / subs
-    probes
-      .select(col("vec_id").as("qid"), qticks(asDouble(col("embedding"))).as("_q"))
-      .select(col("qid"), array((0 until subs).map { s =>
-        pqDists(slice(col("_q"), s * dimsPerSub + 1, dimsPerSub),
-          cb.map(_._2(s).toSeq))
-      }: _*).as("dtm"))
-  }
+      .select(encode(col("_q"), subs, cb): _*)
+      .agg(sum((0 until subs).map(encD2).reduce(_ + _))).head().getLong(0)
 
   /** The recall gate's numerator/denominator: hits = |ADC-top5 ∩ exact
     * integer-L2 top5| over the %100 probe set, truth = |exact top5|.
     * All-integer, deterministic tie-breaks — the refresh decision
     * replays bit-for-bit in the oracle's SQL gate.
     */
-  private[graft] def recallCounts(embs: DataFrame, codes: DataFrame,
-                                  cb: Array[(Long, Array[Array[Long]])],
+  private[graft] def recallCounts(embs: DataFrame, codes: DataFrame, cb: Codebook,
                                   subs: Int, topK: Int): (Long, Long) = {
-    val probes = embs.filter(col("vec_id") % 100 === 0)
+    val probes = panel(embs)
     val approx = adcSearch(codes, distTablesOf(probes, subs, cb), subs, topK)
       .select(col("query_id").as("qid"), col("neighbor_id").as("nid"))
     val qarr = probes
@@ -982,65 +915,39 @@ object Similarity {
   def annIndexRefresh(spark: SparkSession, dir: String, subs: Int = 8,
                       k: Int = 16, topK: Int = 5): DataFrame = {
     val gen = pqRefreshIndexPath(spark, dir, subs, k)
-    adcSearch(Tables.parquet(spark, s"$gen/codes"),
-      distTablesOf(Tables.embeddings(spark, dir).filter(col("vec_id") % 100 === 0),
-        subs, readCodebook(spark, gen)), subs, topK)
+    serveIndex(spark, dir, gen, Tables.parquet(spark, s"$gen/codes"), subs, topK)
   }
 
   /** E10 — `ann_ivf_pq`: IVF + PQ composed — the FAISS-IVFADC layout
     * that actually serves billion-vector corpora. The index is ONE
-    * projection over the embeddings scan (cell = E3's literal-codebook
-    * argmin, codes = E4's per-subspace `PqNearest` argmins — zero
-    * shuffle, zero join), memoized as the cell-tagged 17 B/vector code
-    * list. A probe routes to its `nprobe` nearest cells and runs E5's
-    * ADC lookup-table scan ONLY over those cells' code lists: where E5
+    * projection over the embeddings scan (cell = E20's trained
+    * literal-codebook argmin, codes = E4's [[encode]] — zero shuffle,
+    * zero join), memoized as the cell-tagged 17 B/vector code list. A
+    * probe routes to its `nprobe` nearest cells and runs E5's ADC
+    * lookup-table scan ONLY over those cells' code lists: where E5
     * broadcasts its tables against every code, the IVFADC join on
     * `cell` touches nprobe/|cells| of the corpus — the missing
     * composition between E3 (routing, full-width vectors) and E5
-    * (compression, full scan).
+    * (compression, full scan). Routing rides E20's LABEL-FREE trained
+    * coarse quantizer, so no label is read (Round11gSpec); E3 stays the
+    * label-derived contract twin.
     */
   def annIvfPq(spark: SparkSession, dir: String, subs: Int = 8, k: Int = 16,
                nprobe: Int = 2, topK: Int = 5,
                cells: Int = ivfTrainedCells): DataFrame = {
-    val dimsPerSub = 64 / subs
-    // r12 (r11 verdict directive #4): routing now rides E20's
-    // LABEL-FREE trained coarse quantizer — on a real unlabeled corpus
-    // the former label-derived ivfAssignment would throw (proven by
-    // Round11gSpec's deleted-column test, now extended to this path).
-    // E3 stays the label-derived contract twin.
-    val (assigned, cellDists) = ivfTrainedAssignment(spark, dir, cells)
+    val (assigned, fold) = ivfTrainedAssignment(spark, dir, cells)
     val cb = pqCodebook(spark, dir, subs, k)
-    val best = (0 until subs).map { s =>
-      pqNearest(slice(col("_q"), s * dimsPerSub + 1, dimsPerSub),
-        cb.map(_._2(s).toSeq)).as(s"enc_$s")
-    }
-    def ord(s: Int): Column = col(s"enc_$s").bitwiseAND(lit(255L)).cast("int")
-    val idx = graft.QueryCaches.memo(s"sim.ivfPqIndex:$dir:$subs:$k") {
+    val idx = graft.QueryCaches.memo(s"sim.ivfPqIndex:$dir:$subs:$k:$cells") {
       assigned.withColumn("_q", qticks(col("emb")))
-        .select(Seq(col("vec_id"), col("cell")) ++ best: _*)
+        .select(Seq(col("vec_id"), col("cell")) ++ encode(col("_q"), subs, cb): _*)
         .select(col("vec_id"), col("cell"),
-          array((0 until subs).map(ord): _*).as("ords"))
+          array((0 until subs).map(encOrd): _*).as("ords"))
         .persist()
     }
-    val probes = Tables.embeddings(spark, dir).filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("qid"), qticks(asDouble(col("embedding"))).as("_q"))
-      .select(col("qid"),
-        explode(transform(
-          slice(array_sort(cellDists(col("_q"))), 1, nprobe),
-          p => p.getField("cell"))).as("cell"),
-        array((0 until subs).map { s =>
-          pqDists(slice(col("_q"), s * dimsPerSub + 1, dimsPerSub),
-            cb.map(_._2(s).toSeq))
-        }: _*).as("dtm"))
-    val w = Window.partitionBy("qid").orderBy(col("adc_dist"), col("nid"))
-    idx.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"), adcDist(subs).as("adc_dist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select(col("qid").as("query_id"), col("rank"),
-        col("nid").as("neighbor_id"), col("adc_dist"))
-      .orderBy("query_id", "rank")
+    val probes = probeTicks(panel(Tables.embeddings(spark, dir)))
+      .select(col("qid"), route(fold, col("_q"), nprobe).as("cell"),
+        distTable(col("_q"), subs, cb).as("dtm"))
+    adcTopK(idx.join(broadcast(probes), Seq("cell")), subs, topK)
   }
 
   /** E11 — `ann_recall_eval`: index-quality evaluation — recall@k of
@@ -1136,12 +1043,8 @@ object Similarity {
     * lives in exactly one bucket so no candidate dedup is needed.
     */
   def annRerank(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val planes = Dedup.hyperplanes(4, 64)
     val e = emb(spark, dir)
-    val bucket = planes.zipWithIndex.map { case (p, i) =>
-      val planeCol = array(p.map(lit(_)): _*)
-      when(dot(col("emb"), planeCol) > 0, lit(1 << i)).otherwise(lit(0))
-    }.reduce(_ + _)
+    val bucket = Dedup.signBucket(col("emb"))
     // hot-bucket guard, lossless with a probe-side twist: the expanded
     // probes visit FOREIGN buckets (Hamming-1 neighbors), so each
     // expanded row replicates across THAT bucket's salt groups via the
@@ -1182,16 +1085,12 @@ object Similarity {
     * (E6) fills those in.
     */
   def annKnnJoin(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    val planes = Dedup.hyperplanes(4, 64)
     val e = emb(spark, dir)
-    val bucket = planes.zipWithIndex.map { case (p, i) =>
-      val planeCol = array(p.map(lit(_)): _*)
-      when(dot(col("emb"), planeCol) > 0, lit(1 << i)).otherwise(lit(0))
-    }.reduce(_ + _)
     // hot-bucket guard on the full self-join, LOSSLESS: every vector's
     // top-3 is defined over its WHOLE bucket, so the triangle split
     // bounds the task without dropping candidate pairs (see HotBucket)
-    val bucketed = HotBucket.triangleReplicate(e.withColumn("bucket", bucket),
+    val bucketed = HotBucket.triangleReplicate(
+      e.withColumn("bucket", Dedup.signBucket(col("emb"))),
       Seq("bucket"), col("vec_id"), s"lsh16.buckets:$dir")
     val scored = bucketed.as("l")
       .join(bucketed.as("r"), Seq("bucket", "tmin", "tmax"))
@@ -1218,11 +1117,11 @@ object Similarity {
     */
   def annPqRefine(spark: SparkSession, dir: String, subs: Int = 8, k: Int = 16,
                   shortlistK: Int = 50, topK: Int = 5): DataFrame = {
+    val embs = Tables.embeddings(spark, dir)
     val wShort = Window.partitionBy("qid").orderBy(col("adc_dist"), col("nid"))
-    val short = pqAssign(spark, dir, subs, k)
-      .crossJoin(broadcast(pqDistTables(spark, dir, subs, k)))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"), adcDist(subs).as("adc_dist"))
+    val short = adcScored(pqAssign(spark, dir, subs, k)
+      .crossJoin(broadcast(distTablesOf(panel(embs), subs, pqCodebook(spark, dir, subs, k)))),
+        subs)
       .withColumn("srank", row_number().over(wShort))
       .filter(col("srank") <= shortlistK)
       .select("qid", "nid")
@@ -1230,9 +1129,9 @@ object Similarity {
     // probe's tick vector and is broadcast against the corpus scan; the
     // full-dim distance is one fused IntSqDist per surviving pair — no
     // component explode, no re-aggregation
-    val qarr = Tables.embeddings(spark, dir).filter(col("vec_id") % 100 === 0)
+    val qarr = panel(embs)
       .select(col("vec_id").as("qid"), qticks(asDouble(col("embedding"))).as("qv"))
-    val narr = Tables.embeddings(spark, dir)
+    val narr = embs
       .select(col("vec_id").as("nid"), qticks(asDouble(col("embedding"))).as("nv"))
     val wTop = Window.partitionBy("qid").orderBy(col("exact_dist"), col("nid"))
     narr.join(broadcast(short.join(broadcast(qarr), Seq("qid"))), Seq("nid"))

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, GraftSessionBridge, Row, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 import org.apache.spark.sql.types.StructType
 
 import graft.sources.LocalFs
@@ -28,9 +29,34 @@ private[graft] object Drain {
 
   /** Start the query `build` defines over the drain session of `spark`
     * with `Trigger.AvailableNow`, and wait until it has drained.
+    *
+    * Every session whose query manager exists has a streaming-listener
+    * bus on the context's listener bus, and Spark never removes one. A
+    * drain makes two: the drain session's, which carries the query's
+    * events, and the batch session's, made when a stateful operator asks
+    * it for the state store coordinator. Both are detached once done, so
+    * ticks leave the context's listeners as they found them: the batch
+    * session's as soon as the query has terminated (no query reports
+    * through it), the drain session's by the drain session itself once
+    * it has delivered the query's terminated event. Neither waits.
     */
-  def availableNow(spark: SparkSession)(build: SparkSession => DataStreamWriter[Row]): Unit =
-    build(session(spark)).trigger(Trigger.AvailableNow()).start().awaitTermination()
+  def availableNow(spark: SparkSession)(build: SparkSession => DataStreamWriter[Row]): Unit = {
+    val q = build(session(spark)).trigger(Trigger.AvailableNow()).start()
+    try q.awaitTermination()
+    finally {
+      val batchSession = GraftSessionBridge.batchSession(q)
+      val mark = new OnTerminated(_ => ())
+      batchSession.streams.addListener(mark)
+      GraftSessionBridge.detachStreams(batchSession, mark)
+    }
+  }
+
+  /** A streaming listener that acts only on termination, on itself. */
+  private class OnTerminated(act: StreamingQueryListener => Unit) extends StreamingQueryListener {
+    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+    override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = act(this)
+  }
 
   /** The session a drain runs in: a clone of `spark`, so every runtime
     * conf (state store provider, time zone, ...) carries over, with the
@@ -52,7 +78,9 @@ private[graft] object Drain {
     *  - no artifact isolation: tasks run in the executor's default
     *    session state, whose classloader keys Spark's code cache, so a
     *    drain reuses the classes earlier drains compiled instead of
-    *    compiling them again under a per-query classloader.
+    *    compiling them again under a per-query classloader;
+    *  - a listener that detaches the session's streaming-listener bus
+    *    from the context once it has delivered the terminated event.
     */
   private def session(spark: SparkSession): SparkSession = {
     val s = GraftSessionBridge.cloneSession(spark)
@@ -62,6 +90,9 @@ private[graft] object Drain {
     s.conf.set("spark.sql.artifact.isolation.enabled", "false")
     val own = s.streams.listListeners().map(_.getClass).toSet
     spark.streams.listListeners().filterNot(l => own(l.getClass)).foreach(s.streams.addListener)
+    // detaching stops later events only: the bus still delivers the
+    // terminated event to every listener it holds
+    s.streams.addListener(new OnTerminated(GraftSessionBridge.detachStreams(s, _)))
     s
   }
 }

@@ -3,9 +3,12 @@ package graft
 import java.io.File
 
 import scala.io.Source
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.CheckpointRestart
@@ -81,5 +84,43 @@ class DrainSessionSpec extends AnyFunSuite {
     assert(held > 0 && held <= bound, s"state holds $held windows, bound $bound")
     assert(state.filter(col("end") <= timestamp_micros(lit(wmUs))).isEmpty,
       "state kept windows the watermark had passed")
+  }
+
+  /** How many listeners the context's bus holds once its queued events
+    * are delivered. The bus is internal to Spark, so it is reached
+    * reflectively.
+    */
+  private def busListenerCount(): Int = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty", classOf[Long]).invoke(bus, Long.box(10000L))
+    bus.getClass.getMethod("listeners").invoke(bus).asInstanceOf[java.util.List[_]].size
+  }
+
+  test("ticks leave no listeners behind and the caller's listeners see every tick") {
+    val s2 = spark.newSession()
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    s2.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = events.add("started")
+      override def onQueryProgress(e: QueryProgressEvent): Unit = events.add("progress")
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = events.add("terminated")
+    })
+    val root = java.nio.file.Files.createTempDirectory("graft_drain_listeners").toString
+    val (src, out, ckpt) = (s"$root/src", s"$root/out/t", s"$root/ckpt")
+    val ev = graft.tables.Tables.events(s2, TestSpark.sf)
+      .select("event_id", "ts", "user_id", "event_type", "value")
+    val mm = ev.agg(min("ts"), max("ts")).head()
+    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
+    val cuts = (0 to 6).map(i => if (i == 0) lo - 1 else lo + (hi - lo) * i / 6)
+    val counts = cuts.sliding(2).map { case Seq(a, b) =>
+      ev.filter(col("ts") > a && col("ts") <= b).write.mode("append").parquet(src)
+      CheckpointRestart.tick(s2, src, out, ckpt)
+      busListenerCount()
+    }.toSeq
+    assert(counts.last == counts.head, s"listeners per tick: ${counts.mkString(" → ")}")
+    val seen = events.asScala.toSeq
+    Seq("started", "progress", "terminated").foreach { kind =>
+      assert(seen.count(_ == kind) == 6, s"the caller's listener saw ${seen.mkString(", ")}")
+    }
   }
 }

@@ -16,7 +16,7 @@ class ExprsSpec extends AnyFunSuite {
     val self = e.limit(50)
       .select(
         VectorOps.cosine(col("emb"), col("emb")).as("fused"),
-        VectorOps.cosineComposed(col("emb"), col("emb")).as("composed"))
+        ComposedTwins.cosineComposed(col("emb"), col("emb")).as("composed"))
       .collect()
     assert(self.nonEmpty)
     self.foreach { r =>
@@ -35,7 +35,7 @@ class ExprsSpec extends AnyFunSuite {
       val planeCol = array(p.map(lit(_)): _*)
       val rows = e.select(
         VectorOps.dot(col("emb"), planeCol).as("fused"),
-        VectorOps.dotComposed(col("emb"), planeCol).as("composed")).collect()
+        ComposedTwins.dotComposed(col("emb"), planeCol).as("composed")).collect()
       rows.foreach(r => assert(r.getDouble(0) == r.getDouble(1),
         s"fused dot ${r.getDouble(0)} != composed ${r.getDouble(1)}"))
     }

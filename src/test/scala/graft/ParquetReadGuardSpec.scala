@@ -21,7 +21,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *    kernel that eval and codegen both call, so the two cannot diverge;
   *  - the no-fork local file system and the keys that select it live in
   *    `LocalFs.scala` alone, and the drain-session settings in
-  *    `Drain.scala` alone, so each is decided in one place.
+  *    `Drain.scala` alone, so each is decided in one place;
+  *  - the vector codec is written once: the 10⁻⁶ tick quantizer
+  *    `floor(x·10⁶ + 0.5)` in `VectorOps.qtick`; the sign bucket in
+  *    `Dedup.signBucket`, whose planes only `Dedup` and the oracle strings
+  *    that embed `Dedup.bucketSql(planes)` draw; and the PQ encoder and
+  *    ADC tables (`pqNearest`, `pqDists`) in `Similarity`'s codec.
   */
 class ParquetReadGuardSpec extends AnyFunSuite {
   private case class Rule(test: String, pattern: Regex, allowed: Set[String], fix: String)
@@ -45,7 +50,21 @@ class ParquetReadGuardSpec extends AnyFunSuite {
       Set("LocalFs.scala"), "select the local file system through LocalFs.options"),
     Rule("no drain-session settings outside the drain helper",
       """noDataMicroBatches|statefulOperator\.allowMultiple|artifact\.isolation""".r, Set("Drain.scala"),
-      "start drains through streaming.Drain"))
+      "start drains through streaming.Drain"),
+    // the quantizer's shape, not the bare literal: DistRank and Ml4 divide
+    // by lit(1000000.0) to decode 10⁻⁶-quantized sums, a separate decision
+    Rule("no tick quantization outside VectorOps",
+      """lit\(1000000\.0\)\s*\+\s*lit\(0\.5\)""".r, Set("VectorOps.scala"),
+      "quantize through VectorOps.qtick / qticks"),
+    Rule("no hyperplanes outside Dedup and the oracles that embed bucketSql",
+      """hyperplanes\(""".r,
+      Set("Dedup.scala", "Similarity.scala", "GraphAnn.scala", "Takedown.scala"),
+      "bucket through Dedup.signBucket"),
+    Rule("no sign bucket outside Dedup.signBucket", """when\(dot\(""".r, Set("Dedup.scala"),
+      "bucket through Dedup.signBucket"),
+    Rule("no PQ encode or distance table outside the Similarity codec",
+      """pqNearest\(|pqDists\(""".r, Set("VectorOps.scala", "Similarity.scala"),
+      "encode through Similarity's encoder and distance tables"))
 
   private def scalaFiles(f: File): Seq[File] =
     if (f.isDirectory) Option(f.listFiles).toSeq.flatten.sortBy(_.getName).flatMap(scalaFiles)

@@ -50,10 +50,8 @@ class Round13dSpec extends AnyFunSuite {
     // PQ: ADC search over the purged code table never returns a
     // takedown vector (E21's serve shape over the cascade's artifact)
     val base = Similarity.pqIndexPath(spark, sf)
-    val adc = Similarity.adcSearch(
-      spark.read.parquet(s"$root/pq_codes"),
-      Similarity.pqDistTablesFor(spark, sf, 8,
-        Similarity.readCodebook(spark, base)), 8, 5).collect()
+    val adc = Similarity.serveIndex(spark, sf, base,
+      spark.read.parquet(s"$root/pq_codes"), 8, 5).collect()
     assert(adc.nonEmpty)
     assert(adc.forall(
       _.getAs[Long]("neighbor_id") % Takedown.takedownMod != Takedown.takedownRem),

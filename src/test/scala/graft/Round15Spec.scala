@@ -80,7 +80,7 @@ class Round15Spec extends AnyFunSuite {
       "999999999999999999999999999")
     val df = texts.toDF("t")
     val (cf, rf) = Redact.redactCols(col("t"))
-    val (cc, rc) = Redact.redactColsComposed(col("t"))
+    val (cc, rc) = ComposedTwins.redactColsComposed(col("t"))
     val rows = df.select(
       (cf.map(_._2) :+ rf) ++ (cc.map(_._2) :+ rc): _*).collect()
     rows.foreach { r =>
@@ -97,7 +97,7 @@ class Round15Spec extends AnyFunSuite {
     val dirty = graft.tables.Tables.documents(spark, sf)
       .select(Redact.injectCol(col("text"), col("doc_id")).as("t"))
     val (cf, rf) = Redact.redactCols(col("t"))
-    val (cc, rc) = Redact.redactColsComposed(col("t"))
+    val (cc, rc) = ComposedTwins.redactColsComposed(col("t"))
     val fused = cf.map { case (n, c) => c.as(s"n_$n") } :+ rf.as("redacted")
     val comp = cc.map { case (n, c) => c.as(s"n_${n}_c") } :+ rc.as("redacted_c")
     val diff = dirty.select(fused ++ comp: _*)
