@@ -262,21 +262,18 @@ object Bench {
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors())
 
-  /** The session every timing main measures in, so they all time the same
-    * plans.
+  /** The session every runtime main measures or dumps in, so they all run
+    * the same plans: [[GraftSession.builder]] on `local[cpus]` with `cpus`
+    * shuffle partitions, plus two settings of its own.
     */
   def session(): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toLong)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus)
+      // a GC pause during an MLlib parallel fit can outlast the 300 s
+      // broadcast default when every query runs in one JVM
       .config("spark.sql.broadcastTimeout", "1200")
       // single-file-per-table inputs: smaller split target keeps all
       // cores busy on the scan stage
       .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.tables.Tables
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -31,23 +31,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, only) = parseArgs(args)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet stores TIMESTAMP(NANOS); Spark has no nanos type, so
-      // read as exact Long nanos (converted where queries need a timestamp).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // 140 queries through one JVM: a GC pause during an MLlib parallel
-      // fit can blow the 300s broadcast default — seen once in the test
-      // suite's full sweep, fatal to a round if it hits the driver run
-      .config("spark.sql.broadcastTimeout", "1200")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
     new java.io.File(outDir).mkdirs()
     // Queries run on a small thread pool: they are independent (disjoint
     // temp-view names, per-call scratch dirs), Spark's scheduler
@@ -67,8 +51,8 @@ object Verify {
             // await/broadcast hiccup deep into the sweep must not zero a
             // query's correctness, but a deterministic bug must not pass
             // on its lucky second run
-            def attempt(): Unit = fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-              .parquet(s"$outDir/$name")
+            def attempt(): Unit = Tables.write(fn(spark, sfDir).coalesce(1))
+              .mode("overwrite").parquet(s"$outDir/$name")
             try attempt()
             catch {
               case e1: Throwable if isTransient(e1) =>

@@ -4,6 +4,8 @@ import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressio
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DoubleType, MapType, StringType, StructType}
 
+import graft.tables.Tables
+
 /** Model persistence — the reference pickles its best models and ships
   * them to object storage (export_models.py; modeling.ipynb cell 123-125
   * dumps model + metadata). Spark-native: every fitted `spark.ml` model
@@ -42,8 +44,8 @@ object Persistence {
   def saveMeta(spark: SparkSession, path: String, subset: String,
                accuracy: Double, params: Map[String, String]): Unit = {
     import spark.implicits._
-    Seq((subset, accuracy, params)).toDF("subset", "accuracy", "params")
-      .coalesce(1).write.mode("overwrite").json(s"$path.meta")
+    Tables.write(Seq((subset, accuracy, params)).toDF("subset", "accuracy", "params")
+      .coalesce(1)).mode("overwrite").json(s"$path.meta")
   }
 
   /** Reload with a PINNED schema — never inferSchema on a contract read;

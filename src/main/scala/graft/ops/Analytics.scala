@@ -187,7 +187,7 @@ object Analytics {
     // the persisted sketch-state table: history months, written once
     val statePath = graft.QueryCaches.memo(s"incrdistinct.state:$dir") {
       val p = graft.Scratch.dir("hll_state")
-      sketched(o.filter(col("o_orderdate") < cut)).write.mode("overwrite").parquet(p)
+      Tables.write(sketched(o.filter(col("o_orderdate") < cut))).mode("overwrite").parquet(p)
       p
     }
     val history = Tables.parquet(spark, statePath)

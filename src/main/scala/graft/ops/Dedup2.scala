@@ -282,10 +282,10 @@ object Dedup2 {
                                        dir: String): String =
     graft.QueryCaches.memo(s"dedup2.tombstone:$dir") {
       val root = graft.Scratch.dir("band_tombstone")
-      Dedup.bandSignatures(spark, dir)
-        .write.mode("overwrite").parquet(s"$root/index")
-      Tables.documents(spark, dir).filter(col("doc_id") % 10 === 3)
-        .select("doc_id").write.mode("overwrite").parquet(s"$root/tombstones")
+      Tables.write(Dedup.bandSignatures(spark, dir))
+        .mode("overwrite").parquet(s"$root/index")
+      Tables.write(Tables.documents(spark, dir).filter(col("doc_id") % 10 === 3)
+        .select("doc_id")).mode("overwrite").parquet(s"$root/tombstones")
       root
     }
 

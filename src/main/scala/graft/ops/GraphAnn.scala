@@ -118,10 +118,7 @@ object GraphAnn {
     */
   private[graft] def edgesArtifact(spark: SparkSession, dir: String): DataFrame =
     graft.QueryCaches.memo(s"graphann.edges:$dir") {
-      val edges = buildEdges(spark, dir)
-      val path = graft.Scratch.dir("graphann_edges")
-      edges.write.mode("overwrite").parquet(path)
-      Tables.parquet(spark, path)
+      Tables.artifact(buildEdges(spark, dir), "graphann_edges")
     }
 
   /** The edge-build plan, pre-persist — split out so Round10Spec can
@@ -575,10 +572,10 @@ object GraphAnn {
       val isDelta = col("vec_id") % 10 === 7
       val ab = appendPipeline(embs, isDelta, s"graphann.abuckets:$dir")
       val root = graft.Scratch.dir("graphann_append")
-      ab.baseEdges.write.mode("overwrite").parquet(s"$root/base")
+      Tables.write(ab.baseEdges).mode("overwrite").parquet(s"$root/base")
       // the append writes a SEPARATE file set — the base generation's
       // files stay byte-identical (Round10fSpec pins it)
-      ab.appendEdges.write.mode("overwrite").parquet(s"$root/delta")
+      Tables.write(ab.appendEdges).mode("overwrite").parquet(s"$root/delta")
       appendRoots.put(s"$dir:$k", root)
       appendStats.put(s"$dir:$k", (ab.hits, ab.truth, ab.stale))
       // the stale branch REBUILDS — and a rebuild regenerates the entry
@@ -643,11 +640,8 @@ object GraphAnn {
 
   private def adcEdgesArtifact(spark: SparkSession, dir: String): DataFrame =
     graft.QueryCaches.memo(s"graphann.adcedges:$dir") {
-      val edges = buildEdgesFrom(Tables.embeddings(spark, dir),
-        s"graphann.adcbuckets:$dir", adcDegree, adcBuildRounds)
-      val path = graft.Scratch.dir("graphann_adc_edges")
-      edges.write.mode("overwrite").parquet(path)
-      Tables.parquet(spark, path)
+      Tables.artifact(buildEdgesFrom(Tables.embeddings(spark, dir),
+        s"graphann.adcbuckets:$dir", adcDegree, adcBuildRounds), "graphann_adc_edges")
     }
 
   /** E27's refined build: degree 40 (same 3 NN-descent rounds). The r13
@@ -667,11 +661,8 @@ object GraphAnn {
 
   private[graft] def refineEdgesArtifact(spark: SparkSession, dir: String): DataFrame =
     graft.QueryCaches.memo(s"graphann.refineedges:$dir") {
-      val edges = buildEdgesFrom(Tables.embeddings(spark, dir),
-        s"graphann.refinebuckets:$dir", refineDegree, refineBuildRounds)
-      val path = graft.Scratch.dir("graphann_refine_edges")
-      edges.write.mode("overwrite").parquet(path)
-      Tables.parquet(spark, path)
+      Tables.artifact(buildEdgesFrom(Tables.embeddings(spark, dir),
+        s"graphann.refinebuckets:$dir", refineDegree, refineBuildRounds), "graphann_refine_edges")
     }
 
   /** E27 — `ann_graph_refine` (r12 verdict directive #4): the recall
@@ -975,10 +966,7 @@ object GraphAnn {
   private[graft] def streamBaseEdges(spark: SparkSession, dir: String): DataFrame =
     graft.QueryCaches.memo(s"graphann.gbase:$dir") {
       val base = Tables.embeddings(spark, dir).filter(col("vec_id") % 10 =!= 7)
-      val edges = buildEdgesFrom(base, s"graphann.sbuckets:$dir")
-      val path = graft.Scratch.dir("graphann_streambase")
-      edges.write.mode("overwrite").parquet(path)
-      Tables.parquet(spark, path)
+      Tables.artifact(buildEdgesFrom(base, s"graphann.sbuckets:$dir"), "graphann_streambase")
     }
 
   /** One micro-batch's insert work: beam THIS batch's arrivals
@@ -1112,11 +1100,8 @@ object GraphAnn {
           deg, rounds)
         .localCheckpoint()
       val baseEdges = graft.QueryCaches.memo(s"graphann.ledges:$dir:$deg:$rounds") {
-        val e = buildEdgesFrom(embs, s"graphann.lbbuckets:$dir:$deg:$rounds",
-          deg, rounds)
-        val path = graft.Scratch.dir("graphann_layer_edges")
-        e.write.mode("overwrite").parquet(path)
-        Tables.parquet(spark, path)
+        Tables.artifact(buildEdgesFrom(embs, s"graphann.lbbuckets:$dir:$deg:$rounds",
+          deg, rounds), "graphann_layer_edges")
       }
       val probes = embs.filter(col("vec_id") % 100 === 0)
       val uEntries = entriesFrom(upper, probes)

@@ -119,20 +119,8 @@ object Relational2 {
     * 8 buckets here ≙ thousands at production scale.
     */
   def qJoinBucketed(spark: SparkSession, dir: String): DataFrame = {
-    // a table location left behind by a previous JVM isn't in this
-    // session's in-memory catalog, so CTAS would refuse the path — drop
-    // both the catalog entry and any stale directory first
-    Seq("g_orders_bucketed", "g_lineitem_bucketed").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val p = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), t)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-    Tables.orders(spark, dir).write.mode("overwrite")
-      .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-      .saveAsTable("g_orders_bucketed")
-    Tables.lineitem(spark, dir).write.mode("overwrite")
-      .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-      .saveAsTable("g_lineitem_bucketed")
+    Tables.saveBucketed(Tables.orders(spark, dir), "g_orders_bucketed", "o_orderkey")
+    Tables.saveBucketed(Tables.lineitem(spark, dir), "g_lineitem_bucketed", "l_orderkey")
     val o = spark.table("g_orders_bucketed")
     val li = spark.table("g_lineitem_bucketed")
     li.join(o, li("l_orderkey") === o("o_orderkey"))

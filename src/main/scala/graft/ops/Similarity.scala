@@ -630,8 +630,8 @@ object Similarity {
       val base = graft.Scratch.dir("pqindex")
       writeCodebook(spark, s"$base/codebook", pqCodebook(spark, dir, subs, k))
       // the memoized code frame stays cached — E4/E5/E8 serve from it
-      pqAssign(spark, dir, subs, k).select("vec_id", "ords")
-        .write.mode("overwrite").parquet(s"$base/codes")
+      Tables.write(pqAssign(spark, dir, subs, k).select("vec_id", "ords"))
+        .mode("overwrite").parquet(s"$base/codes")
       base
     }
 
@@ -640,9 +640,9 @@ object Similarity {
     */
   private[graft] def writeCodebook(spark: SparkSession, path: String, cb: Codebook): Unit = {
     import spark.implicits._
-    cb.map { case (code, ticks) => (code, ticks.map(_.toSeq).toSeq) }
-      .toSeq.toDF("code", "subs")
-      .write.mode("overwrite").parquet(path)
+    Tables.write(cb.map { case (code, ticks) => (code, ticks.map(_.toSeq).toSeq) }
+      .toSeq.toDF("code", "subs"))
+      .mode("overwrite").parquet(path)
   }
 
   /** The bounded S·K codebook reload every serving path shares — the
@@ -681,8 +681,8 @@ object Similarity {
   private[graft] def pqTombstonePath(spark: SparkSession, dir: String): String =
     graft.QueryCaches.memo(s"sim.pqDelete:$dir") {
       val root = graft.Scratch.dir("pqdelete")
-      Tables.embeddings(spark, dir).filter(col("vec_id") % 10 === 3)
-        .select("vec_id").write.mode("overwrite").parquet(s"$root/tombstones")
+      Tables.write(Tables.embeddings(spark, dir).filter(col("vec_id") % 10 === 3)
+        .select("vec_id")).mode("overwrite").parquet(s"$root/tombstones")
       root
     }
 
@@ -759,15 +759,15 @@ object Similarity {
                                  subs: Int, k: Int): Unit = {
     val cb = pqCodebook(spark, dir, subs, k)
     writeCodebook(spark, s"$base/codebook", cb)
-    pqOrdsFor(Tables.embeddings(spark, dir).filter(col("vec_id") % 10 =!= 0), subs, cb)
-      .write.mode("overwrite").parquet(s"$base/codes")
+    Tables.write(pqOrdsFor(Tables.embeddings(spark, dir).filter(col("vec_id") % 10 =!= 0),
+      subs, cb)).mode("overwrite").parquet(s"$base/codes")
   }
 
   private[graft] def appendPqDelta(spark: SparkSession, dir: String, base: String,
                                    subs: Int): Unit =
-    pqOrdsFor(Tables.embeddings(spark, dir).filter(col("vec_id") % 10 === 0),
-      subs, readCodebook(spark, base))
-      .write.mode("append").parquet(s"$base/codes")
+    Tables.write(pqOrdsFor(Tables.embeddings(spark, dir).filter(col("vec_id") % 10 === 0),
+      subs, readCodebook(spark, base)))
+      .mode("append").parquet(s"$base/codes")
 
   /** (vec_id, ords): an embeddings-shaped frame [[encode]]d against an
     * EXPLICIT codebook — the projection shared by the base build and the
@@ -895,10 +895,10 @@ object Similarity {
       // frozen
       val cb1 = trainCodebookOf(baseEmbs, subs, k, pqTrainRounds)
       writeCodebook(spark, s"$root/gen1/codebook", cb1)
-      pqOrdsFor(baseEmbs, subs, cb1)
-        .write.mode("overwrite").parquet(s"$root/gen1/codes")
-      pqOrdsFor(deltaEmbs, subs, cb1)
-        .write.mode("append").parquet(s"$root/gen1/codes")
+      Tables.write(pqOrdsFor(baseEmbs, subs, cb1))
+        .mode("overwrite").parquet(s"$root/gen1/codes")
+      Tables.write(pqOrdsFor(deltaEmbs, subs, cb1))
+        .mode("append").parquet(s"$root/gen1/codes")
       val (hits, truth) = recallCounts(embs,
         Tables.parquet(spark, s"$root/gen1/codes"), cb1, subs, topK = 5)
       val stale = hits * 100L < refreshThresholdPct * truth
@@ -906,8 +906,8 @@ object Similarity {
         // retrain over base ∪ delta, re-encode once, new generation
         val cb2 = trainCodebookOf(embs, subs, k, pqTrainRounds)
         writeCodebook(spark, s"$root/gen2/codebook", cb2)
-        pqOrdsFor(embs, subs, cb2)
-          .write.mode("overwrite").parquet(s"$root/gen2/codes")
+        Tables.write(pqOrdsFor(embs, subs, cb2))
+          .mode("overwrite").parquet(s"$root/gen2/codes")
         s"$root/gen2"
       } else s"$root/gen1"
     }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.tables.Tables
+
 /** A32b — `q_stats_join`: STATS-DRIVEN join planning (round-9
   * directive #4). Every other plan in this engine is hand-shaped; at
   * 100 TB with many consumers, cost-based-optimizer statistics are how
@@ -89,11 +91,11 @@ object StatsPlan {
       val hist = s"g_stats_hotorders$tag"
       val noHist = s"g_stats_hotorders_nh$tag"
       val path = graft.Scratch.dir("stats_hist")
-      graft.tables.Tables.orders(spark, dir)
+      Tables.write(Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_custkey"),
           when(col("o_orderkey") % 10 =!= 0, lit(0L))
-            .otherwise(col("o_orderkey") % 1000 + 1).as("hot_key"))
-        .write.mode("overwrite").parquet(path)
+            .otherwise(col("o_orderkey") % 1000 + 1).as("hot_key")))
+        .mode("overwrite").parquet(path)
       spark.sql(s"CREATE TABLE IF NOT EXISTS $hist USING parquet LOCATION '$path'")
       spark.sql(s"CREATE TABLE IF NOT EXISTS $noHist USING parquet LOCATION '$path'")
       spark.sql(s"ANALYZE TABLE $noHist COMPUTE STATISTICS FOR COLUMNS hot_key, o_orderkey")

@@ -70,25 +70,25 @@ object Takedown {
       val embs = Tables.embeddings(spark, dir)
       // the request ledger — everything below is keyed off THESE rows,
       // never off the defining predicate (a real request arrives as keys)
-      docs.filter(col("doc_id") % takedownMod === takedownRem)
-        .select("doc_id").write.mode("overwrite").parquet(s"$root/requests")
+      Tables.write(docs.filter(col("doc_id") % takedownMod === takedownRem)
+        .select("doc_id")).mode("overwrite").parquet(s"$root/requests")
       val req = Tables.parquet(spark, s"$root/requests")
       val reqV = req.select(col("doc_id").as("vec_id"))
 
       // 1. band-signature index (D18's anti-join rule)
-      Dedup.bandSignatures(spark, dir)
-        .join(broadcast(req), Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$root/band_index")
+      Tables.write(Dedup.bandSignatures(spark, dir)
+        .join(broadcast(req), Seq("doc_id"), "left_anti"))
+        .mode("overwrite").parquet(s"$root/band_index")
 
       // 2. PQ code table (E21's rule, frozen codebook)
-      Tables.parquet(spark, s"${Similarity.pqIndexPath(spark, dir)}/codes")
-        .join(broadcast(reqV), Seq("vec_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$root/pq_codes")
+      Tables.write(Tables.parquet(spark, s"${Similarity.pqIndexPath(spark, dir)}/codes")
+        .join(broadcast(reqV), Seq("vec_id"), "left_anti"))
+        .mode("overwrite").parquet(s"$root/pq_codes")
 
       // 3. graph edges (E22's bridge repair, key-driven)
       val (repaired, (lost, _, _)) = GraphAnn.repairedEdgesFrom(
         GraphAnn.edgesArtifact(spark, dir), embs, reqV)
-      repaired.write.mode("overwrite").parquet(s"$root/graph_edges")
+      Tables.write(repaired).mode("overwrite").parquet(s"$root/graph_edges")
 
       // 4. training shards: build the I16 layout, then rewrite ONLY
       //    the shards a takedown doc lands in — published as a NEW
@@ -100,8 +100,8 @@ object Takedown {
       //    raced concurrent writers. A crash anywhere here leaves
       //    generation 0 serving, complete and unpurged.)
       val shardPath = s"$root/shard_layout"
-      docs.select(graft.sources.SourceQueries.shardRouteCols(8): _*)
-        .write.mode("overwrite").partitionBy("shard").parquet(shardPath)
+      Tables.write(docs.select(graft.sources.SourceQueries.shardRouteCols(8): _*))
+        .mode("overwrite").partitionBy("shard").parquet(shardPath)
       val layout = Tables.parquet(spark, shardPath)
       val affected = layout.join(broadcast(req), Seq("doc_id"), "left_semi")
         .select("shard").distinct()
@@ -122,13 +122,13 @@ object Takedown {
       // 5. packed-sequence assignment (F12's LPT over the FULL corpus
       //    — that is what the artifact persisted), docs dropped from
       //    their bins without a repack
-      Corpus.binAssigned(
+      Tables.write(Corpus.binAssigned(
           docs.select(col("doc_id"),
             size(split(trim(col("text")), "[ \\t\\n\\x0B\\f\\r]+"))
               .cast("long").as("n_tokens")),
           2048L, col("n_tokens").desc, col("doc_id"))
-        .join(broadcast(req), Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$root/packed_bins")
+        .join(broadcast(req), Seq("doc_id"), "left_anti"))
+        .mode("overwrite").parquet(s"$root/packed_bins")
 
       cascadeStats.put(dir, (req.count(), nAffected, lost))
       root
@@ -242,11 +242,11 @@ object Takedown {
           .cast("long").as("n_tokens"))
       val holdRem = (col("doc_id") % takedownMod).isin(topupHoldoutRems: _*)
       val holdout = toks.filter(holdRem)
-      Corpus.binAssigned(toks.filter(!holdRem), topupCapacity,
-          col("n_tokens").desc, col("doc_id"))
-        .write.mode("overwrite").partitionBy("bin").parquet(s"$root/packed")
-      docs.filter(col("doc_id") % takedownMod === takedownRem)
-        .select("doc_id").write.mode("overwrite").parquet(s"$root/requests")
+      Tables.write(Corpus.binAssigned(toks.filter(!holdRem), topupCapacity,
+          col("n_tokens").desc, col("doc_id")))
+        .mode("overwrite").partitionBy("bin").parquet(s"$root/packed")
+      Tables.write(docs.filter(col("doc_id") % takedownMod === takedownRem)
+        .select("doc_id")).mode("overwrite").parquet(s"$root/requests")
       val req = Tables.parquet(spark, s"$root/requests")
       val layout = Tables.parquet(spark, s"$root/packed")
       // deficits: one semi-join scan of the takedown rows, grouped by

@@ -236,7 +236,7 @@ private[graft] object PartGen {
     */
   def overrideLayer(root: String, partCol: String, rewritten: DataFrame): Int = {
     val g = ArtifactGen.current(root)
-    rewritten.write.mode("overwrite").partitionBy(partCol)
+    Tables.write(rewritten).mode("overwrite").partitionBy(partCol)
       .parquet(layerDir(root, g + 1))
     ArtifactGen.bump(root, g + 1)
     g + 1
@@ -338,7 +338,7 @@ object Vacuum {
     */
   private[graft] def addTombstones(root: String, tomb: DataFrame): Unit = {
     val gd = ArtifactGen.dir(root, ArtifactGen.current(root))
-    tomb.write.mode("append").parquet(s"$gd/tombstones")
+    Tables.write(tomb).mode("append").parquet(s"$gd/tombstones")
   }
 
   /** One generation step for a keyed artifact: write `surviving` as
@@ -360,8 +360,8 @@ object Vacuum {
     val bytesBefore =
       bytesUnder(memberBytesPath) + bytesUnder(s"$gd/tombstones")
     val nd = ArtifactGen.dir(root, g + 1)
-    surviving.write.mode("overwrite").parquet(s"$nd/$member")
-    tombEmpty.limit(0).write.mode("overwrite").parquet(s"$nd/tombstones")
+    Tables.write(surviving).mode("overwrite").parquet(s"$nd/$member")
+    Tables.write(tombEmpty.limit(0)).mode("overwrite").parquet(s"$nd/tombstones")
     ArtifactGen.bump(root, g + 1)
     val reclaimMembers =
       if (reclaimGen0Member) Seq(member, "tombstones") else Seq("tombstones")
@@ -389,11 +389,11 @@ object Vacuum {
   private[graft] def bandVacuumRoot(spark: SparkSession, dir: String): String =
     graft.QueryCaches.memo(s"vacuum.band:$dir") {
       val root = graft.Scratch.dir("band_tombstone_vac")
-      Dedup.bandSignatures(spark, dir)
-        .write.mode("overwrite").parquet(s"$root/index")
-      graft.tables.Tables.documents(spark, dir)
+      Tables.write(Dedup.bandSignatures(spark, dir))
+        .mode("overwrite").parquet(s"$root/index")
+      Tables.write(Tables.documents(spark, dir)
         .filter(col("doc_id") % 10 === 3)
-        .select("doc_id").write.mode("overwrite").parquet(s"$root/tombstones")
+        .select("doc_id")).mode("overwrite").parquet(s"$root/tombstones")
       val tomb = Tables.parquet(spark, s"$root/tombstones")
       val surviving = Tables.parquet(spark, s"$root/index")
         .join(broadcast(tomb), Seq("doc_id"), "left_anti")
@@ -414,9 +414,9 @@ object Vacuum {
   private[graft] def pqVacuumRoot(spark: SparkSession, dir: String): String =
     graft.QueryCaches.memo(s"vacuum.pq:$dir") {
       val root = graft.Scratch.dir("pqdelete_vac")
-      graft.tables.Tables.embeddings(spark, dir)
+      Tables.write(Tables.embeddings(spark, dir)
         .filter(col("vec_id") % 10 === 3)
-        .select("vec_id").write.mode("overwrite").parquet(s"$root/tombstones")
+        .select("vec_id")).mode("overwrite").parquet(s"$root/tombstones")
       val base = Similarity.pqIndexPath(spark, dir)
       val tomb = Tables.parquet(spark, s"$root/tombstones")
       val surviving = Tables.parquet(spark, s"$base/codes")
@@ -441,8 +441,8 @@ object Vacuum {
     graft.QueryCaches.memo(s"vacuum.graph:$dir") {
       val root = graft.Scratch.dir("graph_tombstone_vac")
       val embs = graft.tables.Tables.embeddings(spark, dir)
-      embs.filter(col("vec_id") % 10 === 3)
-        .select("vec_id").write.mode("overwrite").parquet(s"$root/tombstones")
+      Tables.write(embs.filter(col("vec_id") % 10 === 3)
+        .select("vec_id")).mode("overwrite").parquet(s"$root/tombstones")
       val tomb = Tables.parquet(spark, s"$root/tombstones")
       // the graph's surviving view is the bridge-REPAIRED edge set
       // (E22's rule), not a plain anti-join — the vacuum persists it.
@@ -455,7 +455,7 @@ object Vacuum {
       val edgesDf = GraphAnn.edgesArtifact(spark, dir)
       val (repaired, _) =
         GraphAnn.repairedEdges(edgesDf, embs, col("vec_id") % 10 === 3)
-      tomb.write.mode("overwrite")
+      Tables.write(tomb).mode("overwrite")
         .parquet(s"${ArtifactGen.dir(root, 1)}/deleted")
       // the generation-0 member is the SHARED edge artifact (E15/E17's
       // files) — recover its directory for the before-accounting;

@@ -10,16 +10,17 @@ import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsSer
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
-/** Hadoop's local file system without process forks, for the files the
-  * daily lifecycle writes (its batch log, bases and drain checkpoints).
+/** Hadoop's local file system without process forks, for every file the
+  * engine writes: `Tables.write`'s files and the drain sessions'
+  * checkpoints, state and sinks.
   *
   * Without libhadoop, `RawLocalFileSystem` forks `chmod` for every
   * permission it sets (each created file, `.crc` and directory) and
   * `readlink` for every link status (each checkpoint rename through
   * `FileContext`). [[NoForkRawLocalFileSystem]] does both in this
   * process; everything else is Hadoop's own code. The file system is
-  * selected per write or per derived session through [[LocalFs.options]],
-  * never in a shared Hadoop conf, so nothing else changes.
+  * selected per write or per derived session through `options`, never in
+  * a shared Hadoop conf, so nothing else changes.
   */
 object LocalFs {
   /** The Hadoop keys that select these classes for `file:` paths. The

@@ -9,7 +9,7 @@ import org.apache.parquet.hadoop.metadata.ColumnPath
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
-import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -41,20 +41,20 @@ object Sources {
     spark.read.schema(schema).json(path)
 
   def writeJson(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
+    Tables.write(df).mode("overwrite").json(path)
 
   /** CSV ingest: header + explicit schema (no inference pass). */
   def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.option("header", "true").schema(schema).csv(path)
 
   def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(path)
+    Tables.write(df).mode("overwrite").option("header", "true").csv(path)
 
   /** Columnar ORC round-trip (Spark bundles native ORC support) — the
     * second columnar interchange format a warehouse migration meets.
     */
   def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
+    Tables.write(df).mode("overwrite").orc(path)
 
   def readOrc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
@@ -64,7 +64,7 @@ object Sources {
     * record; structure is the reader's problem (here: key TAB payload).
     */
   def writeText(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").text(path)
+    Tables.write(df).mode("overwrite").text(path)
 
   def readText(spark: SparkSession, path: String): DataFrame =
     spark.read.text(path)
@@ -81,8 +81,8 @@ object Sources {
     */
   def writeSortedLayout(df: DataFrame, sortCol: String, path: String,
                         blockBytes: Int = 16 * 1024): Unit =
-    df.repartitionByRange(4, col(sortCol)).sortWithinPartitions(sortCol)
-      .write.mode("overwrite")
+    Tables.write(df.repartitionByRange(4, col(sortCol)).sortWithinPartitions(sortCol))
+      .mode("overwrite")
       .option("parquet.block.size", blockBytes).parquet(path)
 
   /** 16-bit Morton (Z-order) interleave of two integral columns: bits of
@@ -164,11 +164,11 @@ object Sources {
       if (bounds.isEmpty) lit(slots(0))
       else element_at(array(slots.toIndexedSeq.map(lit(_)): _*),
         bucket(0, bounds.length) + 1)
-    keyed.withColumn("_slot", slot)
+    Tables.write(keyed.withColumn("_slot", slot)
       .repartition(bounds.length + 1, col("_slot"))
       .sortWithinPartitions(("_ckey" +: tieBreak).map(col): _*)
-      .drop("_ckey", "_slot")
-      .write.mode("overwrite")
+      .drop("_ckey", "_slot"))
+      .mode("overwrite")
       .option("parquet.block.size", blockBytes).parquet(path)
   }
 
@@ -218,7 +218,7 @@ object Sources {
     */
   def writeUnsortedLayout(df: DataFrame, path: String,
                           blockBytes: Int = 16 * 1024): Unit =
-    df.write.mode("overwrite")
+    Tables.write(df).mode("overwrite")
       .option("parquet.block.size", blockBytes).parquet(path)
 
   /** Date-partitioned parquet sink: `partitionBy` lands one directory per
@@ -226,8 +226,8 @@ object Sources {
     * daily-batch layout every large pipeline uses).
     */
   def writeDatePartitioned(df: DataFrame, dateCol: String, path: String): Unit =
-    df.withColumn("p_date", to_date(col(dateCol)))
-      .write.mode("overwrite").partitionBy("p_date").parquet(path)
+    Tables.write(df.withColumn("p_date", to_date(col(dateCol))))
+      .mode("overwrite").partitionBy("p_date").parquet(path)
 
   def readDatePartitioned(spark: SparkSession, path: String): DataFrame =
     Tables.parquet(spark, path)
@@ -237,15 +237,8 @@ object Sources {
     * storage — UPDATE-in-place doesn't exist at 100 TB.
     */
   def appendBatch(df: DataFrame, path: String, batchId: Long): Unit =
-    lifecycleWrite(df.withColumn("_batch_id", lit(batchId)))
+    Tables.write(df.withColumn("_batch_id", lit(batchId)))
       .mode("append").parquet(path)
-
-  /** The writer of every file the batch log lifecycle owns (batches,
-    * staged batches, bases, manifests): Hadoop's local file system
-    * without process forks, selected for this write only.
-    */
-  private def lifecycleWrite(df: DataFrame): DataFrameWriter[Row] =
-    df.write.options(LocalFs.options)
 
   /** Idempotent batch landing: the batch id is a PARTITION and the write
     * is a dynamic-partition overwrite, so a re-delivered batch replaces
@@ -255,7 +248,7 @@ object Sources {
     * that isn't doing latest-wins dedup).
     */
   def upsertBatch(df: DataFrame, path: String, batchId: Long): Unit =
-    lifecycleWrite(df.withColumn("_batch_id", lit(batchId)))
+    Tables.write(df.withColumn("_batch_id", lit(batchId)))
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("_batch_id").parquet(path)
@@ -272,7 +265,7 @@ object Sources {
     */
   def upsertBatches(batches: Seq[(DataFrame, Long)], path: String): Unit = {
     require(batches.nonEmpty, "upsertBatches needs at least one batch")
-    lifecycleWrite(batches.map { case (df, id) => df.withColumn("_batch_id", lit(id)) }
+    Tables.write(batches.map { case (df, id) => df.withColumn("_batch_id", lit(id)) }
       .reduce(_.unionByName(_)))
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -305,7 +298,7 @@ object Sources {
     */
   def stageBatch(df: DataFrame, logPath: String, writerId: String): String = {
     val staged = s"$logPath/.staging/$writerId-${java.util.UUID.randomUUID()}"
-    lifecycleWrite(df).mode("overwrite").parquet(staged)
+    Tables.write(df).mode("overwrite").parquet(staged)
     staged
   }
 
@@ -544,7 +537,7 @@ object Sources {
     }
     val id = commitStaged(logPath, staged)
     import spark.implicits._
-    lifecycleWrite(stats.toDF("file", "min_key", "max_key").coalesce(1))
+    Tables.write(stats.toDF("file", "min_key", "max_key").coalesce(1))
       .mode("overwrite").parquet(s"${manifestDir(logPath)}/batch=$id")
     id
   }
@@ -690,10 +683,10 @@ object Sources {
     */
   private def writeBase(spark: SparkSession, latest: DataFrame, wm: Long,
                         basePath: String): Unit = {
-    lifecycleWrite(latest.withColumn("_batch_id", lit(wm)))
+    Tables.write(latest.withColumn("_batch_id", lit(wm)))
       .mode("overwrite").parquet(s"$basePath/base")
     import spark.implicits._
-    lifecycleWrite(Seq(wm).toDF("_watermark")).mode("overwrite").parquet(s"$basePath/meta")
+    Tables.write(Seq(wm).toDF("_watermark")).mode("overwrite").parquet(s"$basePath/meta")
   }
 
   /** The watermark a compaction recorded in `basePath/meta`, read in this
@@ -1062,9 +1055,9 @@ object SourceQueries {
     graft.QueryCaches.memo(s"src.$artifact:$dir:$nshards") {
       val path = scratch(artifact)
       val base = shardRouteCols(nshards)
-      Tables.documents(spark, dir)
-        .select(base.dropRight(1) ++ extraCols :+ base.last: _*)
-        .write.mode("overwrite").partitionBy("shard").parquet(path)
+      Tables.write(Tables.documents(spark, dir)
+        .select(base.dropRight(1) ++ extraCols :+ base.last: _*))
+        .mode("overwrite").partitionBy("shard").parquet(path)
       path
     }
 
@@ -1100,9 +1093,8 @@ object SourceQueries {
                          nshards: Int = 8): String =
     graft.QueryCaches.memo(s"src.corpus_shard_bpe:$dir:$nshards") {
       val path = scratch("corpus_shard_bpe")
-      Tables.documents(spark, dir)
-        .select(shardRouteColsBpe(nshards): _*)
-        .write.mode("overwrite").partitionBy("shard").parquet(path)
+      Tables.write(Tables.documents(spark, dir).select(shardRouteColsBpe(nshards): _*))
+        .mode("overwrite").partitionBy("shard").parquet(path)
       path
     }
 
@@ -1139,15 +1131,7 @@ object SourceQueries {
     // at ingest)
     val t = graft.QueryCaches.memo(s"src.bucketed_docs:$dir") {
       val name = s"g_documents_bucketed_${bucketedSeq.incrementAndGet()}"
-      // a table location left behind by a previous JVM isn't in this
-      // session's in-memory catalog, so CTAS would refuse the path —
-      // drop the catalog entry and any stale directory first (A22)
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      val p = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), name)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      Tables.documents(spark, dir).write.mode("overwrite")
-        .bucketBy(8, "doc_id").sortBy("doc_id")
-        .saveAsTable(name)
+      Tables.saveBucketed(Tables.documents(spark, dir), name, "doc_id")
       name
     }
     spark.table(t)
@@ -1262,12 +1246,11 @@ object SourceQueries {
   def srcSchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
     val path = scratch("evolve")
     val o = Tables.orders(spark, dir)
-    o.filter(col("o_orderkey") % 2 === 0)
-      .select("o_orderkey", "o_totalprice")
-      .write.mode("overwrite").parquet(s"$path/b1")
-    o.filter(col("o_orderkey") % 2 === 1)
-      .select("o_orderkey", "o_totalprice", "o_orderstatus")
-      .write.mode("overwrite").parquet(s"$path/b2")
+    Tables.write(o.filter(col("o_orderkey") % 2 === 0).select("o_orderkey", "o_totalprice"))
+      .mode("overwrite").parquet(s"$path/b1")
+    Tables.write(o.filter(col("o_orderkey") % 2 === 1)
+      .select("o_orderkey", "o_totalprice", "o_orderstatus"))
+      .mode("overwrite").parquet(s"$path/b2")
     Tables.parquet(spark, Map("mergeSchema" -> "true"), s"$path/b1", s"$path/b2")
       .select("o_orderkey", "o_totalprice", "o_orderstatus")
       .orderBy("o_orderkey")

@@ -49,23 +49,16 @@ object CorpusAdmit {
     def salted(sigs: DataFrame) =
       sigs.withColumn("salt", graft.ops.HotBucket.saltCol(hot, keys, col("doc_id")))
     val delta = batch.filter(col("doc_id") % 10 === 0)
-    Dedup2.admission(indexDir, salted(Dedup.bandSignatures(s, indexDir)),
-      salted(Dedup.bandSignaturesOf(delta)), delta)
-      .write.mode("overwrite").parquet(s"$sink/batch=$batchId")
+    Drain.toBatch(Dedup2.admission(indexDir, salted(Dedup.bandSignatures(s, indexDir)),
+      salted(Dedup.bandSignaturesOf(delta)), delta), sink, batchId)
   }
 
-  /** Drain once per sf dir; later invocations read the sink. */
-  private def sinkPath(spark: SparkSession, dir: String): String =
-    graft.QueryCaches.memo(s"corpusadmit.sink:$dir") {
-      val base = graft.Scratch.dir("corpus_admit")
-      val (sink, ckpt) = (s"$base/sink", s"$base/ckpt")
-      Drain(spark, Tables.load(spark, dir, "documents").schema, dir,
-        "documents.parquet", ckpt)(admitBatch(_, dir, sink, _))
-      sink
-    }
-
-  def streamCorpusAdmit(spark: SparkSession, dir: String): DataFrame =
+  /** Drains once per sf dir; later invocations read the sink. */
+  def streamCorpusAdmit(spark: SparkSession, dir: String): DataFrame = {
+    val sink = Drain.sinkOnce(spark, s"corpusadmit.sink:$dir", "corpus_admit", dir,
+      "documents")(admitBatch(_, dir, _, _))
     // partition discovery surfaces the batch=N key as a column — an
     // implementation detail of the idempotent sink, dropped here
-    Tables.parquet(spark, sinkPath(spark, dir)).drop("batch").orderBy("doc_id")
+    Tables.parquet(spark, sink).drop("batch").orderBy("doc_id")
+  }
 }

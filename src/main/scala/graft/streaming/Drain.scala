@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
 import org.apache.spark.sql.types.StructType
 
 import graft.sources.LocalFs
+import graft.tables.Tables
 
 /** The scheduled-drain shape every streaming admit shares: a parquet
   * file stream over the files of `srcDir` matching `glob`, run with
@@ -26,6 +27,29 @@ private[graft] object Drain {
         .option("checkpointLocation", ckpt)
         .foreachBatch(perBatch)
     }
+
+  /** Drain the file `<table>.parquet` of `dir` once per memo `key` into
+    * the sink of a fresh scratch dir `name-N`, and return the sink.
+    * `perBatch` is built inside the memo, before the stream starts, and
+    * gets each micro-batch, the sink and the batch id.
+    */
+  def sinkOnce(spark: SparkSession, key: String, name: String, dir: String, table: String)
+              (perBatch: => (DataFrame, String, Long) => Unit): String =
+    graft.QueryCaches.memo(key) {
+      val base = graft.Scratch.dir(name)
+      val (sink, ckpt) = (s"$base/sink", s"$base/ckpt")
+      val f = perBatch
+      Drain(spark, Tables.load(spark, dir, table).schema, dir, s"$table.parquet", ckpt)(
+        f(_, sink, _))
+      sink
+    }
+
+  /** Overwrite the partition `batch=<batchId>` of `sink` with `df`, so a
+    * redelivered micro-batch replaces its previous attempt instead of
+    * adding to it: the at-least-once `foreachBatch` becomes idempotent.
+    */
+  def toBatch(df: DataFrame, sink: String, batchId: Long): Unit =
+    Tables.write(df).mode("overwrite").parquet(s"$sink/batch=$batchId")
 
   /** Start the query `build` defines over the drain session of `spark`
     * with `Trigger.AvailableNow`, and wait until it has drained.

@@ -40,24 +40,17 @@ object QualityAdmit {
     */
   private[graft] def scoreBatch(batch: DataFrame, b0: Long, b1: Long,
                                 sink: String, batchId: Long): Unit =
-    QualityGate.labeledOf(batch)
-      .select(col("doc_id"), col("lang"),
-        QualityGate.keepCol(b0, b1).as("keep"))
-      .write.mode("overwrite").parquet(s"$sink/batch=$batchId")
+    Drain.toBatch(QualityGate.labeledOf(batch)
+      .select(col("doc_id"), col("lang"), QualityGate.keepCol(b0, b1).as("keep")), sink, batchId)
 
-  /** Drain once per sf dir; later invocations read the sink. */
-  private def sinkPath(spark: SparkSession, dir: String): String =
-    graft.QueryCaches.memo(s"qualityadmit.sink:$dir") {
-      val base = graft.Scratch.dir("quality_admit")
-      val (sink, ckpt) = (s"$base/sink", s"$base/ckpt")
+  /** Drains once per sf dir; later invocations read the sink. */
+  def streamQualityAdmit(spark: SparkSession, dir: String): DataFrame = {
+    val sink = Drain.sinkOnce(spark, s"qualityadmit.sink:$dir", "quality_admit", dir,
+        "documents") {
       // the frozen artifact: trained once, before the stream starts
       val (b0, b1) = QualityGate.trainedTicks(spark, dir)
-      Drain(spark, Tables.load(spark, dir, "documents").schema, dir,
-        "documents.parquet", ckpt)(scoreBatch(_, b0, b1, sink, _))
-      sink
+      scoreBatch(_, b0, b1, _, _)
     }
-
-  def streamQualityAdmit(spark: SparkSession, dir: String): DataFrame =
-    QualityGate.keepAudit(
-      Tables.parquet(spark, sinkPath(spark, dir)).drop("batch"))
+    QualityGate.keepAudit(Tables.parquet(spark, sink).drop("batch"))
+  }
 }

@@ -32,18 +32,8 @@ object ShardRoute {
     */
   private[graft] def routeBatch(batch: DataFrame, nshards: Int,
                                 sink: String, batchId: Long): Unit =
-    batch.select(graft.sources.SourceQueries.shardRouteColsBpe(nshards): _*)
-      .write.mode("overwrite").parquet(s"$sink/batch=$batchId")
-
-  /** Drain once per sf dir; later invocations read the sink. */
-  private def sinkPath(spark: SparkSession, dir: String): String =
-    graft.QueryCaches.memo(s"shardroute.sink:$dir") {
-      val base = graft.Scratch.dir("shard_route")
-      val (sink, ckpt) = (s"$base/sink", s"$base/ckpt")
-      Drain(spark, Tables.load(spark, dir, "documents").schema, dir,
-        "documents.parquet", ckpt)(routeBatch(_, 8, sink, _))
-      sink
-    }
+    Drain.toBatch(batch.select(graft.sources.SourceQueries.shardRouteColsBpe(nshards): _*),
+      sink, batchId)
 
   /** The DUAL-accounting manifest aggregated from the routed sink —
     * I17's oracle verbatim: whitespace AND subword budgets per shard
@@ -58,6 +48,10 @@ object ShardRoute {
         countDistinct(col("lang")).as("n_langs"))
       .orderBy("shard")
 
-  def streamShardRoute(spark: SparkSession, dir: String): DataFrame =
-    manifestOf(Tables.parquet(spark, sinkPath(spark, dir)).drop("batch"))
+  /** Drains once per sf dir; later invocations read the sink. */
+  def streamShardRoute(spark: SparkSession, dir: String): DataFrame = {
+    val sink = Drain.sinkOnce(spark, s"shardroute.sink:$dir", "shard_route", dir,
+      "documents")(routeBatch(_, 8, _, _))
+    manifestOf(Tables.parquet(spark, sink).drop("batch"))
+  }
 }

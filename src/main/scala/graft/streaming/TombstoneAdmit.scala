@@ -42,9 +42,7 @@ object TombstoneAdmit {
     */
   private[graft] def tombstoneBatch(batch: DataFrame, sink: String,
                                     batchId: Long): Unit =
-    batch.filter(col("doc_id") % 10 === 3)
-      .select("doc_id")
-      .write.mode("overwrite").parquet(s"$sink/batch=$batchId")
+    Drain.toBatch(batch.filter(col("doc_id") % 10 === 3).select("doc_id"), sink, batchId)
 
   /** The standing artifact root for a dir: the band-signature index
     * written once (D18's builder), the sidecar populated by the DRAIN
@@ -53,8 +51,7 @@ object TombstoneAdmit {
   private def rootPath(spark: SparkSession, dir: String): String =
     graft.QueryCaches.memo(s"tombstoneadmit.root:$dir") {
       val root = graft.Scratch.dir("tombstone_admit")
-      Dedup.bandSignatures(spark, dir)
-        .write.mode("overwrite").parquet(s"$root/index")
+      Tables.write(Dedup.bandSignatures(spark, dir)).mode("overwrite").parquet(s"$root/index")
       Drain(spark, Tables.load(spark, dir, "documents").schema, dir,
         "documents.parquet", s"$root/ckpt")(tombstoneBatch(_, s"$root/tombstones", _))
       root

@@ -45,22 +45,13 @@ object VectorAdmit {
     */
   private[graft] def admitBatch(batch: DataFrame, dir: String,
                                 sink: String, batchId: Long): Unit =
-    GraphAnn.streamInsertBatch(batch, dir)
-      .write.mode("overwrite").parquet(s"$sink/batch=$batchId")
+    Drain.toBatch(GraphAnn.streamInsertBatch(batch, dir), sink, batchId)
 
-  /** Drain once per sf dir; later invocations read the sink. */
-  private def sinkPath(spark: SparkSession, dir: String): String =
-    graft.QueryCaches.memo(s"vectoradmit.sink:$dir") {
-      val base = graft.Scratch.dir("vector_admit")
-      val (sink, ckpt) = (s"$base/sink", s"$base/ckpt")
-      Drain(spark, Tables.load(spark, dir, "embeddings").schema, dir,
-        "embeddings.parquet", ckpt)(admitBatch(_, dir, sink, _))
-      sink
-    }
-
+  /** Drains once per sf dir; later invocations read the sink. */
   def streamVectorAdmit(spark: SparkSession, dir: String): DataFrame = {
-    val dEdges = Tables.parquet(spark, sinkPath(spark, dir))
-      .select("src", "dst", "d2")
+    val sink = Drain.sinkOnce(spark, s"vectoradmit.sink:$dir", "vector_admit", dir,
+      "embeddings")(admitBatch(_, dir, _, _))
+    val dEdges = Tables.parquet(spark, sink).select("src", "dst", "d2")
     GraphAnn.streamAppendServe(spark, dir, dEdges)
   }
 }

@@ -1,12 +1,15 @@
 package graft.tables
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.functions.{col, unix_micros}
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
+import graft.sources.LocalFs
+
 /** Typed loaders for the generated test tables (TESTDATA.md), and the
-  * engine's one parquet read entry point.
+  * engine's one parquet read entry point and one file writer.
   *
   * One parquet file per table under `dir`. All operators take `dir` so the
   * same code runs at any scale factor; at cluster scale the same loaders
@@ -32,6 +35,39 @@ object Tables {
 
   def parquet(spark: SparkSession, paths: String*): DataFrame =
     parquet(spark, Map.empty[String, String], paths: _*)
+
+  /** Every DataFrame file write goes through here: the writer carries
+    * [[LocalFs.options]], so the files, their checksums and directories
+    * are written by Hadoop's local file system without process forks.
+    * Catalog tables are the exception ([[saveBucketed]]).
+    */
+  def write(df: DataFrame): DataFrameWriter[Row] = df.write.options(LocalFs.options)
+
+  /** `df` written as parquet to a fresh scratch dir `name-N` and read
+    * back: a persisted artifact that later plans scan instead of
+    * recomputing `df`.
+    */
+  def artifact(df: DataFrame, name: String): DataFrame = {
+    val path = graft.Scratch.dir(name)
+    write(df).mode("overwrite").parquet(path)
+    parquet(df.sparkSession, path)
+  }
+
+  /** Save `df` as the catalog table `name`, in 8 buckets bucketed and
+    * sorted by `key`. A table location left behind by a previous JVM is
+    * not in this session's in-memory catalog, so CTAS would refuse the
+    * path: the catalog entry and any stale directory are dropped first.
+    * The writer carries no [[LocalFs.options]]: `saveAsTable` stores
+    * writer options as the table's storage properties, and every later
+    * read of the table would carry them.
+    */
+  def saveBucketed(df: DataFrame, name: String, key: String): Unit = {
+    val spark = df.sparkSession
+    spark.sql(s"DROP TABLE IF EXISTS $name")
+    val stale = new Path(spark.conf.get("spark.sql.warehouse.dir"), name)
+    stale.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(stale, true)
+    df.write.mode("overwrite").bucketBy(8, key).sortBy(key).saveAsTable(name)
+  }
 
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",

@@ -12,13 +12,18 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ml.Persistence
+import graft.ops.Similarity
 import graft.sources.{LocalFs, NoForkLocalFileSystem, NoForkLocalFs, NoForkRawLocalFileSystem, Sources}
 import graft.streaming.CheckpointRestart
+import graft.tables.Tables
 
-/** The lifecycle's no-fork local file system: it leaves the same files,
-  * permissions and link statuses as Hadoop's, and one lifecycle day
+/** The engine's no-fork local file system: it leaves the same files,
+  * permissions and link statuses as Hadoop's; one lifecycle day
   * (commits, recompaction, vacuum, a streaming tick, a compacted read)
-  * starts no permission or link process on its files.
+  * starts no permission or link process on its files, and neither do
+  * the other writers behind `Tables.write` (a memoized artifact, a
+  * round-trip writer, a model's metadata sidecar).
   */
 class LocalFsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -41,6 +46,35 @@ class LocalFsSpec extends AnyFunSuite {
 
   private def perms(p: java.nio.file.Path): String =
     PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+
+  /** `body`'s result and the command line of every process the JVM
+    * started while it ran, from a `jdk.ProcessStart` recording.
+    */
+  private def processStarts[T](body: => T): (T, Seq[String]) = {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val out = try body finally rec.stop()
+    val jfr = Files.createTempFile("graft_localfs", ".jfr")
+    rec.dump(jfr)
+    rec.close()
+    val commands = RecordingFile.readAllEvents(jfr).asScala.toSeq
+      .filter(_.getEventType.getName == "jdk.ProcessStart")
+      .map(e => String.valueOf(e.getString("command")))
+    Files.delete(jfr)
+    (out, commands)
+  }
+
+  /** The `chmod`, `readlink`, `ls` and `stat` starts among `commands`
+    * that name a path under one of `roots`.
+    */
+  private def forksOn(commands: Seq[String], roots: String*): Seq[String] =
+    commands.filter { c =>
+      val exe = c.trim.split("\\s+").head.split('/').last
+      Set("chmod", "readlink", "ls", "stat")(exe) && roots.exists(c.contains)
+    }
 
   /** Each file and directory under `root` (relative) with its permissions. */
   private def tree(root: java.nio.file.Path): Map[String, String] =
@@ -113,14 +147,12 @@ class LocalFsSpec extends AnyFunSuite {
   }
 
   test("one lifecycle day starts no chmod, readlink, ls or stat process on its files") {
-    import jdk.jfr.Recording
-    import jdk.jfr.consumer.RecordingFile
     val root = Files.createTempDirectory("graft_localfs_day").toString
     val (log, ckpt, src, sink) = (s"$root/log", s"$root/ckpt", s"$root/src", s"$root/sink")
     val (baseA, baseB) = (s"$root/base_a", s"$root/base_b")
-    val orders = graft.tables.Tables.orders(spark, TestSpark.sf)
+    val orders = Tables.orders(spark, TestSpark.sf)
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
-    val events = graft.tables.Tables.events(spark, TestSpark.sf)
+    val events = Tables.events(spark, TestSpark.sf)
       .select("event_id", "ts", "user_id", "event_type", "value")
     // yesterday: a committed, compacted log, a drained stream, and today's
     // arrivals written by hand (outside the day)
@@ -140,10 +172,7 @@ class LocalFsSpec extends AnyFunSuite {
     CheckpointRestart.tick(spark, src, sink, ckpt)
     arrive("d1")
 
-    val rec = new Recording()
-    rec.enable("jdk.ProcessStart")
-    rec.start()
-    val rows = try {
+    val (rows, commands) = processStarts {
       Sources.recompact(spark, baseA, log, Seq("o_orderkey"), baseB)
       Sources.vacuumLog(spark, log, baseB)
       Sources.commitBatch(orders.filter(col("o_orderkey") % 3 === 0)
@@ -152,22 +181,32 @@ class LocalFsSpec extends AnyFunSuite {
         .withColumn("o_orderstatus", lit("P")), log, "labels")
       CheckpointRestart.tick(spark, src, sink, ckpt)
       Sources.readCompacted(spark, baseB, log, Seq("o_orderkey")).collect()
-    } finally rec.stop()
-    val jfr = Files.createTempFile("graft_localfs_day", ".jfr")
-    rec.dump(jfr)
-    rec.close()
-    val commands = RecordingFile.readAllEvents(jfr).asScala
-      .filter(_.getEventType.getName == "jdk.ProcessStart")
-      .map(e => String.valueOf(e.getString("command")))
-    Files.delete(jfr)
-    val forks = commands.filter { c =>
-      val exe = c.trim.split("\\s+").head.split('/').last
-      Set("chmod", "readlink", "ls", "stat")(exe) && c.contains(root)
     }
+    val forks = forksOn(commands, root)
     info(s"${commands.size} process starts in the day, ${forks.size} on its files")
     assert(forks.isEmpty, s"${forks.size} forks on the day's files, e.g. ${forks.take(3).mkString("; ")}")
     // the day did its work
     assert(rows.length == orders.count())
     assert(Sources.committedIds(sink).nonEmpty)
+  }
+
+  test("an artifact, a round-trip and a model-meta write start no chmod, readlink, ls or stat process on their files") {
+    val root = Files.createTempDirectory("graft_localfs_writes").toString
+    // a dir string no other caller uses, so the memoized index is built here
+    val fresh = s"${TestSpark.sf}/./."
+    val orders = Tables.orders(spark, TestSpark.sf).select("o_orderkey", "o_totalprice")
+    val (index, commands) = processStarts {
+      val index = Similarity.pqIndexPath(spark, fresh)
+      Sources.writeJson(orders, s"$root/json")
+      Persistence.saveMeta(spark, s"$root/model", "all", 0.5, Map("k" -> "v"))
+      index
+    }
+    val forks = forksOn(commands, root, index)
+    info(s"${commands.size} process starts in the writes, ${forks.size} on their files")
+    assert(forks.isEmpty, s"${forks.size} forks on the written files, e.g. ${forks.take(3).mkString("; ")}")
+    // the writes did their work
+    assert(Tables.parquet(spark, s"$index/codes").count() == Tables.embeddings(spark, fresh).count())
+    assert(Sources.readJson(spark, s"$root/json", orders.schema).count() == orders.count())
+    assert(Persistence.loadMeta(spark, s"$root/model").head().getString(0) == "all")
   }
 }

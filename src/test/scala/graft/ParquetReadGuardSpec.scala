@@ -12,6 +12,14 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - every batch parquet read goes through `Tables.parquet`, which learns
   *    the schema without a Spark job; a direct reader call elsewhere would
   *    bring the inference job back unseen;
+  *  - every DataFrame file write goes through `Tables.write`, whose writer
+  *    carries `LocalFs.options`, so no write forks a process per file; the
+  *    writes that are not DataFrame file writes are exempt (MLlib's
+  *    `model.write`, `Jdbc.write`, `Bench`'s `noop` sink), and
+  *    `LocalFs.options` is named only where a writer or a drain session
+  *    takes it (`Tables.scala`, `Drain.scala`);
+  *  - every stream start lives in `streaming.Drain` or in the continuous
+  *    queries of `Events.scala`;
   *  - every per-JVM reuse goes through `QueryCaches.memo`, which is the
   *    only place that builds exactly once and scopes keys on the
   *    `SparkContext`;
@@ -36,6 +44,17 @@ class ParquetReadGuardSpec extends AnyFunSuite {
       // `.read` then any option/schema calls, then `.parquet(` or a parquet format
       """\.read\s*(\.\w+\([^()]*\)\s*)*\.(parquet\(|format\(\s*"parquet"\s*\))""".r,
       Set("Tables.scala", "GraftParquetBridge.scala"), "read parquet through Tables.parquet"),
+    // a DataFrameWriter `.write`: not Tables.write itself, Files.write,
+    // MLlib's model.write, Jdbc.write or the noop sink; Jdbc.scala holds
+    // the JDBC writer
+    Rule("no DataFrame file write outside Tables.write",
+      """(?<!Tables|Files|model|Jdbc)\.write\b(?!\.format\("noop"\))""".r,
+      Set("Tables.scala", "Jdbc.scala"), "write files through Tables.write"),
+    Rule("no LocalFs.options outside Tables.write and the drain session",
+      """LocalFs\.options""".r, Set("Tables.scala", "Drain.scala"),
+      "write through Tables.write, or drain through streaming.Drain"),
+    Rule("no writeStream outside Drain and Events", """\.writeStream\b""".r,
+      Set("Drain.scala", "Events.scala"), "start drains through streaming.Drain"),
     Rule("no computeIfAbsent outside QueryCaches", """computeIfAbsent\(""".r,
       Set("QueryCaches.scala"), "memoize through QueryCaches.memo"),
     Rule("no applicationId outside QueryCaches", "applicationId".r,
