@@ -2,36 +2,51 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow,
+  TernaryExpression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode,
+  FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, LongType,
+  StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/* Native Catalyst expressions for the hot paths where composing builtins
-  * would allocate intermediates per row:
+/* Native Catalyst expressions for the per-row array and string work of
+  * the hot paths. Spark interprets a higher-order lambda (`transform`,
+  * `aggregate`, `zip_with`) per element, outside whole-stage codegen, and
+  * a composed builtin chain allocates intermediates per row; each of
+  * these is one loop instead:
   *
-  *  - [[CosineSim]] and [[DotProduct]]: fused cosine and dot product over
-  *    two `array<double>`.
+  *  - [[CosineSim]], [[DotProduct]] and [[SqDist]]: fused cosine, dot
+  *    product and squared L2 over two `array<double>`.
+  *  - [[QTicks]]: every component of an `array<double>` in 10⁻⁶ ticks.
   *  - [[IntSqDist]]: exact squared L2 over two integer-tick `array<bigint>`
   *    (LSH bucketing, IVF/PQ geometry).
+  *  - [[CellFold]]: the (d2, cell) fold of a tick vector against an IVF
+  *    codebook.
   *  - [[PqNearest]] and [[PqDists]]: one PQ subspace's nearest codeword,
   *    and its distances to every codeword.
   *  - [[RollHash64]]: base-31 rolling hash over UTF-8 or raw binary bytes.
   *  - [[RollWindowHash64]]: every sliding-window [[RollHash64]] over a
   *    token array, in one pass.
+  *  - [[MinHash]] and [[Shingles3]]: a document's MinHash signature and
+  *    its distinct word 3-grams, from its token array.
   *  - [[Mix64]], [[Avalanche64]] and [[Combine64]]: wrapping mod-2⁶⁴ hash
   *    combinators (MinHash permutations, sort keys, band signatures).
   *  - [[JaccardSim]]: distinct-set Jaccard over two `array<string>`.
+  *  - [[TextStats]]: a text's length, token count and character-class
+  *    counts in one pass over its UTF-8 bytes.
   *  - [[RedactCascade]]: the email → phone → id PII cascade.
   *
   * Invariant: each expression has ONE kernel, a static method on its
-  * companion object, and `nullSafeEval` and `doGenCode` both call it. So
-  * constant folding, the interpreted fallback and whole-stage codegen
-  * cannot disagree. A `doGenCode` is that call plus, for a nullable
-  * expression, its null flag. The loops live in real JVM methods: the JIT
-  * compiles them once, and the generated stage method stays under the
-  * JVM's 8 KB JIT limit however many expressions fuse into it.
+  * companion object, and `nullSafeEval` (or `eval`) and `doGenCode` both
+  * call it. So constant folding, the interpreted fallback and whole-stage
+  * codegen cannot disagree. A `doGenCode` is that call plus, for a
+  * nullable expression, its null flag. The loops live in real JVM
+  * methods: the JIT compiles them once, and the generated stage method
+  * stays under the JVM's 8 KB JIT limit however many expressions fuse
+  * into it.
   */
 
 /** Type check and NULL rule shared by the expressions over arrays. */
@@ -200,6 +215,94 @@ object IntSqDist {
   }
 }
 
+/** Fused squared L2 Σ (aᵢ−bᵢ)² over two array<double> columns, summed in
+  * index order from 0.0 — the double sum the `zip_with` + `aggregate`
+  * fold computes, with no per-row difference array. NULL unless
+  * [[ArrayArgs.aligned]], like that fold.
+  */
+case class SqDist(left: Expression, right: Expression)
+  extends BinaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = ArrayArgs.check(this, DoubleType)
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "graft_sqdist"
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val (xs, ys) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (ArrayArgs.aligned(xs, ys)) SqDist.sqDist(xs, ys) else null
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.isNull} = !graft.functions.ArrayArgs.aligned($a, $b);
+         |if (!${ev.isNull}) ${ev.value} = graft.functions.SqDist.sqDist($a, $b);""".stripMargin)
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+                                                 newRight: Expression): SqDist =
+    copy(left = newLeft, right = newRight)
+}
+
+object SqDist {
+  /** Requires [[ArrayArgs.aligned]] arrays. */
+  def sqDist(xs: ArrayData, ys: ArrayData): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < xs.numElements()) {
+      val d = xs.getDouble(i) - ys.getDouble(i)
+      acc += d * d
+      i += 1
+    }
+    acc
+  }
+}
+
+/** Every component of an `array<double>` in 10⁻⁶ ticks,
+  * `floor(x·10⁶ + 0.5)` as a long — element for element what
+  * `VectorOps.qtick` gives: Java's double-to-long conversion, so NaN is
+  * 0 and ±Inf saturate. A NULL element stays NULL.
+  */
+case class QTicks(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"graft_qticks expects an array<double> argument, got ${t.simpleString}")
+  }
+  override def dataType: DataType =
+    ArrayType(LongType, child.dataType.asInstanceOf[ArrayType].containsNull)
+  override def prettyName: String = "graft_qticks"
+
+  override def nullSafeEval(input: Any): Any = QTicks.ticks(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.functions.QTicks.ticks($c);")
+
+  override protected def withNewChildInternal(newChild: Expression): QTicks =
+    copy(child = newChild)
+}
+
+object QTicks {
+  def tick(x: Double): Long = Math.floor(x * 1000000.0 + 0.5).toLong
+
+  def ticks(xs: ArrayData): ArrayData = {
+    val n = xs.numElements()
+    var i = 0
+    if (ArrayArgs.noNulls(xs)) {
+      val out = new Array[Long](n)
+      while (i < n) { out(i) = tick(xs.getDouble(i)); i += 1 }
+      UnsafeArrayData.fromPrimitiveArray(out)
+    } else {
+      val out = new Array[Any](n)
+      while (i < n) {
+        if (!xs.isNullAt(i)) out(i) = tick(xs.getDouble(i))
+        i += 1
+      }
+      new GenericArrayData(out)
+    }
+  }
+}
+
 /** Polynomial (base-31) rolling hash over UTF-8 or raw binary bytes — a
   * single-pass 64-bit content fingerprint, no digest allocation. String
   * and binary inputs with identical bytes hash identically: binary
@@ -291,11 +394,13 @@ object RollWindowHash64 {
     * are never null, and empty tokens join like any other). Returns an
     * empty array when fewer than `win` tokens (callers filter first).
     */
-  def hashes(toks: ArrayData, win: Int): ArrayData = {
+  def hashes(toks: ArrayData, win: Int): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(windows(toks, win))
+
+  /** [[hashes]] as a plain `long[]`, for kernels that fold the hashes. */
+  def windows(toks: ArrayData, win: Int): Array[Long] = {
     val n = toks.numElements()
-    if (n < win)
-      return org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        .fromPrimitiveArray(Array.emptyLongArray)
+    if (n < win) return Array.emptyLongArray
     val tb = new Array[Array[Byte]](n)
     var l = n - 1 // the n−1 single-space separators
     var t = 0
@@ -362,8 +467,7 @@ object RollWindowHash64 {
       out(i) = pre(e) + (RollHash64.Seed - pre(a)) * pow(e - a)
       i += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(out)
+    out
   }
 }
 
@@ -396,6 +500,151 @@ case class Mix64(child: Expression, a: Long, b: Long)
 
 object Mix64 {
   def mix(h: Long, a: Long, b: Long): Long = a * h + b
+}
+
+/** A document's MinHash signature from its token array: element i is the
+  * min over its word-3-gram window hashes of [[Mix64]]`(h, aᵢ, bᵢ)`.
+  * VALUE-IDENTICAL to hashing each of the document's distinct shingles
+  * with [[RollHash64]] and taking a per-permutation `min` of the mixes:
+  * the window hashes are [[RollWindowHash64]]'s (a repeated shingle
+  * hashes alike, and cannot move a min), and a document with fewer than
+  * 3 tokens has the one hash of its tokens joined by spaces — "" for
+  * none, and for NULL tokens, as `concat_ws` over out-of-range
+  * subscripts gives. One pass over the bytes and `numPerm` multiply-adds
+  * per window, so signing is linear in document length.
+  *
+  * `a` and `b` are foldable `array<bigint>` children of equal length (the
+  * mix constants), so two signings compare equal as plans.
+  */
+case class MinHash(tokens: Expression, a: Expression, b: Expression)
+  extends TernaryExpression {
+
+  override def first: Expression = tokens
+  override def second: Expression = a
+  override def third: Expression = b
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (tokens.dataType, a.dataType, b.dataType) match {
+      case (ArrayType(StringType, _), ArrayType(LongType, _), ArrayType(LongType, _))
+        if a.foldable && b.foldable => TypeCheckResult.TypeCheckSuccess
+      case (t, x, y) => TypeCheckResult.TypeCheckFailure(
+        "graft_minhash expects (array<string>, foldable array<bigint>, foldable array<bigint>), " +
+          s"got (${t.simpleString}, ${x.simpleString}, ${y.simpleString})")
+    }
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "graft_minhash"
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any = MinHash.signature(
+    tokens.eval(input).asInstanceOf[ArrayData],
+    a.eval(input).asInstanceOf[ArrayData], b.eval(input).asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val (t, x, y) = (tokens.genCode(ctx), a.genCode(ctx), b.genCode(ctx))
+    ev.copy(code =
+      code"""${t.code}
+            |${x.code}
+            |${y.code}
+            |${CodeGenerator.javaType(dataType)} ${ev.value} = graft.functions.MinHash.signature(
+            |  ${t.isNull} ? null : ${t.value}, ${x.value}, ${y.value});""".stripMargin,
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(newFirst: Expression, newSecond: Expression,
+                                                 newThird: Expression): MinHash =
+    copy(tokens = newFirst, a = newSecond, b = newThird)
+}
+
+object MinHash {
+  /** The shingle width. */
+  val Width = 3
+
+  /** `toks` may be null (no tokens). */
+  def signature(toks: ArrayData, a: ArrayData, b: ArrayData): ArrayData = {
+    val (am, bm) = (a.toLongArray(), b.toLongArray())
+    require(am.length == bm.length,
+      s"graft_minhash needs as many a as b constants, got ${am.length} and ${bm.length}")
+    val n = if (toks == null) 0 else toks.numElements()
+    val hs =
+      if (n == 0) Array(RollHash64.Seed)
+      else RollWindowHash64.windows(toks, math.min(n, Width))
+    val out = Array.fill(am.length)(Long.MaxValue)
+    var w = 0
+    while (w < hs.length) {
+      val h = hs(w)
+      var i = 0
+      while (i < out.length) {
+        val m = Mix64.mix(h, am(i), bm(i))
+        if (m < out(i)) out(i) = m
+        i += 1
+      }
+      w += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+}
+
+/** A document's distinct word 3-grams from its token array: the
+  * space-joined windows in first-occurrence order, VALUE-IDENTICAL to
+  * `array_distinct` over `concat_ws(' ', toks[i], toks[i+1], toks[i+2])`
+  * for i ∈ [0, max(n−3, 0)] — so fewer than 3 tokens give the one
+  * string of all of them, and NULL tokens give `[""]`.
+  */
+case class Shingles3(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"graft_shingles3 expects an array<string> argument, got ${t.simpleString}")
+  }
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def prettyName: String = "graft_shingles3"
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any =
+    Shingles3.shingles(child.eval(input).asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code =
+      code"""${c.code}
+            |${CodeGenerator.javaType(dataType)} ${ev.value} =
+            |  graft.functions.Shingles3.shingles(${c.isNull} ? null : ${c.value});""".stripMargin,
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Shingles3 =
+    copy(child = newChild)
+}
+
+object Shingles3 {
+  private val Space = UTF8String.fromString(" ")
+
+  /** `toks` may be null (no tokens); its elements may not. */
+  def shingles(toks: ArrayData): ArrayData = {
+    val n = if (toks == null) 0 else toks.numElements()
+    val w = MinHash.Width
+    if (n == 0) return new GenericArrayData(Array[Any](UTF8String.EMPTY_UTF8))
+    val t = new Array[UTF8String](n)
+    var i = 0
+    while (i < n) {
+      if (toks.isNullAt(i))
+        throw new IllegalArgumentException(
+          s"graft_shingles3 does not support null array elements (null at index $i)")
+      t(i) = toks.getUTF8String(i)
+      i += 1
+    }
+    if (n < w) return new GenericArrayData(Array[Any](UTF8String.concatWs(Space, t: _*)))
+    val seen = new java.util.HashSet[UTF8String](2 * (n - w + 1))
+    val out = new scala.collection.mutable.ArrayBuffer[Any](n - w + 1)
+    i = 0
+    while (i <= n - w) {
+      val s = UTF8String.concatWs(Space, t(i), t(i + 1), t(i + 2))
+      if (seen.add(s)) out += s
+      i += 1
+    }
+    new GenericArrayData(out.toArray)
+  }
 }
 
 /** SplitMix64 finalizer (Steele/Lea/Flood's SplittableRandom mix, the
@@ -595,6 +844,76 @@ object PqDists {
   }
 }
 
+/** The IVF (d2, cell) fold: left = a tick vector `q` (`array<bigint>`),
+  * right = a codebook literal `array<struct<cell, cv: array<bigint>>>`.
+  * Returns one `struct<d2, cell>` per codeword in codebook order, d2 the
+  * exact [[IntSqDist]] from `q` to `cv` — NULL unless
+  * [[ArrayArgs.aligned]], and NULL for every cell when `q` is NULL —
+  * the array the per-cell `transform` lambda builds, so `array_min` and
+  * `array_sort` over it keep the lowest-cell tie-break of the struct
+  * order.
+  */
+case class CellFold(left: Expression, right: Expression)
+  extends BinaryExpression {
+
+  private def cellField: StructField =
+    right.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType].fields(0)
+
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(LongType, _), ArrayType(StructType(Array(_, StructField(_, ArrayType(LongType, _),
+      _, _))), _)) => TypeCheckResult.TypeCheckSuccess
+    case (l, r) => TypeCheckResult.TypeCheckFailure(
+      s"graft_cell_fold expects (array<bigint>, array<struct<cell, cv: array<bigint>>>), got " +
+        s"(${l.simpleString}, ${r.simpleString})")
+  }
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("d2", LongType, nullable = true),
+    StructField("cell", cellField.dataType, cellField.nullable))), containsNull = false)
+  override def prettyName: String = "graft_cell_fold"
+  override def nullable: Boolean = right.nullable
+
+  override def eval(input: InternalRow): Any = {
+    val cells = right.eval(input)
+    if (cells == null) null
+    else CellFold.fold(left.eval(input).asInstanceOf[ArrayData], cells.asInstanceOf[ArrayData],
+      cellField.dataType)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val (q, cells) = (left.genCode(ctx), right.genCode(ctx))
+    val cellType = ctx.addReferenceObj("cellType", cellField.dataType)
+    ev.copy(code =
+      code"""${q.code}
+            |${cells.code}
+            |boolean ${ev.isNull} = ${cells.isNull};
+            |${CodeGenerator.javaType(dataType)} ${ev.value} = ${ev.isNull} ? null :
+            |  graft.functions.CellFold.fold(${q.isNull} ? null : ${q.value}, ${cells.value},
+            |    $cellType);""".stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+                                                 newRight: Expression): CellFold =
+    copy(left = newLeft, right = newRight)
+}
+
+object CellFold {
+  /** `q` may be null. */
+  def fold(q: ArrayData, cells: ArrayData, cellType: DataType): ArrayData = {
+    val out = new Array[Any](cells.numElements())
+    var c = 0
+    while (c < out.length) {
+      val cell = cells.getStruct(c, 2)
+      val d2 =
+        if (q != null && !cell.isNullAt(1) && ArrayArgs.aligned(q, cell.getArray(1)))
+          IntSqDist.sqDist(q, cell.getArray(1))
+        else null
+      out(c) = new GenericInternalRow(Array[Any](d2, cell.get(0, cellType)))
+      c += 1
+    }
+    new GenericArrayData(out)
+  }
+}
+
 /** Fused distinct-set Jaccard over two array<string> columns — VALUE-
   * IDENTICAL to `size(array_intersect(a, b)).cast("double") /
   * size(array_union(a, b))`: both operands of the division are the same
@@ -667,6 +986,79 @@ object JaccardSim {
     val unionN = setA.size + extra +
       (if (aNull || bNull) 1 else 0)
     interN.toDouble / unionN
+  }
+}
+
+/** A text's statistics in one pass over its UTF-8 bytes: struct(len,
+  * n_tokens, punct, digits, non_space), each VALUE-IDENTICAL on valid
+  * UTF-8 to the composed form it replaces (W = the six ASCII whitespace
+  * characters `[ \t\n\x0B\f\r]`):
+  *  - len = `length(text)`, the code points;
+  *  - n_tokens = `size(split(trim(text), W+))`: W-runs + 1 once `trim`
+  *    has removed the spaces (0x20 only) at both ends, so "" has 1;
+  *  - punct = `len − length(regexp_replace(text, [^a-zA-Z0-9W], ''))`:
+  *    code points outside ASCII letters, digits and W;
+  *  - digits = `len − length(regexp_replace(text, [0-9], ''))`;
+  *  - non_space = `length(regexp_replace(text, W, ''))`.
+  * The composed form runs three regex replaces and a regex split per
+  * row; this counts lead bytes, with no String decode.
+  */
+case class TextStats(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"graft_text_stats expects a string argument, got ${t.simpleString}")
+  }
+  override def dataType: DataType = TextStats.outType
+  override def prettyName: String = "graft_text_stats"
+
+  override def nullSafeEval(input: Any): Any = TextStats.stats(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.functions.TextStats.stats($c);")
+
+  override protected def withNewChildInternal(newChild: Expression): TextStats =
+    copy(child = newChild)
+}
+
+object TextStats {
+  val outType: StructType = StructType(
+    Seq("len", "n_tokens", "punct", "digits", "non_space")
+      .map(StructField(_, IntegerType, nullable = false)))
+
+  private def isSpace(b: Byte): Boolean = b == ' ' || (b >= 9 && b <= 13)
+
+  def stats(s: UTF8String): InternalRow = {
+    val n = s.numBytes()
+    // the token count reads [lo, hi): the text with its spaces trimmed
+    var lo = 0
+    while (lo < n && s.getByte(lo) == ' ') lo += 1
+    var hi = n
+    while (hi > lo && s.getByte(hi - 1) == ' ') hi -= 1
+    var len = 0; var runs = 0; var punct = 0; var digits = 0; var spaces = 0
+    var prevSpace = false
+    var i = 0
+    while (i < n) {
+      val b = s.getByte(i)
+      if (b >= 0) {
+        len += 1
+        val space = isSpace(b)
+        if (space) {
+          spaces += 1
+          if ((i == lo || !prevSpace) && i >= lo && i < hi) runs += 1
+        } else if (b >= '0' && b <= '9') digits += 1
+        else if (!((b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z'))) punct += 1
+        prevSpace = space
+      } else if ((b & 0xC0) != 0x80) {
+        // the lead byte of a multi-byte code point: never a letter, digit or space
+        len += 1
+        punct += 1
+        prevSpace = false
+      }
+      i += 1
+    }
+    new GenericInternalRow(Array[Any](len, runs + 1, punct, digits, len - spaces))
   }
 }
 

@@ -3,13 +3,16 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Array-vector math over `array<double>` columns, built from codegen'd
-  * builtins (`zip_with`, `aggregate`, `transform`) — no UDFs, so every
-  * expression stays inside whole-stage codegen and matches DuckDB's
-  * `list_*` double-precision semantics element-for-element.
+/** Array-vector, hash and text math over columns, each a native
+  * expression from [[graft.functions]] or a scalar builtin. Spark 4.1
+  * interprets a higher-order lambda per element (it is a
+  * `CodegenFallback`, outside whole-stage codegen), so hot per-row array
+  * math here is a native kernel, never a lambda; each kernel is pinned
+  * equal to its composed-builtins form, and to DuckDB's `list_*`
+  * double-precision semantics element for element.
   *
-  * All helpers expect `array<double>`; call [[asDouble]] on float arrays
-  * first (the test `embeddings.embedding` column is `array<float>`).
+  * All vector helpers expect `array<double>`; call [[asDouble]] on float
+  * arrays first (the test `embeddings.embedding` column is `array<float>`).
   */
 object VectorOps {
 
@@ -29,8 +32,11 @@ object VectorOps {
     */
   def qtick(x: Column): Column = floor(x * lit(1000000.0) + lit(0.5)).cast("long")
 
-  /** [[qtick]] over every component of an `array<double>` column. */
-  def qticks(v: Column): Column = transform(v, x => qtick(x))
+  /** [[qtick]] over every component of an `array<double>` column — fused
+    * native [[QTicks]]; a NULL component stays NULL.
+    */
+  def qticks(v: Column): Column =
+    org.apache.spark.sql.GraftColumnBridge.column(QTicks(expression(v)))
 
   /** Σ (aᵢ−bᵢ)² over integer-tick arrays — fused native [[IntSqDist]],
     * exact long arithmetic.
@@ -48,12 +54,18 @@ object VectorOps {
     org.apache.spark.sql.GraftColumnBridge.column(
       JaccardSim(expression(a), expression(b)))
 
-  /** Σ (aᵢ−bᵢ)² — squared Euclidean distance. Monotonic with L2, so rank
-    * and top-k logic can skip the sqrt.
+  /** Σ (aᵢ−bᵢ)² — squared Euclidean distance, fused native [[SqDist]].
+    * Monotonic with L2, so rank and top-k logic can skip the sqrt.
     */
   def sqDist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, v) => acc + v)
+    org.apache.spark.sql.GraftColumnBridge.column(SqDist(expression(a), expression(b)))
+
+  /** The (d2, cell) fold of tick vector `q` against a codebook column of
+    * `array<struct<cell, cv: array<bigint>>>` — fused native [[CellFold]]:
+    * one `struct<d2, cell>` per codeword, in codebook order.
+    */
+  def cellFold(q: Column, cells: Column): Column =
+    org.apache.spark.sql.GraftColumnBridge.column(CellFold(expression(q), expression(cells)))
 
   /** cos(a, b) = a·b / √(Σa²·Σb²) — the sqrt-of-product form, matching
     * DuckDB's `list_cosine_similarity` bit-for-bit for oracle parity.
@@ -75,6 +87,29 @@ object VectorOps {
   def rollWindowHash64(c: Column, win: Int): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       RollWindowHash64(expression(c), win))
+
+  /** A document's MinHash signature from its token column — fused native
+    * [[MinHash]]: element i is the min of `mix64(h, aᵢ, bᵢ)` over the
+    * hashes of its word 3-grams, for each `(aᵢ, bᵢ)` of `consts`.
+    */
+  def minhash(tokens: Column, consts: Seq[(Long, Long)]): Column = {
+    def longs(xs: Seq[Long]) = org.apache.spark.sql.catalyst.expressions.Literal.create(
+      xs, org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType))
+    org.apache.spark.sql.GraftColumnBridge.column(MinHash(expression(tokens),
+      longs(consts.map(_._1)), longs(consts.map(_._2))))
+  }
+
+  /** A document's distinct word 3-grams from its token column — fused
+    * native [[Shingles3]].
+    */
+  def shingles3(tokens: Column): Column =
+    org.apache.spark.sql.GraftColumnBridge.column(Shingles3(expression(tokens)))
+
+  /** struct(len, n_tokens, punct, digits, non_space) of a string column in
+    * one pass — fused native [[TextStats]].
+    */
+  def textStats(text: Column): Column =
+    org.apache.spark.sql.GraftColumnBridge.column(TextStats(expression(text)))
 
   /** Wrapping affine mix a·h + b (mod 2⁶⁴) over a bigint column. */
   def mix64(c: Column, a: Long, b: Long): Column =

@@ -26,17 +26,38 @@ object Dedup {
       .select("keep_id", "n_copies")
       .orderBy("keep_id")
 
-  /** Word-level shingles (word 3-grams) as a distinct array per doc.
-    * Tokens are materialized into a column first so the shingle lambda
-    * does O(1) element access — `slice(split(...))` inside the lambda
-    * would re-split the text for every shingle position (O(words²)/row).
+  /** A text column's whitespace tokens, as every shingle and signature
+    * consumer splits them.
+    */
+  private def tokensOf(text: Column): Column = split(trim(text), "[ \\t\\n\\x0B\\f\\r]+")
+
+  /** Word-level shingles (word 3-grams) as a distinct array per doc —
+    * the native [[graft.functions.Shingles3]] over the doc's tokens.
     */
   private[graft] def shingled(df: DataFrame): DataFrame =
-    df.withColumn("tokens", split(trim(col("text")), "[ \\t\\n\\x0B\\f\\r]+"))
-      .select(col("doc_id"), array_distinct(expr(
-        """transform(sequence(0, greatest(size(tokens) - 3, 0)),
-          |  i -> concat_ws(' ', tokens[i], tokens[i+1], tokens[i+2]))""".stripMargin))
-        .as("shingles"))
+    df.select(col("doc_id"), shingles3(tokensOf(col("text"))).as("shingles"))
+
+  /** The signature plan over an ARBITRARY (doc_id, text) frame — the
+    * un-memoized core, so a streaming micro-batch (G15) can sign just
+    * its own arrivals with the exact arithmetic the standing index was
+    * built with. One projection per document: the native
+    * [[graft.functions.MinHash]] signs its tokens in one pass (no
+    * shingle explode, no per-permutation `min` aggregate, no shuffle),
+    * and each band's signature folds its rows with `combine64`. One
+    * signature per row: `doc_id` is the documents key.
+    */
+  private[graft] def bandSignaturesOf(docs: DataFrame,
+                                      numPerm: Int = 32, bands: Int = 8): DataFrame = {
+    val rowsPerBand = numPerm / bands
+    docs.select(col("doc_id"), minhash(tokensOf(col("text")), mixConsts(numPerm)).as("mh"))
+      .select(col("doc_id"), explode(array(
+        (0 until bands).map { b =>
+          val sig = combine64(array(
+            (Seq(lit(b.toLong): Column) ++ (0 until rowsPerBand).map(r => col("mh")(b * rowsPerBand + r))): _*))
+          struct(lit(b).as("band"), sig.as("sig"))
+        }: _*)).as("bs"))
+      .select(col("doc_id"), col("bs.band"), col("bs.sig"))
+  }
 
   /** The (doc_id, band, sig) table — the ONLY persisted MinHash state
     * (~40 B/row), built once per sf dir via the bounded memo and shared
@@ -44,33 +65,6 @@ object Dedup {
     * incremental probe (where it plays the standing corpus INDEX a
     * daily delta joins against).
     */
-  /** The signature plan over an ARBITRARY (doc_id, text) frame — the
-    * un-memoized core, so a streaming micro-batch (G15) can sign just
-    * its own arrivals with the exact arithmetic the standing index was
-    * built with.
-    */
-  private[graft] def bandSignaturesOf(docs: DataFrame,
-                                      numPerm: Int = 32, bands: Int = 8): DataFrame = {
-    val rowsPerBand = numPerm / bands
-    // shingles are a pure projection over the text scan — re-derived
-    // per use, NEVER cached (the arrays outweigh the corpus; see D2)
-    val exploded = shingled(docs)
-      .select(col("doc_id"), explode(col("shingles")).as("shingle"))
-      .withColumn("h0", rollhash64(col("shingle")))
-    val consts = mixConsts(numPerm)
-    val mhCols = (0 until numPerm).map { i =>
-      min(mix64(col("h0"), consts(i)._1, consts(i)._2)).as(s"mh_$i")
-    }
-    exploded.groupBy("doc_id").agg(mhCols.head, mhCols.tail: _*)
-      .select(col("doc_id"), explode(array(
-        (0 until bands).map { b =>
-          val sig = combine64(array(
-            (Seq(lit(b.toLong): Column) ++ (0 until rowsPerBand).map(r => col(s"mh_${b * rowsPerBand + r}"))): _*))
-          struct(lit(b).as("band"), sig.as("sig"))
-        }: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band"), col("bs.sig"))
-  }
-
   private[graft] def bandSignatures(spark: SparkSession, dir: String,
                                     numPerm: Int = 32, bands: Int = 8): DataFrame =
     graft.QueryCaches.memo(s"dedup.bandSigs:$dir:$numPerm:$bands") {
@@ -228,8 +222,8 @@ object Dedup {
     * counts (covers every doc, so the result is non-empty even on a
     * dup-free corpus).
     *
-    * Scale: the exploded (doc × shingle × perm) stream partial-aggregates
-    * map-side to 32 longs per doc before the shuffle; candidate pairs are
+    * Scale: signing is one projection per doc, linear in its length (32
+    * longs from one pass over its bytes, no shuffle); candidate pairs are
     * bounded by band-bucket collisions, not n².
     */
   def dedupMinhashLsh(spark: SparkSession, dir: String): DataFrame = {
@@ -364,7 +358,7 @@ object Dedup {
     * positive odd 31-bit multiplier — odd keeps the map bijective mod 2⁶⁴,
     * 31-bit keeps the oracle's HUGEINT product (< 2⁹⁵) inside 128 bits.
     */
-  private[ops] def mixConsts(n: Int, seed: Long = 11L): Seq[(Long, Long)] = {
+  private[graft] def mixConsts(n: Int, seed: Long = 11L): Seq[(Long, Long)] = {
     val rnd = new scala.util.Random(seed)
     Seq.fill(n)((rnd.nextInt(Int.MaxValue).toLong | 1L, rnd.nextLong() & Long.MaxValue))
   }

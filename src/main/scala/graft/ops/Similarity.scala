@@ -96,7 +96,8 @@ object Similarity {
 
   /** The literal-codebook (d2, cell) struct fold every IVF consumer
     * routes and assigns with: per row, one struct per cell holding the
-    * fused native IntSqDist to its tick centroid. Lexicographic struct
+    * exact integer L2 to its tick centroid (the native
+    * [[graft.functions.CellFold]]). Lexicographic struct
     * ordering makes `array_min`/`array_sort` the argmin with the
     * lowest-cell tie-break built in. The codebook is |cells|·dim longs
     * collected once (bounded by the coarse-quantizer size, never by n)
@@ -107,9 +108,7 @@ object Similarity {
     val cellsLit = array(cb.map { case (id, cv) =>
       struct(lit(id).as("cell"), array(cv.map(lit(_)): _*).as("cv"))
     }: _*)
-    q => transform(cellsLit, c =>
-      struct(intSqDist(q, c.getField("cv")).as("d2"),
-        c.getField("cell").as("cell")))
+    q => cellFold(q, cellsLit)
   }
 
   /** The cell of tick vector `q`: the fold's argmin. */

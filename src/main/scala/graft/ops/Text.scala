@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorOps.textStats
 import graft.tables.Tables
 
 /** Text analysis for training-data pipelines — SURVEY.md §2.F.
@@ -10,8 +11,8 @@ import graft.tables.Tables
   * Token counting, quality scoring, stopword-heuristic language ID,
   * normalized-content fingerprinting, corpus n-gram stats. Everything is
   * a per-row projection plus (at most) one aggregation — embarrassingly
-  * parallel at 100 TB; no driver-side state, no UDFs (all builtins stay
-  * in whole-stage codegen).
+  * parallel at 100 TB; no driver-side state, no UDFs (builtins, and
+  * graft's native kernels where a regex chain would run per row).
   */
 object Text {
 
@@ -37,28 +38,31 @@ object Text {
     * [[Corpus]]) so the engine-side formula can never drift from its
     * consumers. Quantized (r4) so threshold compares replay exactly.
     */
-  private[ops] def qualityScoreCol: Column = {
-    val len = length(col("text")).cast("double")
-    val nTokens = size(split(trim(col("text")), "[ \\t\\n\\x0B\\f\\r]+")).cast("double")
-    val punct = len - length(regexp_replace(col("text"), "[^a-zA-Z0-9 \\t\\n\\x0B\\f\\r]", "")).cast("double")
+  private[graft] def qualityScoreCol: Column = qualityScoreOf(textStats(col("text")))
+
+  /** F2's composite score over a [[graft.functions.TextStats]] struct. */
+  private def qualityScoreOf(st: Column): Column = {
+    val len = st.getField("len").cast("double")
+    val nTokens = st.getField("n_tokens").cast("double")
+    val punct = st.getField("punct").cast("double")
     r4(least(nTokens / lit(50.0), lit(1.0)) * (lit(1.0) - punct / len))
   }
 
+  /** F2 over one [[graft.functions.TextStats]] pass per row. */
   def textQuality(spark: SparkSession, dir: String): DataFrame = {
-    val len = length(col("text")).cast("double")
-    val nTokens = size(split(trim(col("text")), "[ \\t\\n\\x0B\\f\\r]+")).cast("double")
-    val punct = len - length(regexp_replace(col("text"), "[^a-zA-Z0-9 \\t\\n\\x0B\\f\\r]", "")).cast("double")
-    val digits = len - length(regexp_replace(col("text"), "[0-9]", "")).cast("double")
-    val nonSpace = length(regexp_replace(col("text"), "[ \\t\\n\\x0B\\f\\r]", "")).cast("double")
+    val st = col("st")
+    val len = st.getField("len").cast("double")
+    val nTokens = st.getField("n_tokens").cast("double")
     Tables.documents(spark, dir)
+      .select(col("doc_id"), textStats(col("text")).as("st"))
       .select(
         col("doc_id"),
         len.cast("long").as("len"),
         nTokens.cast("long").as("n_tokens"),
-        r4(punct / len).as("punct_ratio"),
-        r4(digits / len).as("digit_ratio"),
-        r4(nonSpace / nTokens).as("mean_token_len"),
-        qualityScoreCol.as("quality_score"))
+        r4(st.getField("punct").cast("double") / len).as("punct_ratio"),
+        r4(st.getField("digits").cast("double") / len).as("digit_ratio"),
+        r4(st.getField("non_space").cast("double") / nTokens).as("mean_token_len"),
+        qualityScoreOf(st).as("quality_score"))
       .orderBy("doc_id")
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VectorOps
-import graft.ops.Text
+import graft.ops.{Dedup, Text}
 
 class ExprsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -228,9 +228,153 @@ class ExprsSpec extends AnyFunSuite {
       "length-mismatched codebook must null the result"))
   }
 
+  /** Edge-case documents for the signing and shingle twins, on a frame
+    * whose projections run in tasks rather than being folded away.
+    */
+  private def edgeDocs(s: org.apache.spark.sql.SparkSession) = {
+    val long = Seq.tabulate(2000)(i => s"w${i % 97}x${i % 13}").mkString(" ")
+    s.createDataFrame(Seq[(Long, String)](
+      (1L, ""), (2L, null), (3L, "solo"), (4L, "two words"), (5L, "exactly three words"),
+      (6L, "a b c a b c a b c a b c"), (7L, "   "), (8L, "\tlead tab and trail\t"),
+      (9L, "  spaced   out \n lines  "), (10L, "héllo wörld 日本語 🎉 x y"), (11L, long)))
+      .toDF("doc_id", "text").repartition(2)
+  }
+
+  /** A session whose composed twins may subscript past an array's end. */
+  private def lenient = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.ansi.enabled", "false")
+    s
+  }
+
+  test("MinHash signing is one projection: no Aggregate, no Exchange, split in one operator") {
+    import org.apache.spark.sql.catalyst.expressions.StringSplit
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val sigs = Dedup.bandSignaturesOf(
+      graft.tables.Tables.documents(spark, sf).filter(col("doc_id") < 40))
+    val optimized = sigs.queryExecution.optimizedPlan
+    assert(optimized.collect { case a: Aggregate => a }.isEmpty, s"an Aggregate signs:\n$optimized")
+    val exchanges = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(sigs.queryExecution.executedPlan) { case e: Exchange => e }
+    assert(exchanges.isEmpty, s"signing shuffles:\n${sigs.queryExecution.executedPlan}")
+    val splitting = optimized.collect {
+      case op if op.expressions.exists(_.exists(_.isInstanceOf[StringSplit])) => op
+    }
+    assert(splitting.size <= 1, s"split runs in ${splitting.size} operators:\n$optimized")
+    assert(!splitting.exists(_.isInstanceOf[Filter]), s"split runs under a Filter:\n$optimized")
+  }
+
+  test("MinHash signing equals the composed explode + min table, short, null and long docs included") {
+    val loose = lenient
+    def table(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
+    val corpus = graft.tables.Tables.documents(spark, sf)
+    val native = table(Dedup.bandSignaturesOf(corpus)) ++ table(Dedup.bandSignaturesOf(edgeDocs(spark)))
+    val composed = table(ComposedTwins.bandSignaturesComposed(graft.tables.Tables.documents(loose, sf))) ++
+      table(ComposedTwins.bandSignaturesComposed(edgeDocs(loose)))
+    assert(native.size == 8 * (corpus.count() + 11))
+    assert(native == composed)
+    // another scheme through the same kernel
+    assert(table(Dedup.bandSignaturesOf(edgeDocs(spark), 24, 6)) ==
+      table(ComposedTwins.bandSignaturesComposed(edgeDocs(loose), 24, 6)))
+  }
+
+  test("Shingles3 equals the composed array_distinct(transform(...)) shingles") {
+    val loose = lenient
+    def table(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getSeq[String](1))).sortBy(_._1).toSeq
+    val edge = table(Dedup.shingled(edgeDocs(spark)))
+    assert(edge == table(ComposedTwins.shingledComposed(edgeDocs(loose))))
+    assert(table(Dedup.shingled(graft.tables.Tables.documents(spark, sf))) ==
+      table(ComposedTwins.shingledComposed(graft.tables.Tables.documents(loose, sf))))
+    val byId = edge.toMap
+    assert(byId(2L) == Seq("") && byId(3L) == Seq("solo") && byId(4L) == Seq("two words"))
+    assert(byId(6L) == Seq("a b c", "b c a", "c a b"), "repeats keep their first position")
+  }
+
+  test("QTicks equals the composed per-element qtick: nulls, NaN, Inf, .5 ties, negatives") {
+    import spark.implicits._
+    val inf = Double.PositiveInfinity
+    val rows = Seq[Seq[java.lang.Double]](
+      Seq(0.0, -0.0, 1.5e-6, 2.5e-6, -1.5e-6, -2.5e-6, 0.5, -0.5, 1e-7, -1e-7),
+      Seq(null, 0.25, null), Seq(Double.NaN, inf, -inf, 1e300, -1e300), Seq(), null,
+      Seq(0.1234565, -0.9999995, 3.0000005, Double.MinPositiveValue))
+      .map(Tuple1(_)).toDF("v").repartition(2)
+    val got = rows.select(VectorOps.qticks(col("v")).as("n"), ComposedTwins.qticksComposed(col("v")).as("c"))
+      .collect()
+    assert(got.length == 6)
+    got.foreach(r => assert(r.get(0) == r.get(1), s"native ${r.get(0)} != composed ${r.get(1)}"))
+    assert(got.exists(r => r.get(0) != null && r.getSeq[Any](0).contains(null)), "a null component stays null")
+  }
+
+  test("SqDist and CellFold equal their composed folds: length mismatch, null q, d2 ties") {
+    import spark.implicits._
+    val vecs = Seq[(Seq[java.lang.Double], Seq[java.lang.Double])](
+      (Seq(1.0, 2.0, 3.0), Seq(0.5, -2.0, 3.25)), (Seq(1.0), Seq(1.0, 2.0)), (Seq(), Seq()),
+      (Seq(1.0, null), Seq(1.0, 2.0)), (null, Seq(1.0)), (Seq(0.1, 0.2, 0.3), Seq(0.3, 0.2, 0.1)))
+      .toDF("a", "b").repartition(2)
+    vecs.select(VectorOps.sqDist(col("a"), col("b")), ComposedTwins.sqDistComposed(col("a"), col("b")))
+      .collect().foreach(r => assert(r.get(0) == r.get(1), s"native ${r.get(0)} != composed ${r.get(1)}"))
+    val ticks = Seq[Seq[java.lang.Long]](Seq(0L, 0L), Seq(5L, 5L), Seq(10L, 0L), Seq(1L), null,
+      Seq(3L, null), Seq(Long.MaxValue / 4, 7L)).map(Tuple1(_)).toDF("q").repartition(2)
+    // cells 2 and 3 share a centroid, and (5, 5) is equidistant from 1 and 4
+    val books = Seq(
+      Seq((1, Seq(0L, 0L)), (2, Seq(10L, 0L)), (3, Seq(10L, 0L)), (4, Seq(10L, 10L)), (5, Seq(1L, 2L, 3L))),
+      Seq((7L, Seq(5L, 5L)), (3L, Seq(0L, 0L))))
+    books.foreach { book =>
+      val cells = array(book.map { case (id, cv) =>
+        struct(lit(id).as("cell"), array(cv.map(lit(_)): _*).as("cv"))
+      }: _*)
+      val n = VectorOps.cellFold(col("q"), cells)
+      val c = ComposedTwins.cellFoldComposed(col("q"), cells)
+      val out = ticks.select(n.as("n"), c.as("c"), array_min(n).as("nmin"), array_min(c).as("cmin"),
+        array_sort(n).as("nsort"), array_sort(c).as("csort"))
+      assert(out.schema("n").dataType == out.schema("c").dataType)
+      out.collect().foreach { r =>
+        (0 until 3).foreach(k => assert(r.get(2 * k) == r.get(2 * k + 1),
+          s"native ${r.get(2 * k)} != composed ${r.get(2 * k + 1)}"))
+      }
+    }
+  }
+
+  test("TextStats equals the composed regex statistics on random strings") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(13)
+    val pool = Seq("a", "Z", "q", "7", "0", ".", ",", "!", "-", " ", " ", "\t", "\n", "\u000B", "\f",
+      "\r", "é", "日", "\uD83C\uDF89", "\uD835\uDD38", "_", "ß")
+    val random = Seq.fill(300)(Seq.fill(rnd.nextInt(40))(pool(rnd.nextInt(pool.size))).mkString)
+    val fixed = Seq("", " ", "   ", "\t", " \t ", "\t\n \r", "  lead", "trail  ", "\tx", "x\t",
+      " \tx y\t ", "🎉🎉", "a🎉b 9")
+    val texts = (random ++ fixed).map(Tuple1(_)).toDF("text").union(Seq(Tuple1(null: String)).toDF("text"))
+      .repartition(3)
+    val st = VectorOps.textStats(col("text"))
+    val native = Seq("len", "n_tokens", "punct", "digits", "non_space").map(f => st.getField(f).cast("double"))
+    val cols = native ++ ComposedTwins.textStatsComposed(col("text"))
+    val rows = texts.select(col("text") +: cols: _*).collect()
+    assert(rows.length == random.size + fixed.size + 1)
+    rows.foreach { r =>
+      (1 to 5).foreach(k => assert(r.get(k) == r.get(k + 5),
+        s"field $k of '${r.getString(0)}': native ${r.get(k)} != composed ${r.get(k + 5)}"))
+    }
+    // the composite score divides by len, so it needs non-empty text
+    val scored = texts.filter(length(col("text")) > 0)
+      .select(Text.qualityScoreCol, ComposedTwins.qualityScoreComposed(col("text"))).collect()
+    assert(scored.nonEmpty)
+    scored.foreach(r => assert(r.get(0) == r.get(1)))
+    // and the whole F2 table on the corpus
+    val Seq(len, nTokens, punct, digits, nonSpace) = ComposedTwins.textStatsComposed(col("text"))
+    val composedF2 = graft.tables.Tables.documents(spark, sf).select(col("doc_id"),
+      len.cast("long"), nTokens.cast("long"), graft.ops.OracleRound.r4b(punct / len),
+      graft.ops.OracleRound.r4b(digits / len), graft.ops.OracleRound.r4b(nonSpace / nTokens),
+      ComposedTwins.qualityScoreComposed(col("text"))).orderBy("doc_id").collect().toSeq
+    assert(Text.textQuality(spark, sf).collect().toSeq == composedF2)
+  }
+
   test("every Exprs expression gives the same output through eval and through codegen") {
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, UnsafeProjection}
     import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
     import org.apache.spark.sql.types._
     import graft.functions._
@@ -261,6 +405,12 @@ class ExprsSpec extends AnyFunSuite {
     val bytes = Seq[Any](Array[Byte](), Array[Byte](0, -1, 0x80.toByte, 'a'.toByte),
       "é".getBytes("UTF-8").take(1), null)
     val tokens = Seq[Any](Seq("a", "b", "c"), Seq(), Seq("héllo", "", "日本", "x"), Seq("one"), null)
+    val cellBook = ArrayType(StructType(Seq(StructField("cell", IntegerType, nullable = false),
+      StructField("cv", lArr))), containsNull = false)
+    val cellBooks = Seq[Seq[Any]](
+      Seq(Seq(10L, -5L), Seq(Row(1, Seq(0L, 0L)), Row(2, Seq(10L, -5L)), Row(3, Seq(10L, -5L)))),
+      Seq(null, Seq(Row(1, Seq(0L, 0L)))), Seq(Seq(1L), Seq(Row(1, Seq(0L, 0L)), Row(2, Seq(1L)))),
+      Seq(Seq(1L, null), Seq(Row(4, Seq(1L, 2L)))), Seq(Seq(1L, 2L), Seq()))
     val sets = Seq[(Any, Any)](
       (Seq(), Seq()), (Seq("a", "b", "a"), Seq("b", "c")), (Seq("a", null), Seq(null, "a")),
       (Seq("日本", "é"), Seq("é")), (Seq("x"), Seq()), (Seq("x"), null))
@@ -281,7 +431,18 @@ class ExprsSpec extends AnyFunSuite {
       ("PqNearest", Seq(lArr, book), a => PqNearest(a(0), a(1)), codebooks.map(p => Seq(p._1, p._2))),
       ("PqDists", Seq(lArr, book), a => PqDists(a(0), a(1)), codebooks.map(p => Seq(p._1, p._2))),
       ("JaccardSim", Seq(sArr, sArr), a => JaccardSim(a(0), a(1)), sets.map(p => Seq(p._1, p._2))),
-      ("RedactCascade", Seq(StringType), a => RedactCascade(a(0)), strings.map(Seq(_))))
+      ("RedactCascade", Seq(StringType), a => RedactCascade(a(0)), strings.map(Seq(_))),
+      ("SqDist", Seq(dArr, dArr), a => SqDist(a(0), a(1)), doubles.map(p => Seq(p._1, p._2))),
+      ("QTicks", Seq(dArr), a => QTicks(a(0)),
+        (doubles.map(_._1) :+ Seq(Double.NaN, Double.NegativeInfinity, 2.5e-6, -2.5e-6)).map(Seq(_))),
+      ("MinHash", Seq(sArr), a => MinHash(a(0), Literal.create(Seq(3L, 5L, -7L), lArr),
+        Literal.create(Seq(0L, Long.MaxValue, 11L), lArr)),
+        (tokens :+ Seq("a", "b", "c", "a", "b", "c", "d")).map(Seq(_))),
+      ("Shingles3", Seq(sArr), a => Shingles3(a(0)),
+        (tokens :+ Seq("a", "b", "c", "a", "b", "c", "d")).map(Seq(_))),
+      ("CellFold", Seq(lArr, cellBook), a => CellFold(a(0), a(1)), cellBooks),
+      ("TextStats", Seq(StringType), a => TextStats(a(0)),
+        (strings ++ Seq("  \tx  y\t ", "   ", "🎉 9.")).map(Seq(_))))
 
     // bit-exact: NaN equals NaN, and 0.0 differs from -0.0
     def same(a: Any, b: Any): Boolean = (a, b) match {
